@@ -4,7 +4,7 @@
 # "packaged for spark-submit --py-files on multi-executor clusters"):
 #     spark-submit --py-files dist/mds_provider_spark.zip your_job.py
 
-.PHONY: test bench package oracle plans clean
+.PHONY: test bench package oracle plans loc clean
 
 test:
 	python -m pytest tests/ -x -q
@@ -17,6 +17,10 @@ oracle:
 
 plans:
 	python tools/explain_audit.py
+
+# tracked line count (ROADMAP): the library plus the query entry file
+loc:
+	@cat __spark_entry__.py $$(find mds_provider_spark -name '*.py') | wc -l
 
 package:
 	mkdir -p dist

@@ -14,6 +14,7 @@ float outputs are rounded, timestamps are returned as date strings.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -33,6 +34,7 @@ from mds_provider_spark.operators import text as TX
 from mds_provider_spark.operators import uniqueness as U
 from mds_provider_spark.functions import audio
 from mds_provider_spark.functions import geometry as GEO
+from mds_provider_spark.plans.runner import violation_layers
 from mds_provider_spark.sources import fixtures as FX
 
 # Irregular pentagon around the origin, sized to the embedding component
@@ -992,12 +994,9 @@ def clips_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.createDataFrame(pcm_rows, "clip_id string, part_id int").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{_ORACLE_DIR}/pcm_fault_ledger")
-    rs = R.mds_clip_rules()
-    v = rs.violations(clips)
-    v = v.unionByName(U.duplicate_violations(clips, ["clip_id"]))
-    v = v.unionByName(REF.referential_violations(clips, ts))
-    v = v.unionByName(REF.transcript_mismatch_violations(clips, ts))
-    v = v.unionByName(audio.pcm_violations(clips, FX.ref_waveform))
+    pcm = audio.pcm_violations(clips, FX.ref_waveform)
+    v = reduce(DataFrame.unionByName,
+               violation_layers(R.mds_clip_rules(), clips, ts, pcm).values())
     return v.select("rule_id", "clip_id", "column_name", "part_id")
 
 

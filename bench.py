@@ -92,10 +92,13 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
     Warm repeats, best-of: fresh-JVM first iterations are dominated by
     JIT + python-worker spawn, which a long-lived cluster amortizes.
     """
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
     from mds_provider_spark import rules as R
     from mds_provider_spark.functions import audio
-    from mds_provider_spark.operators import referential as REF
-    from mds_provider_spark.operators import uniqueness as U
+    from mds_provider_spark.plans.runner import violation_layers
     from mds_provider_spark.sources import fixtures as FX
 
     spark = _spark(parallelism)
@@ -108,9 +111,9 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
             """JVM-only path (no Python stage): rule projection + salted
             uniqueness + referential joins — isolates codegen scaling."""
             t0 = time.monotonic()
-            v = rs.violations(clips)
-            v = v.unionByName(U.duplicate_violations(clips, ["clip_id"]))
-            v = v.unionByName(REF.referential_violations(clips, ts))
+            layers = violation_layers(rs, clips, ts)
+            v = reduce(DataFrame.unionByName, (
+                layers[k] for k in ("rules", "uniqueness", "referential")))
             v.count()
             return time.monotonic() - t0
 
@@ -121,11 +124,8 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
                 ref_wave_batch_fn=FX.ref_waveform_batch,
             ).cache()
             pcm.count()  # own job: python-only stage
-            v = rs.violations(clips)
-            v = v.unionByName(U.duplicate_violations(clips, ["clip_id"]))
-            v = v.unionByName(REF.referential_violations(clips, ts))
-            v = v.unionByName(REF.transcript_mismatch_violations(clips, ts))
-            v = v.unionByName(pcm).cache()
+            v = reduce(DataFrame.unionByName,
+                       violation_layers(rs, clips, ts, pcm).values()).cache()
             n_viol = v.count()
             verd = rs.verdicts_from_violations(clips, v).collect()
             n_rows = sum(r.n_rows for r in verd)

@@ -9,19 +9,21 @@ Maps the reference's entry points (SURVEY.md §3) onto the engine:
   Database.load_trips(...)                         (mds/db.py)
       -> ValidationRun (plans/runner.py): checkpointed writes + lineage
 
-One object, three calls: build rules, validate, inspect.
+One object, three calls: build rules, validate, inspect. ``Validator``
+and ``ValidationRun`` build their violations with the same
+``plans.runner.violation_layers``, so both report the same rows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 
 from mds_provider_spark import rules as R
 from mds_provider_spark.functions import audio
-from mds_provider_spark.operators import referential as REF
-from mds_provider_spark.operators import uniqueness as U
+from mds_provider_spark.plans.runner import violation_layers
 
 
 @dataclass
@@ -124,20 +126,13 @@ class Validator:
             from mds_provider_spark.operators.diff import enforce_schema
 
             enforce_schema(df, self.expected_schema)
-        v = self.ruleset.violations(df)
-        for uk in self.ruleset.unique_keys:
-            v = v.unionByName(
-                U.duplicate_violations(
-                    df, list(uk.cols),
-                    key_col=self.ruleset.key_col, part_col=self.ruleset.part_col,
-                )
-            )
-        if transcripts is not None:
-            v = v.unionByName(REF.referential_violations(df, transcripts))
-            v = v.unionByName(REF.transcript_mismatch_violations(df, transcripts))
-        if self.ref_wave_fn is not None:
-            v = v.unionByName(
-                audio.pcm_violations(df, self.ref_wave_fn, self.min_snr_db)
-            )
-        verd = self.ruleset.verdicts_from_violations(df, v)
+        rs = self.ruleset
+        pcm = (
+            audio.pcm_violations(df, self.ref_wave_fn, self.min_snr_db,
+                                 key_col=rs.key_col, part_col=rs.part_col)
+            if self.ref_wave_fn is not None else None
+        )
+        v = reduce(DataFrame.unionByName,
+                   violation_layers(rs, df, transcripts, pcm).values())
+        verd = rs.verdicts_from_violations(df, v)
         return ValidationResult(violations=v, verdicts=verd)

@@ -266,6 +266,55 @@ def _structurally_invalid(cid, sr, dur, codec) -> bool:
     return int(sr) <= 0 or int(dur) <= 0
 
 
+_PCM_SCHEMA = (
+    "rule_id string, clip_id string, column_name string, message string, part_id int"
+)
+
+
+def _pcm_frame(
+    rows,
+    ref_wave_fn: RefWaveFn,
+    ref_wave_batch_fn: "RefWaveBatchFn | None",
+    min_snr_db: float,
+) -> pd.DataFrame:
+    """The PCM check over ``(cid, buf, sr, dur, codec, part)`` rows, as
+    one _PCM_SCHEMA frame — shared by both readers so they cannot
+    drift. NULL bytes are ``missing_field:bytes``; structurally invalid
+    rows are skipped; bytes that fail to decode are ``bad_pcm``; the
+    rest get the SNR check (``_content_violations``)."""
+    rid = S.rule_id(S.BAD_PCM, "bytes")
+    rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
+    rids, ids, parts, msgs = [], [], [], []
+
+    def emit(r, c, p, m):
+        rids.append(r); ids.append(c); parts.append(p); msgs.append(m)
+
+    decodable = []
+    for cid, buf, sr, dur, codec, part in rows:
+        if buf is None:
+            emit(rid_null, cid, part, "required field bytes is missing")
+            continue
+        if _structurally_invalid(cid, sr, dur, codec):
+            continue
+        try:
+            dec = decode(codec, bytes(buf))
+        except Exception as exc:  # undecodable bytes ARE a violation
+            emit(rid, cid, part, f"decode failed: {type(exc).__name__}")
+            continue
+        decodable.append((cid, dec, int(sr), int(dur), part))
+    _content_violations(decodable, ref_wave_fn, ref_wave_batch_fn,
+                        min_snr_db, rid, emit)
+    return pd.DataFrame(
+        {
+            "rule_id": pd.array(rids, dtype="string"),
+            "clip_id": pd.array(ids, dtype="string"),
+            "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
+            "message": pd.array(msgs, dtype="string"),
+            "part_id": pd.array(parts, dtype="int32"),
+        }
+    )
+
+
 def pcm_violations(
     clips: DataFrame,
     ref_wave_fn: RefWaveFn,
@@ -288,49 +337,14 @@ def pcm_violations(
     along for free and the Catalyst rule projection never scans bytes —
     at 100 TB the audio payload crosses the scan exactly once, here.
     """
-    rid = S.rule_id(S.BAD_PCM, "bytes")
-    rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
+    cols = [key_col, "bytes", "sr_hz", "dur_ms", "codec", part_col]
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rids, bad_ids, bad_parts, msgs = [], [], [], []
+            yield _pcm_frame(zip(*(pdf[c] for c in cols)), ref_wave_fn,
+                             ref_wave_batch_fn, min_snr_db)
 
-            def emit(r, c, p, m):
-                rids.append(r); bad_ids.append(c); bad_parts.append(p); msgs.append(m)
-
-            decodable = []
-            for cid, buf, sr, dur, codec, part in zip(
-                pdf[key_col], pdf["bytes"], pdf["sr_hz"], pdf["dur_ms"],
-                pdf["codec"], pdf[part_col],
-            ):
-                if buf is None:
-                    emit(rid_null, cid, part, "required field bytes is missing")
-                    continue
-                if _structurally_invalid(cid, sr, dur, codec):
-                    continue
-                try:
-                    dec = decode(codec, bytes(buf))
-                except Exception as exc:  # undecodable bytes ARE a violation
-                    emit(rid, cid, part, f"decode failed: {type(exc).__name__}")
-                    continue
-                decodable.append((cid, dec, int(sr), int(dur), part))
-            _content_violations(decodable, ref_wave_fn, ref_wave_batch_fn,
-                                min_snr_db, rid, emit)
-            yield pd.DataFrame(
-                {
-                    "rule_id": pd.array(rids, dtype="string"),
-                    "clip_id": pd.array(bad_ids, dtype="string"),
-                    "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
-                    "message": pd.array(msgs, dtype="string"),
-                    "part_id": pd.array(bad_parts, dtype="int32"),
-                }
-            )
-
-    pruned = clips.select(key_col, "bytes", "sr_hz", "dur_ms", "codec", part_col)
-    return pruned.mapInPandas(
-        check,
-        "rule_id string, clip_id string, column_name string, message string, part_id int",
-    )
+    return clips.select(*cols).mapInPandas(check, _PCM_SCHEMA)
 
 
 def pcm_violations_over_files(
@@ -373,57 +387,21 @@ def pcm_violations_over_files(
     fdf = spark.createDataFrame(rows, "path string, part_id int").repartition(
         max(len(rows), 1)
     )
-    rid = S.rule_id(S.BAD_PCM, "bytes")
-    rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
 
         cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
         for pdf in batches:
-            rids, ids, parts, msgs = [], [], [], []
-
-            def emit(r, c, p, m):
-                rids.append(r); ids.append(c); parts.append(p); msgs.append(m)
-
             for path, part in zip(pdf["path"], pdf["part_id"]):
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(batch_size=batch_size, columns=cols):
-                    decodable = []
-                    for cid, buf, sr, dur, codec in zip(
-                        rb.column(0).to_pylist(), rb.column(1).to_pylist(),
-                        rb.column(2).to_pylist(), rb.column(3).to_pylist(),
-                        rb.column(4).to_pylist(),
-                    ):
-                        if buf is None:
-                            emit(rid_null, cid, part,
-                                 "required field bytes is missing")
-                            continue
-                        if _structurally_invalid(cid, sr, dur, codec):
-                            continue
-                        try:
-                            dec = decode(codec, buf)
-                        except Exception as exc:
-                            emit(rid, cid, part,
-                                 f"decode failed: {type(exc).__name__}")
-                            continue
-                        decodable.append((cid, dec, int(sr), int(dur), part))
-                    _content_violations(decodable, ref_wave_fn,
-                                        ref_wave_batch_fn, min_snr_db, rid, emit)
-            yield pd.DataFrame(
-                {
-                    "rule_id": pd.array(rids, dtype="string"),
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
-                    "message": pd.array(msgs, dtype="string"),
-                    "part_id": pd.array(parts, dtype="int32"),
-                }
-            )
+                    rows = zip(*(rb.column(i).to_pylist() for i in range(5)),
+                               [part] * rb.num_rows)
+                    yield _pcm_frame(rows, ref_wave_fn, ref_wave_batch_fn,
+                                     min_snr_db)
 
-    return fdf.mapInPandas(
-        check,
-        "rule_id string, clip_id string, column_name string, message string, part_id int",
-    )
+    return fdf.mapInPandas(check, _PCM_SCHEMA)
 
 
 def audio_features(clips: DataFrame, key_col: str = "clip_id") -> DataFrame:

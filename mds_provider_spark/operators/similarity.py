@@ -92,16 +92,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from n random hyperplanes (Charikar SRP-LSH)."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(vec_col, plane) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseOR(bit)
-    return sig
-
-
 def _sign_bits(vec: Column, planes_2d: list[list[float]]) -> Column:
     """array<long> of 0/1 signs for ALL planes in one loop expression —
     the planes live in a single 2-D literal, so codegen emits one tight

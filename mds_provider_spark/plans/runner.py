@@ -5,8 +5,10 @@ both clips and transcripts are partitioned by ``part_id =
 hash(clip_id) % P`` (Iceberg ``bucket(P, clip_id)`` in production;
 computed by the fixture generator here). Consequences:
 
-  * duplicate clip_ids ALWAYS share a part_id            -> uniqueness is
-    group-local
+  * duplicates of a unique key that contains the bucketed key column
+    (``ruleset.key_col``) ALWAYS share a part_id         -> uniqueness is
+    group-local; ``run`` raises ValueError before any scan for any other
+    unique key, whose duplicates could span groups unreported
   * a clip and its transcript row ALWAYS share a part_id -> referential +
     transcript-equality joins are group-local
   * therefore validating part-groups independently and committing each
@@ -25,6 +27,7 @@ from __future__ import annotations
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -34,6 +37,34 @@ from mds_provider_spark.operators import referential as REF
 from mds_provider_spark.operators import uniqueness as U
 from mds_provider_spark.plans.checkpoint import CommitLog
 from mds_provider_spark.rules import RuleSet, mds_clip_rules
+
+
+def violation_layers(
+    ruleset: RuleSet,
+    clips: DataFrame,
+    transcripts: DataFrame | None = None,
+    pcm: DataFrame | None = None,
+) -> dict[str, DataFrame]:
+    """The one violation builder: layer name -> violations, in order
+    ``rules``, ``uniqueness`` (one check per ``ruleset.unique_keys``
+    entry), ``referential`` and ``transcript`` (with transcripts only),
+    ``audio`` (the PCM frame the caller built with its reader). Every
+    layer keys on ``ruleset.key_col``/``part_col``; callers union the
+    values once."""
+    key, part = ruleset.key_col, ruleset.part_col
+    layers = {"rules": ruleset.violations(clips)}
+    dups = [U.duplicate_violations(clips, list(uk.cols), key_col=key, part_col=part)
+            for uk in ruleset.unique_keys]
+    if dups:
+        layers["uniqueness"] = reduce(DataFrame.unionByName, dups)
+    if transcripts is not None:
+        layers["referential"] = REF.referential_violations(
+            clips, transcripts, key=key, part_col=part)
+        layers["transcript"] = REF.transcript_mismatch_violations(
+            clips, transcripts, key=key, part_col=part)
+    if pcm is not None:
+        layers["audio"] = pcm
+    return layers
 
 
 @dataclass
@@ -90,33 +121,21 @@ class ValidationRun:
             for g, i in enumerate(range(0, len(parts), self.group_size))
         ]
 
-    def _cross_row_violations(
-        self, clips: DataFrame, transcripts: DataFrame | None,
-        parts: list[int] | None = None,
-    ) -> DataFrame:
-        """Everything that is NOT the single-pass row-rule projection:
-        duplicates (shuffle), referential/equality (co-partition joins),
-        PCM (Arrow batches). Small output — cached by run()."""
-        v = U.duplicate_violations(clips, ["clip_id"])
-        if transcripts is not None:
-            v = v.unionByName(REF.referential_violations(clips, transcripts))
-            v = v.unionByName(REF.transcript_mismatch_violations(clips, transcripts))
-        if self.ref_wave_fn is not None:
-            if self.pcm_strategy == "files":
-                if not self.clips_path:
-                    raise ValueError("pcm_strategy='files' requires clips_path")
-                pcm = audio.pcm_violations_over_files(
-                    self.spark, self.clips_path, self.ref_wave_fn,
-                    self.min_snr_db, parts=parts,
-                    ref_wave_batch_fn=self.ref_wave_batch_fn,
-                )
-            else:
-                pcm = audio.pcm_violations(
-                    clips, self.ref_wave_fn, self.min_snr_db,
-                    ref_wave_batch_fn=self.ref_wave_batch_fn,
-                )
-            v = v.unionByName(pcm)
-        return v
+    def _pcm_violations(self, clips: DataFrame, parts: list[int]) -> DataFrame:
+        """The group's PCM layer from the configured reader."""
+        if self.pcm_strategy == "files":
+            if not self.clips_path:
+                raise ValueError("pcm_strategy='files' requires clips_path")
+            return audio.pcm_violations_over_files(
+                self.spark, self.clips_path, self.ref_wave_fn,
+                self.min_snr_db, parts=parts,
+                ref_wave_batch_fn=self.ref_wave_batch_fn,
+            )
+        return audio.pcm_violations(
+            clips, self.ref_wave_fn, self.min_snr_db,
+            key_col=self.ruleset.key_col, part_col=self.ruleset.part_col,
+            ref_wave_batch_fn=self.ref_wave_batch_fn,
+        )
 
     def run(
         self,
@@ -129,6 +148,13 @@ class ValidationRun:
         ``stop_after_groups`` simulates a kill for the resume test.
         Returns a summary dict (groups run/skipped, rows, violations).
         """
+        key = self.ruleset.key_col
+        for uk in self.ruleset.unique_keys:
+            if key not in uk.cols:
+                raise ValueError(
+                    f"unique key {uk.cols} does not contain the bucketed key "
+                    f"column {key!r}: its duplicates may span groups"
+                )
         if self.expected_schema is not None:
             from mds_provider_spark.operators.diff import enforce_schema
 
@@ -151,9 +177,10 @@ class ValidationRun:
                 if transcripts is not None
                 else None
             )
-            viol = self.ruleset.violations(sub).unionByName(
-                self._cross_row_violations(sub, sub_t, parts)
-            )
+            pcm = (self._pcm_violations(sub, parts)
+                   if self.ref_wave_fn is not None else None)
+            viol = reduce(DataFrame.unionByName, violation_layers(
+                self.ruleset, sub, sub_t, pcm).values())
             # clear the group's partitions first: a crashed attempt may
             # have left rows in a part whose retry writes nothing, and
             # dynamic overwrite would keep them (checkpoint.clear_parts).
@@ -190,7 +217,6 @@ class ValidationRun:
                 # commit window: a crash before the marker re-clears and
                 # rewrites on resume, same as violations/verdicts.
                 log.clear_parts("clean", parts)
-                key = self.ruleset.key_col
                 bad_keys = (
                     written.select(F.col("clip_id").alias(key))
                     .where(F.col(key).isNotNull()).distinct()

@@ -15,7 +15,6 @@ scale each executor synthesizes only its own id range.
 from __future__ import annotations
 
 import hashlib
-import os
 from typing import Iterator
 
 import numpy as np
@@ -79,38 +78,42 @@ def transcript_at(seed: int, i: int) -> str:
 # table each distinct array recurs thousands of times. Entries hold the
 # byte-for-byte result of the original expression (same dtype, same
 # operation order), so memoized and direct synthesis are bit-identical
-# (pinned by test_ref_waveform_memo_bit_identical); the caches are
-# bounded so adversarial (sr, dur) inputs cannot grow them unbounded.
+# (pinned by test_ref_waveform_memo_bit_identical). Both caches share
+# one byte budget, so adversarial (sr, dur) inputs cannot grow them
+# unbounded, and cached arrays are read-only: a caller that writes into
+# one raises instead of corrupting every later waveform.
 _T_MEMO: dict[tuple[int, int], np.ndarray] = {}
 _H2_MEMO: dict[tuple[float, int, int], np.ndarray] = {}
-# A/B measurement toggle (tools/bench_extra_pcmleg.py): results are
-# bit-identical either way, so this only exists to time the memo.
-_H2_MEMO_MAX_BYTES = (
-    0 if os.environ.get("SPARK_GRAFT_NO_WAVE_MEMO") else 256 * 1024 * 1024
-)
-_h2_memo_bytes = 0
+_MEMO_MAX_BYTES = 256 * 1024 * 1024
+_memo_bytes = 0
+
+
+def _memoize(memo: dict, key, arr: np.ndarray) -> np.ndarray:
+    """Cache ``arr`` read-only under ``key`` while the budget allows."""
+    global _memo_bytes
+    if _memo_bytes + arr.nbytes <= _MEMO_MAX_BYTES:
+        arr.setflags(write=False)
+        memo[key] = arr
+        _memo_bytes += arr.nbytes
+    return arr
 
 
 def _time_base(sr_hz: int, n: int) -> np.ndarray:
-    """Memoized ``arange(n)/sr`` (read-only by convention)."""
-    t = _T_MEMO.get((sr_hz, n))
+    """Memoized ``arange(n)/sr``."""
+    key = (sr_hz, n)
+    t = _T_MEMO.get(key)
     if t is None:
-        t = np.arange(n, dtype=np.float64) / float(sr_hz)
-        if _H2_MEMO_MAX_BYTES and len(_T_MEMO) < 4096:
-            _T_MEMO[(sr_hz, n)] = t
+        t = _memoize(_T_MEMO, key, np.arange(n, dtype=np.float64) / float(sr_hz))
     return t
 
 
 def _second_harmonic(freq: float, sr_hz: int, n: int) -> np.ndarray:
-    """Memoized ``0.11*sin(2*pi*2.17*freq*t)`` (read-only by convention)."""
-    global _h2_memo_bytes
+    """Memoized ``0.11*sin(2*pi*2.17*freq*t)``."""
     key = (freq, sr_hz, n)
     w2 = _H2_MEMO.get(key)
     if w2 is None:
-        w2 = 0.11 * np.sin(2 * np.pi * 2.17 * freq * _time_base(sr_hz, n))
-        if _h2_memo_bytes < _H2_MEMO_MAX_BYTES:
-            _H2_MEMO[key] = w2
-            _h2_memo_bytes += w2.nbytes
+        w2 = _memoize(_H2_MEMO, key,
+                      0.11 * np.sin(2 * np.pi * 2.17 * freq * _time_base(sr_hz, n)))
     return w2
 
 

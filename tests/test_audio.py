@@ -121,6 +121,8 @@ def test_ref_waveform_memo_bit_identical():
         batch = FX.ref_waveform_batch(ids, sr, dur)
         for i, cid in enumerate(ids):
             assert np.array_equal(batch[i], ref_inline(cid, sr, dur))
+    with pytest.raises(ValueError):  # memoized arrays are read-only
+        next(iter(FX._H2_MEMO.values()))[0] = 0.0
 
 
 def test_quality_features_kernel_properties():

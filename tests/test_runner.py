@@ -5,7 +5,10 @@ partitions)."""
 import pyspark.sql.functions as F
 import pytest
 
+from mds_provider_spark import schema as S
+from mds_provider_spark.api import Validator
 from mds_provider_spark.plans.runner import ValidationRun
+from mds_provider_spark.rules import from_config
 from mds_provider_spark.sources import fixtures as FX
 
 N = 1500
@@ -197,3 +200,29 @@ def test_expected_schema_gate_blocks_before_any_scan(spark, tmp_path, data):
     # nothing was written: the gate fired before any group committed
     import os
     assert not os.path.exists(str(tmp_path / "sg_bad" / "violations"))
+
+
+_KEYED_ROWS = [("a", 1, 0), ("a", 2, 0), ("b", None, 1), ("c", 3, 2), ("d", 4, 3)]
+
+
+@pytest.mark.parametrize("unique", [["k"], [], ["x"]], ids=["unique_k", "no_unique", "unique_x"])
+def test_uniqueness_from_ruleset_keys(spark, tmp_path, unique):
+    """Both entry points take uniqueness from ``ruleset.unique_keys`` on
+    the ruleset's own key column; the runner refuses a unique key that
+    does not contain the bucketed key (its duplicates may span groups)."""
+    spec = [{"kind": "not_null", "column": "x"}]
+    spec += [{"kind": "unique_key", "columns": unique}] if unique else []
+    rs = from_config(spec, key_col="k")
+    df = spark.createDataFrame(_KEYED_ROWS, "k string, x int, part_id int")
+    run = ValidationRun(spark, out_dir=str(tmp_path), ruleset=rs, n_parts=4, group_size=2)
+    if unique == ["x"]:
+        with pytest.raises(ValueError, match="key column 'k'"):
+            run.run(df)
+        return
+    run.run(df)
+    via_api = sorted(map(tuple, Validator(ruleset=rs).validate(df).violations.collect()))
+    via_run = sorted(map(tuple, run.violations().select(*S.VIOLATIONS_SCHEMA.names).collect()))
+    assert via_api == via_run
+    dups = [r for r in via_api if r[0].startswith("duplicate_id")]
+    assert len(dups) == (2 if unique else 0)
+    assert ("missing_field:x", "b", "x", "required field x is missing", 1) in via_api
