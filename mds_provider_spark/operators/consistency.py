@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mds_provider_spark.session import local_frame
+
 
 def fd_violations(
     df: DataFrame, determinant: list[str], dependent: str
@@ -109,8 +111,8 @@ def benford_screen(df: DataFrame, col: str, scale: int = 100) -> DataFrame:
     )
     counts = d.groupBy("digit").agg(F.count(F.lit(1)).alias("n_obs"))
     spark = df.sparkSession
-    expected = spark.createDataFrame(
-        [(k, v) for k, v in BENFORD_P.items()], "digit int, p_exp double"
+    expected = local_frame(
+        spark, [(k, v) for k, v in BENFORD_P.items()], "digit int, p_exp double"
     )
     from pyspark.sql.window import Window
 

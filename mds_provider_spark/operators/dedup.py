@@ -31,6 +31,8 @@ import random
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from mds_provider_spark.session import local_frame
+
 # Mersenne prime 2^31-1 for minhash permutations. Shingle hashes are
 # first folded into [0, 2^31) so a*h+b stays < 2^63 — ANSI mode (Spark 4
 # default) makes long overflow an ERROR, so the arithmetic must genuinely
@@ -699,7 +701,7 @@ def resolve_duplicate_groups(
                 StructField("group_id", id_type, True),
             ]
         )
-        return pairs.sparkSession.createDataFrame(out, schema)
+        return local_frame(pairs.sparkSession, out, schema)
     prev_handle: DataFrame | None = handle
     converged = False
     # Test-BEFORE-contract: the canonical input edge set of a dedup

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from mds_provider_spark import schema as S
 from mds_provider_spark.operators.stats import DEFAULT_PROBS, profile
+from mds_provider_spark.session import local_frame
 
 # ------------------------------------------------------------- snapshots
 
@@ -390,8 +391,8 @@ def psi_from_counts(
     data-scale; every join and window here is over that grid.
     """
     gcols = list(group_cols)
-    buckets = spark.createDataFrame(
-        [(c,) for c in columns], "column_name string"
+    buckets = local_frame(
+        spark, [(c,) for c in columns], "column_name string"
     ).select(
         "column_name",
         F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bucket"),
@@ -638,7 +639,8 @@ def embedding_drift(
     spark = current.sparkSession
     base_s = embedding_baseline(baseline, vec_col, group_col, dim, grid)
     cur_s = embedding_baseline(current, vec_col, group_col, dim, grid)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         drift_from_summaries(base_s, cur_s),
         "group_value string, n_base long, n_cur long, "
         "centroid_cosine double, centroid_shift_l2 double, "

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from mds_provider_spark import rules as R
+from mds_provider_spark.session import local_frame
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -136,7 +137,7 @@ def suggest_rules(
                 )
         if c in enum_vals:
             rows.append((c, "enum", None, None, enum_vals[c], null_rate, d))
-    out = df.sparkSession.createDataFrame(rows, SUGGESTION_SCHEMA)
+    out = local_frame(df.sparkSession, rows, SUGGESTION_SCHEMA)
     # round in the PLAN (HALF_UP, oracle-portable), not in Python
     # (banker's rounding would diverge at ties)
     return out.select(

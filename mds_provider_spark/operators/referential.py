@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from mds_provider_spark import schema as S
+from mds_provider_spark.session import local_frame
 
 
 def orphans(
@@ -163,8 +164,8 @@ def bloom_build(
         # re-create it as a local relation (exactly how a production
         # bloom is computed once and shipped to every probe site).
         rows = [(r.word_idx, r.bits) for r in out.collect()]
-        return parent.sparkSession.createDataFrame(
-            rows, "word_idx bigint, bits bigint"
+        return local_frame(
+            parent.sparkSession, rows, "word_idx bigint, bits bigint"
         )
     return out
 

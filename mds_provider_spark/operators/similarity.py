@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from mds_provider_spark import schema as S
 from mds_provider_spark.operators.dedup import _cap_buckets
+from mds_provider_spark.session import local_frame
 
 
 def as_double(col: Column | str) -> Column:
@@ -430,8 +431,8 @@ def save_ivf_index(spark, centroids: np.ndarray, path: str) -> None:
     index is plan literals; a last-ulp drift would silently reshuffle
     every list boundary)."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(np.asarray(centroids))]
-    spark.createDataFrame(
-        rows, "list_id int, centroid array<double>"
+    local_frame(
+        spark, rows, "list_id int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
@@ -575,8 +576,8 @@ def save_pq_index(spark, codebooks: np.ndarray, path: str) -> None:
         for j in range(B.shape[0])
         for c in range(B.shape[1])
     ]
-    spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
+    local_frame(
+        spark, rows, "sub int, code int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 

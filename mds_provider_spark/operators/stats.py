@@ -20,6 +20,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from mds_provider_spark.session import local_frame
+
 DEFAULT_PROBS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 
 _NUMERIC = (
@@ -298,7 +300,7 @@ def frequent_items(
     spark = df.sparkSession
     # "_fi_cand" dodges collisions with the caller's own columns (the
     # left_semi join resolves both sides' names in one scope)
-    cand_df = spark.createDataFrame([(c,) for c in cands], "_fi_cand string")
+    cand_df = local_frame(spark, [(c,) for c in cands], "_fi_cand string")
     return (
         df.where(F.col(col).isNotNull())
         .join(

@@ -37,6 +37,7 @@ from mds_provider_spark.operators import referential as REF
 from mds_provider_spark.operators import uniqueness as U
 from mds_provider_spark.plans.checkpoint import CommitLog
 from mds_provider_spark.rules import RuleSet, mds_clip_rules
+from mds_provider_spark.session import local_frame
 
 
 def violation_layers(
@@ -238,7 +239,8 @@ class ValidationRun:
             g_rows = sum(n for n, _ in stats.values())
             g_viol = sum(v for _, v in stats.values())
             rate = g_rows / elapsed
-            metrics = self.spark.createDataFrame(
+            metrics = local_frame(
+                self.spark,
                 [
                     (self.run_id, int(p), int(gid), float(rate), int(stats.get(p, (0, 0))[0]))
                     for p in parts
@@ -265,12 +267,15 @@ class ValidationRun:
             # committed group, so skipping would silently return nothing.
             from mds_provider_spark.operators import drift as DR
 
-            cur = DR.snapshot(clips, list(self.drift_cols), self.run_id)
+            # `cur` is persisted so its full-table aggregate runs once,
+            # for the findings and the snapshot write alike.
+            cur = DR.snapshot(clips, list(self.drift_cols), self.run_id).persist()
             findings = DR.drift_violations(cur, self.baseline_snapshot).cache()
             summary["drift_findings"] = findings.count()
             findings.write.mode("overwrite").parquet(log.path("drift"))
             cur.write.mode("overwrite").parquet(log.path("snapshot"))
             findings.unpersist()
+            cur.unpersist()
         return summary
 
     # ------------------------------------------------------- read-backs

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 ENGINE_CONF: dict[str, str] = {
     # Adaptive execution: runtime shuffle-partition coalescing + skew-join
@@ -83,3 +84,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A DataFrame from driver-side rows (tuples in ``schema`` order),
+    built in the JVM: the rows become a ``pyarrow.Table`` typed by
+    ``to_arrow_schema(schema)``, which ``createDataFrame`` ships as Arrow
+    batches. ``createDataFrame(<list>)`` would instead make a Python RDD
+    and run Python-worker tasks to convert it. pandas is skipped on
+    purpose: it would turn ``None`` into ``NaN``. ``schema`` is a
+    ``StructType`` or a DDL string. Every library frame built from
+    driver-side rows comes from here (``tests/test_local_frame.py``
+    guards that)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

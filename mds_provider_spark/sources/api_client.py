@@ -173,8 +173,10 @@ def fetch_many(
     each worker (sessions aren't picklable)."""
     import pandas as pd
 
+    from mds_provider_spark.session import local_frame
+
     tasks_json = [json.dumps(t) for t in tasks]
-    tdf = spark.createDataFrame([(t,) for t in tasks_json], "task string").repartition(
+    tdf = local_frame(spark, [(t,) for t in tasks_json], "task string").repartition(
         max(len(tasks_json), 1)
     )
 

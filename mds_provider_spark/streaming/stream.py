@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from mds_provider_spark.rules import RuleSet
+from mds_provider_spark.session import local_frame
 
 
 def _checkpoint_identity(checkpoint_dir: str) -> str | None:
@@ -394,8 +395,8 @@ def committed_stream_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
                 str(meta.get("run_id", "")),
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "batch_id long, status string, n_rows long, n_violations long, run_id string",
     )
 
@@ -433,8 +434,8 @@ def committed_stream_part_verdicts(spark: SparkSession, out_dir: str) -> DataFra
             acc.items(), key=lambda kv: (kv[0] is None, kv[0] if kv[0] is not None else 0)
         )
     ]
-    return spark.createDataFrame(
-        rows, "part_id int, status string, n_rows long, n_violations long"
+    return local_frame(
+        spark, rows, "part_id int, status string, n_rows long, n_violations long"
     )
 
 
@@ -464,8 +465,8 @@ def committed_stream_snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
                 s["null_rate"], int(s["approx_distinct"]),
                 s["min_val"], s["max_val"],
             ))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "batch_id long, column_name string, quantiles array<double>, "
         "null_rate double, approx_distinct long, min_val double, max_val double",
     )
@@ -527,8 +528,8 @@ def committed_stream_histogram_counts(
             (int(b), c, int(k), int(n)) for c, k, n in h["counts"]
         )
     return (
-        spark.createDataFrame(
-            rows, "batch_id long, column_name string, bucket int, cnt long"
+        local_frame(
+            spark, rows, "batch_id long, column_name string, bucket int, cnt long"
         ),
         bins or {},
         n_bins or 0,
@@ -558,8 +559,8 @@ def committed_stream_histogram_drift(
 
     cur, bins, n_bins = committed_stream_histogram_counts(spark, out_dir)
     if not bins:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "batch_id long, column_name string, psi double, js_div double, "
             "n_cur long, n_base long, verdict string",
         )
@@ -644,8 +645,8 @@ def committed_stream_heavy_hitters(
                     "hot" if w >= threshold else "candidate",
                 )
             )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "batch_id long, value string, est_min long, est_max long, "
         "n_rows long, verdict string",
     )
@@ -696,8 +697,8 @@ def committed_stream_embedding_drift(
         except ValueError as ex:
             raise ValueError(f"{ex} (marker for batch {b})") from None
         rows.extend((int(b),) + r for r in batch_rows)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "batch_id long, group_value string, n_base long, n_cur long, "
         "centroid_cosine double, centroid_shift_l2 double, "
         "mean_norm_base double, mean_norm_cur double",
@@ -716,7 +717,7 @@ def committed_stream_violations(spark: SparkSession, out_dir: str) -> DataFrame:
     ]
     paths = [p for p in paths if os.path.isdir(p)]
     if not paths:
-        return spark.createDataFrame([], S.VIOLATIONS_SCHEMA)
+        return local_frame(spark, [], S.VIOLATIONS_SCHEMA)
     return spark.read.parquet(*paths)
 
 
