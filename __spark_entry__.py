@@ -2591,14 +2591,11 @@ def group_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = routed.select(
         TX.fingerprint("text").alias("fp"), "split"
     )
-    # ONE shuffle over the routed corpus: aggregate to (fp, split, cnt)
-    # first (persisted — both outputs derive from it), then the leak
-    # audit and the per-split matrix are tiny rollups of that summary.
-    # Previously each output re-evaluated the whole group_split_assign
-    # chain (fingerprint agg + exemplar join) from scratch.
-    g1 = tagged.groupBy("fp", "split").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    ).persist()
+    # Aggregate to (fp, split, cnt) first; the leak audit and the
+    # per-split matrix are tiny rollups of that summary. Not persisted:
+    # the two rollups share one exchange of it (ReusedExchange in the
+    # plan), so a cache would only add a materialization.
+    g1 = tagged.groupBy("fp", "split").agg(F.count(F.lit(1)).alias("_cnt"))
     leaks = (
         g1.where(F.col("fp").isNotNull())
         .groupBy("fp")

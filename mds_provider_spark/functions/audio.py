@@ -29,7 +29,9 @@ enum rule catches them BEFORE the PCM stage so the UDF never sees them.
 All decode/SNR math is numpy over whole clips inside Arrow batches; the
 only per-clip Python is the loop over variable-length binary cells, which
 is unavoidable for ragged binary and costs nothing next to the vector
-math.
+math. That loop exists twice: ``_map_decoded`` (pruned select, skip,
+decode, per-clip callback, one typed Arrow batch out) runs every feature
+UDF, and ``_pcm_frame`` runs the PCM check for both of its readers.
 """
 
 from __future__ import annotations
@@ -41,10 +43,10 @@ import zlib
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mds_provider_spark import schema as S
+from mds_provider_spark.session import arrow_batch, arrow_schema
 
 # ---------------------------------------------------------------- codecs
 
@@ -262,15 +264,17 @@ def _content_violations(
                 emit(rid, cid, part, f"SNR {snr[i]:.1f} dB < {min_snr_db:.1f} dB")
 
 
+def _positive(v) -> bool:
+    """A usable sr_hz / dur_ms: non-NULL, non-NaN, positive."""
+    return v is not None and not math.isnan(v) and int(v) > 0
+
+
 def _structurally_invalid(cid, sr, dur, codec) -> bool:
     """Shared skip predicate for BOTH pcm paths ('Same results' contract):
     rows already caught by not_null/enum/range rules (NULL key, unknown
     codec, NULL/NaN/non-positive sr or dur) are not content-checked."""
-    if cid is None or codec not in DECODERS:
-        return True
-    if sr is None or dur is None or pd.isna(sr) or pd.isna(dur):
-        return True
-    return int(sr) <= 0 or int(dur) <= 0
+    return (cid is None or codec not in DECODERS
+            or not (_positive(sr) and _positive(dur)))
 
 
 _PCM_SCHEMA = (
@@ -280,21 +284,23 @@ _PCM_SCHEMA = (
 
 def _pcm_frame(
     rows,
+    arrow,
     ref_wave_fn: RefWaveFn,
     ref_wave_batch_fn: "RefWaveBatchFn | None",
     min_snr_db: float,
-) -> pd.DataFrame:
+):
     """The PCM check over ``(cid, buf, sr, dur, codec, part)`` rows, as
-    one _PCM_SCHEMA frame — shared by both readers so they cannot
-    drift. NULL bytes are ``missing_field:bytes``; structurally invalid
-    rows are skipped; bytes that fail to decode are ``bad_pcm``; the
-    rest get the SNR check (``_content_violations``)."""
+    one Arrow batch typed by ``arrow`` (``arrow_schema(_PCM_SCHEMA)``) —
+    shared by both readers so they cannot drift. NULL bytes are
+    ``missing_field:bytes``; structurally invalid rows are skipped;
+    bytes that fail to decode are ``bad_pcm``; the rest get the SNR
+    check (``_content_violations``)."""
     rid = S.rule_id(S.BAD_PCM, "bytes")
     rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
-    rids, ids, parts, msgs = [], [], [], []
+    out = []
 
     def emit(r, c, p, m):
-        rids.append(r); ids.append(c); parts.append(p); msgs.append(m)
+        out.append((r, c, "bytes", m, p))
 
     decodable = []
     for cid, buf, sr, dur, codec, part in rows:
@@ -304,22 +310,14 @@ def _pcm_frame(
         if _structurally_invalid(cid, sr, dur, codec):
             continue
         try:
-            dec = decode(codec, bytes(buf))
+            dec = decode(codec, buf)
         except Exception as exc:  # undecodable bytes ARE a violation
             emit(rid, cid, part, f"decode failed: {type(exc).__name__}")
             continue
         decodable.append((cid, dec, int(sr), int(dur), part))
     _content_violations(decodable, ref_wave_fn, ref_wave_batch_fn,
                         min_snr_db, rid, emit)
-    return pd.DataFrame(
-        {
-            "rule_id": pd.array(rids, dtype="string"),
-            "clip_id": pd.array(ids, dtype="string"),
-            "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
-            "message": pd.array(msgs, dtype="string"),
-            "part_id": pd.array(parts, dtype="int32"),
-        }
-    )
+    return arrow_batch(out, arrow)
 
 
 def pcm_violations(
@@ -330,7 +328,7 @@ def pcm_violations(
     part_col: str = "part_id",
     ref_wave_batch_fn: "RefWaveBatchFn | None" = None,
 ) -> DataFrame:
-    """bad_pcm violations via mapInPandas (Arrow batches, BASELINE.json).
+    """bad_pcm violations via mapInArrow (Arrow batches, BASELINE.json).
 
     Column-pruned input (only 5 columns cross the Arrow boundary — never
     select * before a Python stage). Validation is LAYERED like the
@@ -345,13 +343,14 @@ def pcm_violations(
     at 100 TB the audio payload crosses the scan exactly once, here.
     """
     cols = [key_col, "bytes", "sr_hz", "dur_ms", "codec", part_col]
+    arrow = arrow_schema(_PCM_SCHEMA)
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pcm_frame(zip(*(pdf[c] for c in cols)), ref_wave_fn,
-                             ref_wave_batch_fn, min_snr_db)
+    def check(batches: Iterator) -> Iterator:
+        for rb in batches:
+            yield _pcm_frame(zip(*(c.to_pylist() for c in rb.columns)), arrow,
+                             ref_wave_fn, ref_wave_batch_fn, min_snr_db)
 
-    return clips.select(*cols).mapInPandas(check, _PCM_SCHEMA)
+    return clips.select(*cols).mapInArrow(check, _PCM_SCHEMA)
 
 
 def pcm_violations_over_files(
@@ -392,22 +391,67 @@ def pcm_violations_over_files(
         if keep is None or p in keep:  # manual partition pruning
             files.append((f, p))
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    arrow = arrow_schema(_PCM_SCHEMA)
+
+    def check(batches: Iterator) -> Iterator:
         import pyarrow.parquet as pq
 
         cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
-        for pdf in batches:
-            for fid in pdf["id"]:
+        for ids in batches:
+            for fid in ids.column(0).to_pylist():
                 path, part = files[fid]
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(batch_size=batch_size, columns=cols):
-                    rows = zip(*(rb.column(i).to_pylist() for i in range(5)),
+                    rows = zip(*(rb.column(c).to_pylist() for c in cols),
                                [part] * rb.num_rows)
-                    yield _pcm_frame(rows, ref_wave_fn, ref_wave_batch_fn,
-                                     min_snr_db)
+                    yield _pcm_frame(rows, arrow, ref_wave_fn,
+                                     ref_wave_batch_fn, min_snr_db)
 
     n = len(files)
-    return spark.range(0, n, 1, max(n, 1)).mapInPandas(check, _PCM_SCHEMA)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(check, _PCM_SCHEMA)
+
+
+# ------------------------------------------------------ feature UDFs
+
+
+def _map_decoded(
+    clips: DataFrame,
+    cols: list[str],
+    per_clip: Callable[..., "list[tuple]"],
+    schema: str,
+) -> DataFrame:
+    """The one decode loop behind every audio feature UDF, via
+    ``mapInArrow``. ``cols`` is ``[key, "bytes", "codec", *extra]``: the
+    pruned select, so the bytes cross the Arrow pipe once and no column
+    the UDF does not read crosses at all. Rows with NULL bytes, an
+    unregistered codec or bytes that fail to decode are skipped (layered
+    contract: those are the not_null/enum/bad_pcm findings). For every
+    other row ``per_clip(w, cid, codec, *extra)`` gets the decoded
+    waveform and returns the row's output tuples in ``schema`` (DDL)
+    order — none to skip the row, several to explode it. Each input
+    batch gives one output batch, typed by ``arrow_batch``."""
+    arrow = arrow_schema(schema)
+
+    def run(batches: Iterator) -> Iterator:
+        for rb in batches:
+            out = []
+            for cid, buf, codec, *extra in zip(*(c.to_pylist() for c in rb.columns)):
+                if buf is None or codec not in DECODERS:
+                    continue
+                try:
+                    w = decode(codec, buf)
+                except Exception:
+                    continue
+                out.extend(per_clip(w, cid, codec, *extra))
+            yield arrow_batch(out, arrow)
+
+    return clips.select(*cols).mapInArrow(run, schema)
+
+
+def _rms64(x: np.ndarray) -> float:
+    """float64 RMS of a waveform (0.0 when empty)."""
+    x = x.astype(np.float64)
+    return float(np.sqrt(np.mean(x * x))) if x.size else 0.0
 
 
 def audio_features(clips: DataFrame, key_col: str = "clip_id") -> DataFrame:
@@ -416,38 +460,21 @@ def audio_features(clips: DataFrame, key_col: str = "clip_id") -> DataFrame:
     Decodes each clip and emits (clip_id, n_samples, rms, peak,
     zero_crossings). Image/video analogs would use the same shape —
     their actual decoders are NOT available in this container and would
-    plug into DECODERS; the Spark-side contract (pruned select, Arrow
-    batches, fixed output schema) is what this function demonstrates.
+    plug into DECODERS; the Spark-side contract (``_map_decoded``:
+    pruned select, Arrow batches, fixed output schema) is what this
+    function demonstrates. NULL ids are kept.
     """
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, rms, peak, zc = [], [], [], [], []
-            for cid, buf, codec in zip(pdf[key_col], pdf["bytes"], pdf["codec"]):
-                if buf is None or codec not in DECODERS:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                ids.append(cid)
-                ns.append(int(w.size))
-                rms.append(float(np.sqrt(np.mean(w * w))) if w.size else 0.0)
-                peak.append(float(np.max(np.abs(w))) if w.size else 0.0)
-                zc.append(int(np.count_nonzero(np.diff(np.signbit(w)))) if w.size else 0)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                    "peak": pd.array(peak, dtype="float64"),
-                    "zero_crossings": pd.array(zc, dtype="int64"),
-                }
-            )
+    def feats(w, cid, codec):
+        if not w.size:
+            return [(cid, 0, 0.0, 0.0, 0)]
+        # float32 RMS (not _rms64): the oracle ledger pins these values
+        return [(cid, w.size, float(np.sqrt(np.mean(w * w))),
+                 float(np.max(np.abs(w))),
+                 int(np.count_nonzero(np.diff(np.signbit(w)))))]
 
-    pruned = clips.select(key_col, "bytes", "codec")
-    return pruned.mapInPandas(
-        feats,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec"], feats,
         "clip_id string, n_samples long, rms double, peak double, zero_crossings long",
     )
 
@@ -495,41 +522,14 @@ def quality_features_of(w: np.ndarray, sr_hz: int) -> tuple:
 def audio_quality_features(clips: DataFrame, key_col: str = "clip_id") -> DataFrame:
     """Audio-corpus quality screening: (clip_id, silence_ratio,
     clipping_ratio, dominant_hz, spectral_centroid_hz) per decodable
-    clip. Same mapInPandas contract as audio_features (pruned select —
-    bytes cross the pipe once; per-clip skip on null bytes / unknown
-    codec / decode failure); the DSP itself is quality_features_of."""
+    clip with a positive sr (decode loop and skips: ``_map_decoded``);
+    the DSP itself is quality_features_of."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sil, clp, dom, cen = [], [], [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                if buf is None or codec not in DECODERS or pd.isna(sr) or int(sr) <= 0:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                s, c, d, ce = quality_features_of(w, int(sr))
-                ids.append(cid)
-                sil.append(s)
-                clp.append(c)
-                dom.append(d)
-                cen.append(ce)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "silence_ratio": pd.array(sil, dtype="float64"),
-                    "clipping_ratio": pd.array(clp, dtype="float64"),
-                    "dominant_hz": pd.array(dom, dtype="float64"),
-                    "spectral_centroid_hz": pd.array(cen, dtype="float64"),
-                }
-            )
+    def feats(w, cid, codec, sr):
+        return [(cid, *quality_features_of(w, int(sr)))] if _positive(sr) else []
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        feats,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], feats,
         "clip_id string, silence_ratio double, clipping_ratio double, "
         "dominant_hz double, spectral_centroid_hz double",
     )
@@ -561,39 +561,16 @@ def segment_clips(
     """Explode clips into fixed-length segments: (clip_id, seg_idx,
     start_ms, n_samples, rms) — the training-data frame-sampling shape
     (one binary in, many typed rows out). Row count multiplies by
-    dur/segment; the mapInPandas batch contract is unchanged."""
+    dur/segment; the batch contract is ``_map_decoded``'s, and rows
+    without a positive sr are skipped."""
 
-    def segs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, starts, ns, rms = [], [], [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                if buf is None or codec not in DECODERS or pd.isna(sr) or int(sr) <= 0:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                for i, start, n, r in segment_features_of(w, int(sr), segment_ms):
-                    ids.append(cid)
-                    idxs.append(i)
-                    starts.append(start)
-                    ns.append(n)
-                    rms.append(r)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "seg_idx": pd.array(idxs, dtype="int32"),
-                    "start_ms": pd.array(starts, dtype="int32"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                }
-            )
+    def segs(w, cid, codec, sr):
+        if not _positive(sr):
+            return []
+        return [(cid, *seg) for seg in segment_features_of(w, int(sr), segment_ms)]
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        segs,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], segs,
         "clip_id string, seg_idx int, start_ms int, n_samples long, rms double",
     )
 
@@ -627,39 +604,17 @@ def resample_clips(
     'resize' transform): decode -> resample_linear -> re-encode s16le.
     Emits (clip_id, sr_hz=target, n_samples, rms, bytes) — binary IN and
     binary OUT of the Arrow batch, the full multimodal transform shape.
-    Undecodable rows are skipped (same layered contract as the other
-    audio UDFs)."""
+    Undecodable rows and rows without a positive sr are skipped
+    (``_map_decoded``'s layered contract)."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, rms, bufs = [], [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                if buf is None or codec not in DECODERS or pd.isna(sr) or int(sr) <= 0:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                r = resample_linear(w, int(sr), target_sr)
-                ids.append(cid)
-                ns.append(int(r.size))
-                rms.append(float(np.sqrt(np.mean(r.astype(np.float64) ** 2))) if r.size else 0.0)
-                bufs.append(encode_pcm_s16le(r))
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "sr_hz": pd.array([target_sr] * len(ids), dtype="int32"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                    "bytes": pd.array(bufs, dtype=object),
-                }
-            )
+    def work(w, cid, codec, sr):
+        if not _positive(sr):
+            return []
+        r = resample_linear(w, int(sr), target_sr)
+        return [(cid, target_sr, r.size, _rms64(r), encode_pcm_s16le(r))]
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        work,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], work,
         "clip_id string, sr_hz int, n_samples long, rms double, bytes binary",
     )
 
@@ -727,55 +682,25 @@ def augment_clips(
 ) -> DataFrame:
     """Corpus-scale audio augmentation (speed perturb / gain / seeded
     noise): decode -> augment_wave -> re-encode s16le in one Arrow pass,
-    column-pruned like every audio UDF. Emits (clip_id, sr_hz,
-    n_samples, rms, bytes). Undecodable rows are skipped (layered
+    column-pruned like every audio UDF (``_map_decoded``). Emits
+    (clip_id, sr_hz, n_samples, rms, bytes). Undecodable rows, rows
+    without a positive sr and rows with a NULL id are skipped (layered
     contract). Retry-stable: augmentation is a pure function of
     (clip_id, params, seed) — a re-run of a crashed partition produces
     byte-identical output, so the checkpoint protocol's overwrite
     semantics hold for augmented data too."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, srs, ns, rms, bufs = [], [], [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                # null id skipped too: the per-clip RNG is keyed on the
-                # id, and an unidentified clip is missing_field's finding
-                if (
-                    cid is None or buf is None or codec not in DECODERS
-                    or pd.isna(sr) or int(sr) <= 0
-                ):
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                a = augment_wave(
-                    w, int(sr), str(cid),
-                    speed=speed, gain_db=gain_db,
-                    noise_snr_db=noise_snr_db, seed=seed,
-                )
-                ids.append(cid)
-                srs.append(int(sr))
-                ns.append(int(a.size))
-                rms.append(
-                    float(np.sqrt(np.mean(a.astype(np.float64) ** 2))) if a.size else 0.0
-                )
-                bufs.append(encode_pcm_s16le(a))
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "sr_hz": pd.array(srs, dtype="int32"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                    "bytes": pd.array(bufs, dtype=object),
-                }
-            )
+    def work(w, cid, codec, sr):
+        # null id skipped too: the per-clip RNG is keyed on the id, and
+        # an unidentified clip is missing_field's finding
+        if cid is None or not _positive(sr):
+            return []
+        a = augment_wave(w, int(sr), str(cid), speed=speed, gain_db=gain_db,
+                         noise_snr_db=noise_snr_db, seed=seed)
+        return [(cid, int(sr), a.size, _rms64(a), encode_pcm_s16le(a))]
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        work,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], work,
         "clip_id string, sr_hz int, n_samples long, rms double, bytes binary",
     )
 
@@ -810,44 +735,19 @@ def normalize_clips(
     """Corpus-scale loudness normalization: decode -> normalize_wave ->
     re-encode s16le in one Arrow pass (the training-data step that makes
     a corpus gain-comparable before augmentation/featurization). Same
-    pruned-select mapInPandas contract as augment_clips; undecodable
-    rows are skipped (layered contract). Pure function of (bytes,
-    target) — retry-stable under the overwrite checkpoint protocol.
-    Emits (clip_id, n_samples, rms_before, rms_after, bytes)."""
+    ``_map_decoded`` contract as augment_clips; undecodable rows and rows
+    with a NULL id are skipped (layered contract). Pure function of
+    (bytes, target) — retry-stable under the overwrite checkpoint
+    protocol. Emits (clip_id, n_samples, rms_before, rms_after, bytes)."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, rb, ra, bufs = [], [], [], [], []
-            for cid, buf, codec in zip(pdf[key_col], pdf["bytes"], pdf["codec"]):
-                if cid is None or buf is None or codec not in DECODERS:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                x = w.astype(np.float64)
-                before = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-                out = normalize_wave(w, target_rms_dbfs)
-                o = out.astype(np.float64)
-                after = float(np.sqrt(np.mean(o * o))) if o.size else 0.0
-                ids.append(cid)
-                ns.append(int(out.size))
-                rb.append(before)
-                ra.append(after)
-                bufs.append(encode_pcm_s16le(out))
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "rms_before": pd.array(rb, dtype="float64"),
-                    "rms_after": pd.array(ra, dtype="float64"),
-                    "bytes": pd.array(bufs, dtype=object),
-                }
-            )
+    def work(w, cid, codec):
+        if cid is None:
+            return []
+        out = normalize_wave(w, target_rms_dbfs)
+        return [(cid, out.size, _rms64(w), _rms64(out), encode_pcm_s16le(out))]
 
-    pruned = clips.select(key_col, "bytes", "codec")
-    return pruned.mapInPandas(
-        work,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec"], work,
         "clip_id string, n_samples long, rms_before double, "
         "rms_after double, bytes binary",
     )
@@ -973,41 +873,19 @@ def audio_embedding_clips(
 ) -> DataFrame:
     """Corpus-scale acoustic-embedding extraction: one binary row in,
     one (clip_id, codec, embedding array<double>) row out via
-    ``mapInPandas`` — the decode/feature stage feeding
+    ``_map_decoded`` — the decode/feature stage feeding
     ``drift.embedding_drift`` (group by codec/provider) or the ANN
     family. Same layered skip contract as ``filterbank_clips`` (null
     bytes / unknown codec / decode failure / sr<=0 / shorter than one
     frame rows are absent)."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, codecs, vecs = [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                if buf is None or codec not in DECODERS or pd.isna(sr) or int(sr) <= 0:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                e = audio_embedding_of(w, int(sr), n_mels, frame, hop)
-                if e is None:
-                    continue
-                ids.append(cid)
-                codecs.append(codec)
-                vecs.append(e)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "codec": pd.array(codecs, dtype="string"),
-                    "embedding": pd.Series(vecs, dtype="object"),
-                }
-            )
+    def work(w, cid, codec, sr):
+        e = audio_embedding_of(w, int(sr), n_mels, frame, hop) if _positive(sr) else None
+        return [] if e is None else [(cid, codec, e)]
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        work, "clip_id string, codec string, embedding array<double>"
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], work,
+        "clip_id string, codec string, embedding array<double>",
     )
 
 
@@ -1023,35 +901,13 @@ def filterbank_clips(
     contract as audio_quality_features (sr required — mel spacing
     depends on it). Emits (clip_id, frame_idx, log_energy, fb_md5)."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, loge, digs = [], [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                if buf is None or codec not in DECODERS or pd.isna(sr) or int(sr) <= 0:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                for i, le, dg in filterbank_of(w, int(sr), n_mels, frame, hop):
-                    ids.append(cid)
-                    fidx.append(i)
-                    loge.append(le)
-                    digs.append(dg)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "frame_idx": pd.array(fidx, dtype="int32"),
-                    "log_energy": pd.array(loge, dtype="float64"),
-                    "fb_md5": pd.array(digs, dtype="string"),
-                }
-            )
+    def work(w, cid, codec, sr):
+        if not _positive(sr):
+            return []
+        return [(cid, *f) for f in filterbank_of(w, int(sr), n_mels, frame, hop)]
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        work,
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], work,
         "clip_id string, frame_idx int, log_energy double, fb_md5 string",
     )
 
@@ -1185,56 +1041,27 @@ def transcript_rate_violations(
     Layered like pcm_violations: rows whose base fields are invalid
     (NULL key/bytes, unknown codec, non-positive sr/dur, NULL/empty
     transcript) are skipped — those findings belong to the structural
-    rules. Same pruned-select mapInPandas contract; bytes cross the
+    rules. Same pruned-select ``_map_decoded`` contract; bytes cross the
     Arrow pipe once.
     """
     rid = S.rule_id(S.INCONSISTENT, "voiced_rate")
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rids, ids, parts, msgs = [], [], [], []
-            for cid, buf, sr, dur, codec, txt, part in zip(
-                pdf[key_col], pdf["bytes"], pdf["sr_hz"], pdf["dur_ms"],
-                pdf["codec"], pdf["transcript"], pdf[part_col],
-            ):
-                if buf is None or _structurally_invalid(cid, sr, dur, codec):
-                    continue
-                if txt is None or len(txt) == 0:
-                    continue  # empty_transcript's finding
-                try:
-                    dec = decode(codec, bytes(buf))
-                except Exception:
-                    continue  # bad_pcm's finding
-                voiced = voiced_seconds_of(dec, int(sr))
-                if voiced == 0.0:
-                    rids.append(rid); ids.append(cid); parts.append(part)
-                    msgs.append("non-empty transcript over silent audio")
-                    continue
-                rate = len(txt) / voiced
-                if rate < lo or rate > hi:
-                    rids.append(rid); ids.append(cid); parts.append(part)
-                    msgs.append(
-                        f"chars per voiced second {rate:.1f} outside "
-                        f"[{lo}, {hi}]"
-                    )
-            yield pd.DataFrame(
-                {
-                    "rule_id": pd.array(rids, dtype="string"),
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "column_name": pd.array(
-                        ["transcript"] * len(rids), dtype="string"),
-                    "message": pd.array(msgs, dtype="string"),
-                    "part_id": pd.array(parts, dtype="int32"),
-                }
-            )
+    def check(w, cid, codec, sr, dur, txt, part):
+        if _structurally_invalid(cid, sr, dur, codec) or not txt:
+            return []  # structural / empty_transcript findings
+        voiced = voiced_seconds_of(w, int(sr))
+        if voiced == 0.0:
+            msg = "non-empty transcript over silent audio"
+        elif not lo <= len(txt) / voiced <= hi:
+            msg = f"chars per voiced second {len(txt) / voiced:.1f} outside [{lo}, {hi}]"
+        else:
+            return []
+        return [(rid, cid, "transcript", msg, part)]
 
-    pruned = clips.select(
-        key_col, "bytes", "sr_hz", "dur_ms", "codec", "transcript", part_col
-    )
-    return pruned.mapInPandas(
-        check,
-        "rule_id string, clip_id string, column_name string, "
-        "message string, part_id int",
+    return _map_decoded(
+        clips,
+        [key_col, "bytes", "codec", "sr_hz", "dur_ms", "transcript", part_col],
+        check, _PCM_SCHEMA,
     )
 
 
@@ -1318,35 +1145,15 @@ def fingerprint_clips(
     clip — (clip_id, n_sub, fp, fp_md5). Same layered skip contract as
     ``filterbank_clips`` (sr required: mel spacing depends on it)."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nsub, fps, digs = [], [], [], []
-            for cid, buf, codec, sr in zip(
-                pdf[key_col], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                if buf is None or codec not in DECODERS or pd.isna(sr) or int(sr) <= 0:
-                    continue
-                try:
-                    w = decode(codec, bytes(buf))
-                except Exception:
-                    continue
-                fp = fingerprint_of(w, int(sr), n_bands, frame, hop)
-                ids.append(cid)
-                nsub.append(fp.size)
-                fps.append(fp.tolist())
-                digs.append(fingerprint_md5(fp))
-            yield pd.DataFrame(
-                {
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "n_sub": pd.array(nsub, dtype="int32"),
-                    "fp": pd.Series(fps, dtype="object"),
-                    "fp_md5": pd.array(digs, dtype="string"),
-                }
-            )
+    def work(w, cid, codec, sr):
+        if not _positive(sr):
+            return []
+        fp = fingerprint_of(w, int(sr), n_bands, frame, hop)
+        return [(cid, fp.size, fp.tolist(), fingerprint_md5(fp))]
 
-    pruned = clips.select(key_col, "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(
-        work, "clip_id string, n_sub int, fp array<int>, fp_md5 string"
+    return _map_decoded(
+        clips, [key_col, "bytes", "codec", "sr_hz"], work,
+        "clip_id string, n_sub int, fp array<int>, fp_md5 string",
     )
 
 
@@ -1386,8 +1193,7 @@ def fingerprint_near_dup(
     self-join sides, the bucket-cap aggregation, both verify sides),
     and when ``fps`` is a live fingerprint_clips pipeline each
     reference would otherwise re-decode every audio byte through the
-    Python worker — measured as six MapInPandas scans in the unpersisted
-    plan. The fp table is ~30x smaller than the audio (a few hundred
+    Python worker — six Python map scans in the unpersisted plan. The fp table is ~30x smaller than the audio (a few hundred
     int32s per clip), so MEMORY_AND_DISK is the right trade at any
     scale; lineage is kept (plain persist, not localCheckpoint), and
     callers that already materialized fingerprints to a table can pass

@@ -86,11 +86,34 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def arrow_schema(schema: StructType | str):
+    """The ``pyarrow.Schema`` Spark uses for ``schema`` (a StructType or
+    a DDL string). Call it on the driver: parsing DDL needs the JVM."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return to_arrow_schema(schema)
+
+
+def arrow_batch(rows: list[tuple], arrow):
+    """Rows (tuples in ``arrow`` field order) as one ``pyarrow.RecordBatch``
+    typed by the ``arrow_schema`` result ``arrow``; zero rows give an
+    empty batch of the same schema. Needs no Spark, so it also runs on
+    workers (the audio UDFs emit their batches through it)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
 def local_frame(spark: SparkSession, rows: list[tuple],
                 schema: StructType | str) -> DataFrame:
     """A DataFrame from driver-side rows (tuples in ``schema`` order),
     built in the JVM: the rows become a ``pyarrow.Table`` typed by
-    ``to_arrow_schema(schema)``, which ``createDataFrame`` ships as Arrow
+    ``arrow_schema(schema)``, which ``createDataFrame`` ships as Arrow
     batches. ``createDataFrame(<list>)`` would instead make a Python RDD
     and run Python-worker tasks to convert it. pandas is skipped on
     purpose: it would turn ``None`` into ``NaN``. ``schema`` is a
@@ -98,13 +121,6 @@ def local_frame(spark: SparkSession, rows: list[tuple],
     driver-side rows comes from here (``tests/test_local_frame.py``
     guards that)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    table = pa.Table.from_batches([arrow_batch(rows, arrow_schema(schema))])
     return spark.createDataFrame(table, schema)

@@ -406,20 +406,114 @@ def test_audio_embedding_of_shape_skip_and_gain_sensitivity():
     assert audio.audio_embedding_of(w, 0) is None
 
 
-def test_audio_embedding_clips_skip_contract(spark):
-    w = FX.ref_waveform("tone-a", 16000, 400)
+_CLIP_DDL = ("clip_id string, bytes binary, codec string, sr_hz int, "
+             "dur_ms int, transcript string, part_id int")
+_SKIP_CASES = {
+    # name: (call, declared output DDL, clip_ids the mixed batch emits)
+    "audio_features": (
+        audio.audio_features,
+        "clip_id string, n_samples long, rms double, peak double, zero_crossings long",
+        {"ok", None, "sr_zero", "sr_null"}),  # reads no sr_hz, keeps NULL ids
+    "audio_quality_features": (
+        audio.audio_quality_features,
+        "clip_id string, silence_ratio double, clipping_ratio double, "
+        "dominant_hz double, spectral_centroid_hz double", {"ok", None}),
+    "segment_clips": (
+        audio.segment_clips,
+        "clip_id string, seg_idx int, start_ms int, n_samples long, rms double",
+        {"ok", None}),
+    "resample_clips": (
+        lambda df: audio.resample_clips(df, 8000),
+        "clip_id string, sr_hz int, n_samples long, rms double, bytes binary",
+        {"ok", None}),
+    "augment_clips": (
+        lambda df: audio.augment_clips(df, speed=1.1, noise_snr_db=30.0),
+        "clip_id string, sr_hz int, n_samples long, rms double, bytes binary",
+        {"ok"}),
+    "normalize_clips": (
+        audio.normalize_clips,
+        "clip_id string, n_samples long, rms_before double, rms_after double, "
+        "bytes binary", {"ok", "sr_zero", "sr_null"}),  # NULL id dropped
+    "audio_embedding_clips": (
+        audio.audio_embedding_clips,
+        "clip_id string, codec string, embedding array<double>", {"ok", None}),
+    "filterbank_clips": (
+        audio.filterbank_clips,
+        "clip_id string, frame_idx int, log_energy double, fb_md5 string",
+        {"ok", None}),
+    "transcript_rate_violations": (
+        audio.transcript_rate_violations,
+        "rule_id string, clip_id string, column_name string, message string, "
+        "part_id int", {"ok"}),
+    "fingerprint_clips": (
+        audio.fingerprint_clips,
+        "clip_id string, n_sub int, fp array<int>, fp_md5 string", {"ok", None}),
+    # the PCM check reports NULL and undecodable bytes instead of skipping
+    "pcm_violations": (
+        lambda df: audio.pcm_violations(df, FX.ref_waveform),
+        "rule_id string, clip_id string, column_name string, message string, "
+        "part_id int", {"null_bytes", "trunc_wav"}),
+}
+
+
+@pytest.mark.parametrize("name", list(_SKIP_CASES))
+def test_audio_embedding_clips_skip_contract(spark, name):
+    """Every audio UDF skips NULL bytes, an unknown codec, undecodable
+    bytes and (where it reads it) a missing or non-positive sr_hz; a
+    batch in which every row is skipped gives 0 rows of exactly the
+    declared schema, and skipped rows never disturb the kept ones in the
+    same batch."""
+    from pyspark.sql.types import StructType
+
+    call, ddl, kept = _SKIP_CASES[name]
+    w = FX.ref_waveform("ok", 16000, 400)
+    pcm = audio.encode_pcm_s16le(w)
     rows = [
-        ("ok", bytearray(audio.encode_pcm_s16le(w)), "pcm_s16le", 16000),
-        ("null_bytes", None, "pcm_s16le", 16000),
-        ("bad_codec", bytearray(b"xx"), "unknown", 16000),
-        ("bad_sr", bytearray(audio.encode_pcm_s16le(w)), "pcm_s16le", 0),
+        ("ok", pcm, "pcm_s16le", 16000, 400, "x", 0),
+        (None, pcm, "pcm_s16le", 16000, 400, "x", 0),
+        ("null_bytes", None, "pcm_s16le", 16000, 400, "x", 0),
+        ("bad_codec", pcm, "xyz", 16000, 400, "x", 0),
+        ("trunc_wav", audio.encode_wav(w)[:-10], "wav", 16000, 400, "x", 1),
+        ("sr_zero", pcm, "pcm_s16le", 0, 400, "x", 1),
+        ("sr_null", pcm, "pcm_s16le", None, 400, "x", 1),
     ]
-    df = spark.createDataFrame(
-        rows, "clip_id string, bytes binary, codec string, sr_hz int")
-    got = {r.clip_id: r for r in audio.audio_embedding_clips(df).collect()}
-    assert set(got) == {"ok"}
-    assert len(got["ok"].embedding) == 8
-    # the Spark path reproduces the shared kernel bit-for-bit (on the
-    # same int16 round-tripped waveform it decodes)
-    w_rt = audio.decode("pcm_s16le", bytes(audio.encode_pcm_s16le(w)))
-    assert got["ok"].embedding == audio.audio_embedding_of(w_rt, 16000)
+    skipped = [r for r in rows if r[0] not in kept | {"ok", None}]
+    out = call(spark.createDataFrame(skipped, _CLIP_DDL).coalesce(1))
+    assert out.schema == StructType.fromDDL(ddl)
+    assert out.collect() == []
+
+    got = call(spark.createDataFrame(rows, _CLIP_DDL).coalesce(1)).collect()
+    assert {r.clip_id for r in got} == kept
+    if name == "audio_embedding_clips":
+        # the Spark path reproduces the shared kernel bit-for-bit (on the
+        # same int16 round-tripped waveform it decodes)
+        emb = {r.clip_id: r.embedding for r in got}
+        assert emb["ok"] == audio.audio_embedding_of(audio.decode("pcm_s16le", pcm), 16000)
+
+
+def test_audio_has_one_decode_site():
+    """No Spark needed: in audio.py only the feature UDFs' shared loop
+    (``_map_decoded``) and the PCM check (``_pcm_frame``) call
+    ``decode``, and no UDF goes back to a pandas batch loop of its own."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(audio.__file__)
+    src = path.read_text()
+    assert "mapInPandas" not in src
+    callers = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, fn or child.name)  # nested defs count as their outer function
+                continue
+            if (isinstance(child, ast.Call) and isinstance(child.func, ast.Name)
+                    and child.func.id == "decode"):
+                callers.append((child.lineno, fn))
+            walk(child, fn)
+
+    walk(ast.parse(src, str(path)), None)
+    stray = [f"audio.py:{line} in {fn}" for line, fn in callers
+             if fn not in ("_map_decoded", "_pcm_frame")]
+    assert callers and not stray, "decode( outside the two decode loops: " + ", ".join(stray)
