@@ -866,16 +866,19 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tdigest_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-digest with a BOUND-CHECK oracle (sketch values are
+    """Profile quantiles with a BOUND-CHECK oracle (sketch values are
     engine-specific): the query returns the EXACT quantile alongside
-    whether the two-stage t-digest landed within 5% of the column span
-    of it; the oracle recomputes the exact quantiles and expects
-    within_bound=true for every probability."""
+    whether the ``stats.profile`` estimate landed within 5% of the
+    column span of it; the oracle recomputes the exact quantiles and
+    expects within_bound=true for every probability."""
     li = _t(spark, sf_dir, "lineitem")
-    td = DR.tdigest_quantiles(li, "l_extendedprice")  # (column_name, prob, quantile)
     probs = list(ST.DEFAULT_PROBS)
-    q = F.percentile(F.col("l_extendedprice").cast("double"),
-                     F.array(*[F.lit(p) for p in probs]))
+    p_arr = F.array(*[F.lit(p) for p in probs])
+    td = ST.profile(li, ["l_extendedprice"], probs=probs).select(
+        "column_name", F.explode(F.arrays_zip(
+            p_arr.alias("prob"), F.col("quantiles").alias("quantile"))).alias("z"),
+    ).select("column_name", "z.prob", "z.quantile")
+    q = F.percentile(F.col("l_extendedprice").cast("double"), p_arr)
     wide = li.agg(
         q.alias("_qs"),
         F.min(F.col("l_extendedprice").cast("double")).alias("_min"),
@@ -3412,8 +3415,9 @@ def oracle_sql() -> dict[str, str]:
                    1.0::DOUBLE AS cosine_sim
             FROM embeddings
         """,
-        # Exact quantiles must match; the t-digest estimate must land
-        # within 5% of the column span (within_bound TRUE on both sides).
+        # Exact quantiles must match; the profile (percentile_approx)
+        # estimate must land within 5% of the column span (within_bound
+        # TRUE on both sides).
         "tdigest_quantiles_lineitem": "\nUNION ALL\n".join(
             f"""SELECT 'l_extendedprice' AS column_name, {p}::DOUBLE AS prob,
                 round(quantile_cont(l_extendedprice::DOUBLE, {p}), 6) AS exact_q,

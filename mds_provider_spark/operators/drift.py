@@ -1,16 +1,9 @@
 """Distribution-drift detection vs a baseline snapshot (BASELINE.json A5/J2).
 
-Two quantile-sketch paths:
-
-1. ``profile()`` quantiles (built-in ``percentile_approx``, a GK-style
-   mergeable sketch, partial+final automatic) — the default.
-2. A true t-digest implemented as the EXPLICIT two-stage partial/merge
-   pandas UDAF the north star calls out: per-input-partition digests via
-   ``mapInPandas`` (stage 1 — no shuffle, scales with data), then a
-   single merge of the tiny centroid set per column (stage 2 — shuffle
-   carries only centroids, ~compression x partitions rows, independent of
-   data size). Deterministic: centroids are sorted-merge compressed with
-   a fixed scale function, no randomness.
+One quantile path: every snapshot, grouped or not, takes its quantiles
+from ``stats.profile`` (built-in ``percentile_approx``, a deterministic
+GK-style mergeable sketch, partial+final automatic). Histogram (PSI/JS)
+and categorical drift count exactly and need no sketch.
 
 The comparison itself is a broadcast join of two tiny snapshot tables
 (one row per column) — never a data-scale shuffle.
@@ -19,10 +12,8 @@ The comparison itself is a broadcast join of two tiny snapshot tables
 from __future__ import annotations
 
 import math
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from mds_provider_spark import schema as S
@@ -63,56 +54,17 @@ def grouped_snapshot(
     one codec/provider is visible even when the global profile barely
     moves (a 70%-hot codec drowns the others in an ungrouped sketch).
 
-    Same single-job shape as ``stats.profile`` with the group key in the
-    groupBy: ONE hash aggregate over ONE scan (partial+final two-stage,
-    sketches mergeable), then an explode of per-column structs — shuffle
-    carries one partial row per (input partition, group), independent of
-    data size. Skewed group values are exactly the partial-aggregation
-    case Spark handles map-side; AQE covers the residual reduce skew.
+    ``stats.profile`` with the group key in its groupBy: ONE hash
+    aggregate over ONE scan; the shuffle carries one partial row per
+    (input partition, group). Skewed group values are exactly the
+    partial-aggregation case Spark handles map-side.
 
     Compare two of these with
     ``drift_violations(..., join_cols=(group_col, "column_name"))``.
     """
-    from mds_provider_spark.operators.stats import _is_numeric
-
-    cols = list(cols)
-    aggs: list = [F.count(F.lit(1)).alias("_n")]
-    for c in cols:
-        aggs.append(
-            F.coalesce(
-                F.sum(F.col(c).isNull().cast("long")), F.lit(0)
-            ).alias(f"_null_{c}")
-        )
-        aggs.append(F.approx_count_distinct(c, rsd).alias(f"_dist_{c}"))
-        if _is_numeric(df, c):
-            aggs.append(F.min(F.col(c).cast("double")).alias(f"_min_{c}"))
-            aggs.append(F.max(F.col(c).cast("double")).alias(f"_max_{c}"))
-            aggs.append(
-                F.percentile_approx(
-                    F.col(c).cast("double"), list(probs), 10000
-                ).alias(f"_q_{c}")
-            )
-    wide = df.groupBy(group_col).agg(*aggs)
-    structs = []
-    for c in cols:
-        numeric = _is_numeric(df, c)
-        structs.append(
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.col("_n").alias("n_rows"),
-                F.try_divide(F.col(f"_null_{c}"), F.col("_n")).alias("null_rate"),
-                (F.col(f"_min_{c}") if numeric else F.lit(None).cast("double")).alias("min_val"),
-                (F.col(f"_max_{c}") if numeric else F.lit(None).cast("double")).alias("max_val"),
-                F.col(f"_dist_{c}").cast("long").alias("approx_distinct"),
-                (F.col(f"_q_{c}") if numeric
-                 else F.lit(None).cast("array<double>")).alias("quantiles"),
-            )
-        )
-    return wide.select(
-        F.lit(snapshot_id).alias("snapshot_id"),
-        F.col(group_col),
-        F.explode(F.array(*structs)).alias("s"),
-    ).select("snapshot_id", group_col, "s.*")
+    return profile(
+        df, cols, probs=probs, rsd=rsd, group_cols=[group_col]
+    ).select(F.lit(snapshot_id).alias("snapshot_id"), "*").drop("null_count")
 
 
 def drift_violations(
@@ -179,130 +131,10 @@ def drift_violations(
     )
 
 
-# ------------------------------------------------------------- t-digest
-
-# Minimal deterministic merging t-digest (Dunning & Ertl, "Computing
-# extremely accurate quantiles using t-digests", arXiv:1902.04023 — public
-# paper; implementation from scratch). Scale function k1:
-#   k(q) = delta/(2*pi) * asin(2q - 1)
-
-
-def _k1(q: np.ndarray, delta: float) -> np.ndarray:
-    return delta / (2 * math.pi) * np.arcsin(np.clip(2 * q - 1, -1, 1))
-
-
-def _compress(means: np.ndarray, weights: np.ndarray, delta: float):
-    """Merge sorted centroids greedily under the k1 size bound."""
-    if means.size == 0:
-        return means, weights
-    order = np.argsort(means, kind="stable")
-    means, weights = means[order], weights[order]
-    total = float(weights.sum())
-    out_m: list[float] = [float(means[0])]
-    out_w: list[float] = [float(weights[0])]
-    w_so_far = 0.0
-    for m, w in zip(means[1:], weights[1:]):
-        q0 = w_so_far / total
-        q2 = (w_so_far + out_w[-1] + w) / total
-        if _k1(np.array([q2]), delta)[0] - _k1(np.array([q0]), delta)[0] <= 1.0:
-            # merge into current centroid (weighted mean)
-            nw = out_w[-1] + w
-            out_m[-1] += (m - out_m[-1]) * (w / nw)
-            out_w[-1] = nw
-        else:
-            w_so_far += out_w[-1]
-            out_m.append(float(m))
-            out_w.append(float(w))
-    return np.asarray(out_m), np.asarray(out_w)
-
-
-def _quantile_from_centroids(means: np.ndarray, weights: np.ndarray, q: float) -> float:
-    total = weights.sum()
-    if total == 0:
-        return float("nan")
-    if means.size == 1:
-        return float(means[0])
-    cum = np.cumsum(weights) - weights / 2.0
-    target = q * total
-    return float(np.interp(target, cum, means))
-
-
-def tdigest_quantiles(
-    df: DataFrame,
-    col: str,
-    probs: Sequence[float] = DEFAULT_PROBS,
-    delta: float = 200.0,
-    fanin: int = 64,
-) -> DataFrame:
-    """THREE-stage t-digest: mapInPandas partials -> bounded intermediate
-    merges -> one final merge per column.
-
-    The intermediate level is the 10^12-row necessity: without it the
-    final merge receives one ~delta-centroid row group per INPUT
-    PARTITION — at 10^6 partitions that funnels ~2*10^8 centroid rows
-    into a single task. With ``fanin`` merge groups (keyed by
-    pmod(spark_partition_id, fanin)), the final task sees at most
-    fanin * ~delta rows regardless of input size, and each intermediate
-    task merges ~n_partitions/fanin digests. Compression is
-    deterministic given its input multiset (stable sort by mean, fixed
-    k1 scale function); the grouping only affects intermediate rounding
-    within the sketch's accuracy envelope.
-
-    Returns SCALAR rows (column_name, prob, quantile) — one per requested
-    probability. Scalar (not array<double>) on purpose: driver/oracle
-    harnesses canonicalize through pandas, which cannot hash list cells
-    (CORRECTNESS_r01 tdigest err), and scalar rows join/compare cleanly.
-    """
-    probs = list(probs)
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # stage 1: one digest per arrow batch stream (per input partition)
-        vals = []
-        for pdf in batches:
-            v = pd.to_numeric(pdf[col], errors="coerce").dropna().to_numpy(dtype=np.float64)
-            if v.size:
-                vals.append(v)
-        if not vals:
-            yield pd.DataFrame({"mean": [], "weight": []})
-            return
-        v = np.concatenate(vals)
-        m, w = _compress(v, np.ones_like(v), delta)
-        yield pd.DataFrame({"mean": m, "weight": w})
-
-    partials = df.select(col).mapInPandas(partial, "mean double, weight double")
-
-    def merge_centroids(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _compress(
-            pdf["mean"].to_numpy(np.float64), pdf["weight"].to_numpy(np.float64), delta
-        )
-        return pd.DataFrame({"mean": m, "weight": w})
-
-    # stage 2: bounded fan-in merge — shuffle key is the PARTIAL's
-    # partition id mod fanin, so group sizes are balanced by construction
-    # (no data-dependent skew; hot VALUES don't exist at centroid level).
-    mid = partials.groupBy(
-        F.pmod(F.spark_partition_id(), F.lit(fanin)).alias("_g")
-    ).applyInPandas(merge_centroids, "mean double, weight double")
-
-    def finalize(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _compress(
-            pdf["mean"].to_numpy(np.float64), pdf["weight"].to_numpy(np.float64), delta
-        )
-        qs = [round(_quantile_from_centroids(m, w, p), 6) for p in probs]
-        return pd.DataFrame(
-            {"column_name": [col] * len(probs), "prob": probs, "quantile": qs}
-        )
-
-    # stage 3: single tiny group — at most fanin * ~delta centroid rows.
-    return mid.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        finalize, "column_name string, prob double, quantile double"
-    )
-
-
 # ------------------------------------------- histogram drift (PSI / JS)
 
 
-def _bucket_counts(
+def bucket_counts(
     df: DataFrame, bins: dict[str, tuple[float, float]], n_bins: int
 ) -> DataFrame:
     """(column_name, bucket) -> cnt for every column in ``bins``, ONE scan.
@@ -361,8 +193,8 @@ def histogram_drift(
     """
     return psi_from_counts(
         current.sparkSession,
-        _bucket_counts(current, bins, n_bins),
-        _bucket_counts(baseline, bins, n_bins),
+        bucket_counts(current, bins, n_bins),
+        bucket_counts(baseline, bins, n_bins),
         list(bins),
         n_bins=n_bins,
         eps=eps,
@@ -439,11 +271,6 @@ def psi_from_counts(
             .alias("verdict"),
         )
     )
-
-
-# public alias: the streaming sink and baseline builders use this to
-# pre-aggregate histograms the marker/PSI path consumes
-bucket_counts = _bucket_counts
 
 
 def category_drift(

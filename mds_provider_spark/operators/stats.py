@@ -40,6 +40,7 @@ def profile(
     probs: Sequence[float] = DEFAULT_PROBS,
     rsd: float = 0.02,
     exact_distinct: bool = False,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """One row per column: (column_name, n_rows, null_count, null_rate,
     min_val, max_val, approx_distinct, quantiles).
@@ -48,7 +49,10 @@ def profile(
     the DuckDB oracle path at test scale (HLL estimates are
     engine-specific); production keeps the sketch.
 
-    Single job: wide agg -> 1 row -> explode(array<struct>) back to long.
+    ``group_cols`` give one row per (group, column), group columns first.
+
+    Single job: wide agg -> 1 row per group -> explode(array<struct>)
+    back to long.
     """
     cols = list(cols or df.columns)
     aggs: list = [F.count(F.lit(1)).alias("_n")]
@@ -68,7 +72,7 @@ def profile(
                     f"_q_{c}"
                 )
             )
-    wide = df.agg(*aggs)
+    wide = df.groupBy(*group_cols).agg(*aggs)
 
     structs = []
     for c in cols:
@@ -85,7 +89,9 @@ def profile(
                 (F.col(f"_q_{c}") if numeric else F.lit(None).cast("array<double>")).alias("quantiles"),
             )
         )
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return wide.select(
+        *group_cols, F.explode(F.array(*structs)).alias("s")
+    ).select(*group_cols, "s.*")
 
 
 def salted_group_count(

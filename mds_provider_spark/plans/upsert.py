@@ -65,6 +65,10 @@ def upsert_parquet(
     raise); without it duplicates raise, because "one of them, dealer's
     choice" is how silent nondeterminism ships.
 
+    ``updates`` must carry exactly the table's columns and types (plus
+    ``version_col``, which may only rank duplicates): an extra, missing
+    or retyped column raises ``ValueError`` before anything is written.
+
     Returns ``{"parts": [...], "upserted": n, "existing_kept": m}``.
     """
     keys = list(key_cols)
@@ -131,6 +135,18 @@ def upsert_parquet(
             spark.read.parquet(table_path)
             .where(F.col(part_col).isin(touched))
         )
+        have = {f.name: f.dataType.simpleString() for f in updates.schema}
+        want = {f.name: f.dataType.simpleString() for f in existing.schema}
+        extra = sorted(set(have) - set(want) - {version_col})
+        missing = sorted(set(want) - set(have))
+        # the partition column's read type comes from directory names
+        retyped = sorted(f"{c} ({have[c]}, table {want[c]})"
+                         for c in set(have) & set(want) - {part_col}
+                         if have[c] != want[c])
+        if extra or missing or retyped:
+            raise ValueError(
+                f"updates do not match the table schema: extra {extra}, "
+                f"missing {missing}, retyped {retyped}")
         kept = existing.join(
             updates.select(*keys).distinct(), keys, "left_anti"
         )
@@ -171,3 +187,4 @@ def upsert_parquet(
                                 "existing_kept": n_kept})
     return {"parts": sorted(touched), "upserted": n_up,
             "existing_kept": n_kept}
+

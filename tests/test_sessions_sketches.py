@@ -263,6 +263,13 @@ def test_grouped_snapshot_shape(spark):
     assert a_v.null_rate == 0.5 and a_v.min_val == 1.0
     a_s = next(r for r in rows if r.g == "a" and r.column_name == "s")
     assert a_s.quantiles is None  # non-numeric: no quantile sketch
+    # each (group, column) row is the ungrouped snapshot of that group
+    fields = ("null_rate", "min_val", "max_val", "approx_distinct", "quantiles")
+    for r in rows:
+        (one,) = [s for s in DR.snapshot(
+            df.where(F.col("g") == r.g), ["v", "s"], "snap"
+        ).collect() if s.column_name == r.column_name]
+        assert [r[f] for f in fields] == [one[f] for f in fields], r
 
 
 # ------------------------------------------------------- snapshot diff

@@ -209,6 +209,48 @@ def test_streaming_committed_exactly_once_across_restart(spark, tmp_path):
     assert STR.committed_stream_violations(spark, out).count() == 2
 
 
+def test_streaming_replay_of_durable_batch_is_a_no_op(spark, tmp_path):
+    """The other crash window: a batch reached its commit marker but
+    Spark's own checkpoint commit was lost, so the restart replays it.
+    The replay must find the marker and return without rewriting
+    anything: same violation rows, same marker."""
+    import os
+
+    src = tmp_path / "src"
+    src.mkdir()
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    ddl = "clip_id string, sr_hz int, part_id int"
+    rs = R.RuleSet().add(R.is_in("sr_hz", [8000, 16000, 22050, 44100, 48000]))
+    spark.createDataFrame(
+        [("a", 16000, 0), ("b", 11025, 0)], ddl
+    ).coalesce(1).write.mode("overwrite").parquet(str(src / "f_a"))
+
+    def run():
+        stream = spark.readStream.schema(ddl).parquet(str(src / "f_*"))
+        STR.validate_stream_committed(stream, rs, out, ckpt).awaitTermination(120)
+
+    def state():
+        rows = sorted(
+            (r.rule_id, r.clip_id)
+            for r in STR.committed_stream_violations(spark, out).collect()
+        )
+        with open(os.path.join(out, "_commits", "00000.json")) as f:
+            return rows, json.load(f)["committed_unix"]
+
+    run()
+    before = state()
+    assert before[0] == [("bad_enum:sr_hz", "b")]
+    # drop Spark's commit of batch 0 (and its checksum): the restart
+    # then treats batch 0 as not done and replays it
+    spark_commit = os.path.join(ckpt, "commits", "0")
+    os.remove(spark_commit)
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    run()
+    assert os.path.exists(spark_commit)  # batch 0 was replayed
+    assert state() == before
+
+
 def test_committed_stream_verdicts_from_markers(spark, tmp_path):
     """Per-batch verdicts are derived from commit markers alone
     (metadata-only, no violation scan) — streaming twin of the batch

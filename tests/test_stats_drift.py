@@ -1,4 +1,4 @@
-"""Profiling, HLL sketches, t-digest, drift detection."""
+"""Profiling, HLL sketches, profile quantile accuracy, drift detection."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -49,11 +49,11 @@ def test_hll_sketch_merge_matches_union(spark, num_df):
     assert merged.estimate == direct.estimate  # sketch merge is lossless vs single pass
 
 
-def test_tdigest_close_to_exact(spark, num_df):
-    got = DR.tdigest_quantiles(num_df, "a", probs=[0.5]).collect()[0]
+def test_profile_quantile_close_to_exact(spark, num_df):
+    got = ST.profile(num_df, ["a"], probs=[0.5]).collect()[0].quantiles
     exact = num_df.agg(F.expr("percentile(a, 0.5)")).collect()[0][0]
-    assert got.prob == 0.5
-    assert got.quantile == pytest.approx(exact, abs=2.0)
+    assert len(got) == 1
+    assert got[0] == pytest.approx(exact, abs=2.0)
 
 
 def test_drift_detects_shift(spark):
@@ -79,19 +79,18 @@ def test_drift_detects_null_rate_change(spark):
     assert len(rows) == 1 and rows[0].nr_shift > 0.3
 
 
-def test_tdigest_two_level_merge_accuracy(spark):
-    """Many input partitions + small fanin exercises the bounded
-    intermediate merge; the result must stay within the sketch envelope
-    of the exact quantiles."""
+def test_profile_quantiles_merge_accuracy(spark):
+    """Many input partitions exercise the sketch's partial+final merge;
+    the result must stay within the sketch envelope of the exact
+    quantiles."""
+    probs = [0.25, 0.5, 0.75]
     df = spark.range(20000).select(
         (F.col("id") % 1000).cast("double").alias("a")
     ).repartition(50)
-    got = {r.prob: r.quantile
-           for r in DR.tdigest_quantiles(df, "a", probs=[0.25, 0.5, 0.75],
-                                         fanin=4).collect()}
+    got = ST.profile(df, ["a"], probs=probs).collect()[0].quantiles
     exact = df.agg(F.expr("percentile(a, array(0.25, 0.5, 0.75))")).collect()[0][0]
-    for p, e in zip([0.25, 0.5, 0.75], exact):
-        assert abs(got[p] - e) <= 0.02 * 1000, (p, got[p], e)
+    for p, g, e in zip(probs, got, exact):
+        assert abs(g - e) <= 0.02 * 1000, (p, g, e)
 
 
 # ---------------------------------------------- histogram drift (PSI/JS)

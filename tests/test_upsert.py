@@ -2,6 +2,7 @@
 idempotency, and the dup-key contracts."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -163,6 +164,33 @@ def test_upsert_duplicate_keys_contracts(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="nondeterministic"):
         upsert_parquet(spark, path, tied, ["k"], version_col="ver")
+
+
+@pytest.mark.parametrize("ddl, row, bad", [
+    ("k long, v string, part_id int, extra string", (0, "NEW", 0, "x"),
+     "extra ['extra']"),
+    ("k long, part_id int", (0, 0), "missing ['v']"),
+    ("k long, v double, part_id int", (0, 1.0, 0),
+     "retyped ['v (double, table string)']"),
+], ids=["extra", "missing", "retyped"])
+def test_upsert_schema_mismatch_raises_before_writing(spark, tmp_path, ddl,
+                                                      row, bad):
+    path = str(tmp_path / "ts")
+    _tbl(spark, path)
+
+    def files():
+        out = {}
+        for root, _, names in os.walk(path):
+            for n in names:
+                with open(os.path.join(root, n), "rb") as f:
+                    out[os.path.relpath(os.path.join(root, n), path)] = f.read()
+        return out
+
+    before = files()
+    updates = spark.createDataFrame([row], ddl)
+    with pytest.raises(ValueError, match=re.escape(bad)):
+        upsert_parquet(spark, path, updates, ["k"])
+    assert files() == before
 
 
 def test_upsert_commit_marker(spark, tmp_path):
