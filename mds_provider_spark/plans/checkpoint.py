@@ -14,9 +14,11 @@ idempotent per part_id, plus an atomic marker file per group):
     <out_dir>/
       violations/part_id=<p>/...   dynamic-overwrite per group (idempotent)
       verdicts/part_id=<p>/...
-      metrics/group_id=<g>/...     lineage rows (run_id, part_id, batch,
-                                   clips_per_sec, rows)
-      _commits/<g>.json            atomic rename -> group g is durable
+      clean/part_id=<p>/...        (the runner's emit_clean only)
+      _commits/<g>.json            atomic rename -> group g is durable; the
+                                   caller's ``extra`` rides along (the
+                                   runner's lineage: rows, violations,
+                                   clips_per_sec and per-part rows)
 
 A group's outputs are only trusted if its marker exists. Re-running an
 uncommitted group overwrites exactly its own part_id partitions — no

@@ -20,6 +20,10 @@ Per group the input filter is a partition-pruned scan (``part_id IN
 projection, PCM runs in Arrow batches, and the two joins are co-partition
 joins within the group. Hot-codec skew never enters a shuffle key here
 (codec is only aggregated in stats, where partial agg + AQE handle it).
+
+A group is bound by per-job latency, not rows: its writes count rows per
+part as observed metrics, verdicts and the marker's metrics rows come
+from those counts (10 Spark jobs per group, files reader + emit_clean).
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ import uuid
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from mds_provider_spark import schema as S
 from mds_provider_spark.functions import audio
@@ -38,6 +42,21 @@ from mds_provider_spark.operators import uniqueness as U
 from mds_provider_spark.plans.checkpoint import CommitLog
 from mds_provider_spark.rules import RuleSet, mds_clip_rules
 from mds_provider_spark.session import local_frame
+
+
+def _write_counted(df: DataFrame, parts: list[int], path: str,
+                   skip: str | None = None) -> dict[int, int]:
+    """Write ``df`` partitioned by part_id; return its rows per part,
+    observed in the write's final stage (each task's update applied once,
+    even on a stage retry). Rows where column ``skip`` is true are counted
+    but not written."""
+    seen = Observation()
+    out = df.observe(
+        seen, *[F.count_if(F.col("part_id") == p).alias(str(p)) for p in parts])
+    if skip is not None:
+        out = out.where(~F.col(skip)).drop(skip)
+    out.write.mode("overwrite").partitionBy("part_id").parquet(path)
+    return {p: seen.get[str(p)] for p in parts}
 
 
 def violation_layers(
@@ -83,7 +102,7 @@ class ValidationRun:
     min_snr_db: float = 30.0
     n_parts: int = 16
     group_size: int = 4  # part_ids per commit group
-    # "rows": generic mapInPandas over the DataFrame (works on any input).
+    # "rows": mapInArrow over the DataFrame (works on any input).
     # "files": Petastorm-style — workers read column-pruned parquet slices
     # directly (requires clips_path, a part_id-partitioned parquet dir);
     # avoids shipping audio bytes over the JVM->Python pipe.
@@ -99,8 +118,9 @@ class ValidationRun:
     # NO violation touched (row rules, duplicates, referential, PCM) to
     # <out>/clean, inside the same atomic group commit — the validated
     # copy downstream pipelines consume. Identity is required: rows with
-    # a NULL clip_id are never clean (they cannot be matched against the
+    # a NULL key are never clean (they cannot be matched against the
     # cross-row violation set, and any sane ruleset flags them anyway).
+    # Its write also counts the input rows the verdicts report.
     emit_clean: bool = False
     # schema contract: when set (StructType or a DataFrame to copy the
     # schema from), run() raises BEFORE any scan if the input's schema
@@ -164,12 +184,11 @@ class ValidationRun:
         done_parts = log.committed_parts()
         summary = {"run_id": self.run_id, "groups_run": 0, "groups_skipped": 0,
                    "rows": 0, "violations": 0}
-        ran = 0
         for gid, parts in self.groups():
             if set(parts) <= done_parts:
                 summary["groups_skipped"] += 1
                 continue
-            if stop_after_groups is not None and ran >= stop_after_groups:
+            if stop_after_groups is not None and summary["groups_run"] >= stop_after_groups:
                 break
             t0 = time.monotonic()
             sub = clips.where(F.col("part_id").isin(parts))
@@ -194,66 +213,38 @@ class ValidationRun:
             if set(parts) <= log.committed_parts():
                 summary["groups_skipped"] += 1
                 continue
-            log.clear_parts("violations", parts)
-            log.clear_parts("verdicts", parts)
-            # one write job for violations (dynamic overwrite = idempotent)
-            (viol.repartition("part_id")
-                 .write.mode("overwrite").partitionBy("part_id")
-                 .parquet(log.path("violations")))
-            # verdicts from the materialized violations — no rule re-eval,
-            # n_rows via a count-only scan (metadata when bucketed).
-            written = self._read(log.path("violations"), S.VIOLATIONS_SCHEMA).where(
-                F.col("part_id").isin(parts)
-            )
-            verd = self.ruleset.verdicts_from_violations(sub, written)
-            (verd.repartition("part_id")
-                 .write.mode("overwrite").partitionBy("part_id")
-                 .parquet(log.path("verdicts")))
+            for name in ("violations", "verdicts", "clean"):
+                log.clear_parts(name, parts)
+            # one shuffle partition per part bounds the violation files
+            n_viol = _write_counted(viol.repartition("part_id"), parts, log.path("violations"))
             if self.emit_clean:
-                # clean = group input minus every clip_id mentioned in the
-                # group's MATERIALIZED violations (rule + cross-row alike
-                # — `written` is the committed union, so the gate can't
-                # drift from what was reported). The violation key set is
-                # group-small; AQE broadcasts it when it fits. Inside the
-                # commit window: a crash before the marker re-clears and
-                # rewrites on resume, same as violations/verdicts.
-                log.clear_parts("clean", parts)
-                bad_keys = (
-                    written.select(F.col("clip_id").alias(key))
-                    .where(F.col(key).isNotNull()).distinct()
-                )
-                clean = (
-                    sub.where(F.col(key).isNotNull())
-                    .join(bad_keys, key, "left_anti")
-                )
-                (clean.repartition("part_id")
-                      .write.mode("overwrite").partitionBy("part_id")
-                      .parquet(log.path("clean")))
-            stats = {
-                r["part_id"]: (r["n_rows"], r["n_violations"])
-                for r in self._read(log.path("verdicts"), S.VERDICTS_SCHEMA)
-                .where(F.col("part_id").isin(parts))
-                .collect()
-            }
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            g_rows = sum(n for n, _ in stats.values())
-            g_viol = sum(v for _, v in stats.values())
-            rate = g_rows / elapsed
-            metrics = local_frame(
-                self.spark,
-                [
-                    (self.run_id, int(p), int(gid), float(rate), int(stats.get(p, (0, 0))[0]))
-                    for p in parts
-                ],
-                S.METRICS_SCHEMA,
-            ).withColumn("group_id", F.lit(int(gid)))
-            (metrics.coalesce(1)
-                    .write.mode("overwrite").partitionBy("group_id")
-                    .parquet(log.path("metrics")))
+                # clean = input minus every key named in the violations
+                # just WRITTEN (the gate can't drift from what was
+                # reported), flagged so the write counts n_rows first. A
+                # positive IN is a hash existence join (NOT IN: nested loop).
+                named = (self._read(log.path("violations"), S.VIOLATIONS_SCHEMA)
+                         .where(F.col("part_id").isin(parts) & F.col("clip_id").isNotNull())
+                         .select("clip_id"))
+                flag = F.col(key).isNull() | F.col(key).isin(named)
+                n_rows = _write_counted(sub.withColumn("_quarantined", flag), parts,
+                                        log.path("clean"), skip="_quarantined")
+            else:
+                counts = dict(sub.groupBy("part_id").count().collect())
+                n_rows = {p: counts.get(p, 0) for p in parts}
+            # a part with no input rows gets no verdict, and its violations
+            # (orphan transcripts) are not counted in the group's total
+            verdicts = [(p, "fail" if n_viol[p] else "pass", n_rows[p], n_viol[p])
+                        for p in parts if n_rows[p]]
+            (local_frame(self.spark, verdicts, S.VERDICTS_SCHEMA)
+                .write.mode("overwrite").partitionBy("part_id")
+                .parquet(log.path("verdicts")))
+            g_rows = sum(n_rows.values())
+            g_viol = sum(v[3] for v in verdicts)
+            rate = g_rows / max(time.monotonic() - t0, 1e-9)
             log.commit_group(gid, parts, self.run_id, batch=gid,
                              extra={"rows": g_rows, "violations": g_viol,
-                                    "clips_per_sec": rate})
-            ran += 1
+                                    "clips_per_sec": rate,
+                                    "part_rows": [[p, n_rows[p]] for p in parts]})
             summary["groups_run"] += 1
             summary["rows"] += g_rows
             summary["violations"] += g_viol
@@ -270,11 +261,12 @@ class ValidationRun:
             # `cur` is persisted so its full-table aggregate runs once,
             # for the findings and the snapshot write alike.
             cur = DR.snapshot(clips, list(self.drift_cols), self.run_id).persist()
-            findings = DR.drift_violations(cur, self.baseline_snapshot).cache()
-            summary["drift_findings"] = findings.count()
-            findings.write.mode("overwrite").parquet(log.path("drift"))
+            found = Observation()
+            (DR.drift_violations(cur, self.baseline_snapshot)
+                .observe(found, F.count(F.lit(1)).alias("n"))
+                .write.mode("overwrite").parquet(log.path("drift")))
+            summary["drift_findings"] = found.get["n"]
             cur.write.mode("overwrite").parquet(log.path("snapshot"))
-            findings.unpersist()
             cur.unpersist()
         return summary
 
@@ -287,7 +279,13 @@ class ValidationRun:
         return self._read(CommitLog(self.out_dir).path("verdicts"), S.VERDICTS_SCHEMA)
 
     def metrics(self) -> DataFrame:
-        return self._read(CommitLog(self.out_dir).path("metrics"), S.METRICS_SCHEMA)
+        """METRICS_SCHEMA rows plus ``group_id``, one per part of every
+        committed group, from the markers (none without ``part_rows``)."""
+        rows = [(m["run_id"], p, m["batch"], m["clips_per_sec"], n, g)
+                for g, m in sorted(CommitLog(self.out_dir).committed_groups().items())
+                for p, n in m.get("part_rows", ())]
+        return local_frame(self.spark, rows, T.StructType(
+            [*S.METRICS_SCHEMA.fields, T.StructField("group_id", T.IntegerType())]))
 
     def clean(self, schema=None) -> DataFrame:
         """The validated copy (requires ``emit_clean=True`` runs). Pass

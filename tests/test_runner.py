@@ -2,11 +2,14 @@
 resumes from last committed checkpoint without revalidating completed
 partitions)."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from mds_provider_spark import schema as S
 from mds_provider_spark.api import Validator
+from mds_provider_spark.plans.checkpoint import CommitLog
 from mds_provider_spark.plans.runner import ValidationRun
 from mds_provider_spark.rules import from_config
 from mds_provider_spark.sources import fixtures as FX
@@ -26,12 +29,12 @@ def data(spark):
     return clips, ts
 
 
-def _mk_run(spark, tmp, **kw):
+def _mk_run(spark, tmp, n_parts=PARTS, **kw):
     return ValidationRun(
         spark,
         out_dir=str(tmp),
         ref_wave_fn=FX.ref_waveform,
-        n_parts=PARTS,
+        n_parts=n_parts,
         group_size=2,
         **kw,
     )
@@ -189,6 +192,38 @@ def test_emit_clean_resume_consistent(spark, tmp_path, data):
     assert a == b
 
 
+@pytest.mark.parametrize("emit_clean", [True, False], ids=["clean", "no_clean"])
+def test_counts_reconcile_with_outputs(spark, tmp_path, data, emit_clean):
+    """The verdicts, metrics and clean copy the runner builds from the
+    counts its writes observe agree with the committed violations; a
+    group whose marker is missing lists no metrics rows."""
+    clips, ts = data
+    run = _mk_run(spark, tmp_path / "full", n_parts=PARTS + 2, emit_clean=emit_clean)
+    run.run(clips, ts)
+    cols = S.VERDICTS_SCHEMA.names
+    want = run.ruleset.verdicts_from_violations(clips, run.violations()).select(*cols)
+    got = run.verdicts().select(*cols)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    n_rows = {r.part_id: r.n_rows for r in run.verdicts().collect()}
+    metrics = {r.part_id: r.rows for r in run.metrics().collect()}
+    assert metrics == {p: n_rows.get(p, 0) for p in range(PARTS + 2)}
+    if emit_clean:
+        named = {r.clip_id for r in run.violations().select("clip_id").collect()}
+        ids = [r.clip_id for r in clips.select("clip_id").collect()]
+        n_named = sum(1 for c in ids if c is not None and c in named)
+        n_null = ids.count(None)
+        assert n_named > 0 and n_null > 0
+        assert sum(n_rows.values()) == run.clean().count() + n_named + n_null
+
+    # crash window: group 0's data is written, its marker is not
+    out = tmp_path / "crash"
+    _mk_run(spark, out, emit_clean=emit_clean).run(clips, ts, stop_after_groups=1)
+    log = CommitLog(str(out))
+    for name in os.listdir(log.commits_dir):
+        os.remove(os.path.join(log.commits_dir, name))
+    assert _mk_run(spark, out).metrics().count() == 0
+
+
 def test_expected_schema_gate_blocks_before_any_scan(spark, tmp_path, data):
     clips, ts = data
     ok = _mk_run(spark, tmp_path / "sg_ok", expected_schema=clips)
@@ -198,7 +233,6 @@ def test_expected_schema_gate_blocks_before_any_scan(spark, tmp_path, data):
     with pytest.raises(ValueError, match="dur_ms"):
         bad.run(drifted, ts)
     # nothing was written: the gate fired before any group committed
-    import os
     assert not os.path.exists(str(tmp_path / "sg_bad" / "violations"))
 
 

@@ -3,6 +3,8 @@ row-based strategy (same checkpointed run, same violations)."""
 
 import pyspark.sql.functions as F
 
+from mds_provider_spark import schema as S
+from mds_provider_spark.operators import drift as DR
 from mds_provider_spark.plans.runner import ValidationRun
 from mds_provider_spark.sources import fixtures as FX
 
@@ -92,3 +94,38 @@ def test_files_strategy_huge_duration_is_a_violation(spark, tmp_path):
     got = [tuple(r) for r in run.violations().where(F.col("rule_id") == pcm_rule)
            .select("clip_id", "message").collect()]
     assert got == [(victim, "SNR -inf dB < 30.0 dB")]
+
+
+def test_spark_jobs_per_group_and_drift_pass(spark, tmp_path):
+    """Pins the Spark jobs of one commit group and of the drift pass on
+    the files reader with emit_clean and a baseline snapshot: per group 7
+    for the violations write, 2 for the clean write (key-set broadcast,
+    write) and 1 for the verdicts; 5 for the drift pass."""
+    n = 2000
+    clips = FX.generate_clips(spark, n, n_parts=4, seed=7, faults=FX.default_fault_plan(n))
+    ts = FX.generate_transcripts(spark, n, n_parts=4, seed=7, missing_idx={11},
+                                 orphan_count=3)
+    clips_path, ts_path = str(tmp_path / "clips"), str(tmp_path / "ts")
+    for df, path in ((clips, clips_path), (ts, ts_path)):
+        df.repartition("part_id").write.partitionBy("part_id").parquet(path)
+    stored, ts = spark.read.parquet(clips_path), spark.read.parquet(ts_path)
+    snap = str(tmp_path / "snap")
+    DR.snapshot(stored, ["sr_hz", "dur_ms"], "baseline").write.parquet(snap)
+    baseline = spark.read.schema(S.SNAPSHOT_SCHEMA).parquet(snap)
+    sc = spark.sparkContext
+
+    def jobs(tag, stop=None, **kw):
+        run = ValidationRun(
+            spark, str(tmp_path / tag), ref_wave_fn=FX.ref_waveform, n_parts=4,
+            group_size=2, pcm_strategy="files", clips_path=clips_path,
+            emit_clean=True, **kw)
+        sc.setJobGroup(tag, tag)
+        try:
+            run.run(stored, ts, stop_after_groups=stop)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    one, two = jobs("one", stop=1), jobs("two", stop=2)
+    assert (one, two - one) == (10, 10)
+    assert jobs("drift", baseline_snapshot=baseline) - two == 5
