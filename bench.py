@@ -121,7 +121,6 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
             t0 = time.monotonic()
             pcm = audio.pcm_violations_over_files(
                 spark, CLIPS_DIR, FX.ref_waveform,
-                ref_wave_batch_fn=FX.ref_waveform_batch,
             ).cache()
             pcm.count()  # own job: python-only stage
             v = reduce(DataFrame.unionByName,

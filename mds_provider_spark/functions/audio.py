@@ -173,10 +173,9 @@ def snr_db(ref: np.ndarray, dec: np.ndarray) -> float:
     n = min(ref.size, dec.size)
     if n == 0 or ref.size != dec.size:
         return float("-inf")
-    # float64 throughout, INCLUDING the signal-power dot: the vectorized
-    # batch path casts to float64 before its einsum, and the two paths
-    # must be bit-identical so a clip within an ulp of the threshold
-    # can't flip violation status by (sr,dur)-group routing.
+    # float64 throughout, INCLUDING the signal-power dot: float32 sums
+    # round differently, so a clip within an ulp of the threshold would
+    # flip violation status, and every pinned violation set with it.
     ref64 = ref[:n].astype(np.float64)
     err = ref64 - dec[:n].astype(np.float64)
     p_sig = float(np.dot(ref64, ref64))
@@ -192,76 +191,16 @@ def snr_db(ref: np.ndarray, dec: np.ndarray) -> float:
 
 RefWaveFn = Callable[[str, int, int], np.ndarray]
 """(clip_id, sr_hz, dur_ms) -> reference float32 waveform of exactly
-``max(1, sr_hz * dur_ms // 1000)`` samples. The checker relies on this
-length: a clip whose decoded length differs gets ``SNR -inf`` without
-the reference being synthesized, so a huge ``dur_ms`` cannot make a
-worker allocate it."""
+``max(1, sr_hz * dur_ms // 1000)`` samples. ``_pcm_frame`` calls it at
+most once per decodable row and relies on this length: a clip whose
+decoded length differs gets ``SNR -inf`` without the reference being
+synthesized, so a huge ``dur_ms`` cannot make a worker allocate it."""
 
+# Read only by perfbench/trace.py:216, for its audio.rows_batch_path
+# counter (clips this short); it goes with the next change to the benchmark.
+_BATCH_MAX_SAMPLES = 256
 
-RefWaveBatchFn = Callable[[list, int, int], np.ndarray]
-"""(clip_ids, sr_hz, dur_ms) -> (k, n) float32 reference waveforms for a
-group of same-(sr,dur) clips. Optional fast path for SHORT clips: with
-~80-sample rows, per-row numpy overhead dominates and one matrix of
-sines + one vectorized SNR is ~2.5x faster; with 1000+-sample rows each
-row already saturates numpy's vector units and the big matrices only
-add memory traffic (measured SLOWER on this bandwidth-capped host), so
-the checker uses the matrix path only below _BATCH_MAX_SAMPLES."""
-
-_SNR_GROUP_CHUNK = 2048  # rows per vectorized group; bounds matrix memory
-_BATCH_MAX_SAMPLES = 256  # above this, per-row numpy is already saturated
-
-
-def _content_violations(
-    rows: list,
-    ref_wave_fn: RefWaveFn,
-    ref_wave_batch_fn: "RefWaveBatchFn | None",
-    min_snr_db: float,
-    rid: str,
-    emit,
-) -> None:
-    """SNR-check decodable rows [(cid, dec, sr, dur, part)], emitting
-    violations via ``emit(rule_id, cid, part, msg)``. With a batch ref
-    generator, rows are grouped by (sr, dur) — same waveform length —
-    and checked as one (k, n) matrix per chunk; otherwise scalar path."""
-    def scalar(subset) -> None:
-        for cid, dec, sr, dur, part in subset:
-            if dec.size != max(1, sr * dur // 1000):
-                got = float("-inf")  # length contract (RefWaveFn)
-            else:
-                got = snr_db(ref_wave_fn(cid, sr, dur), dec)
-            if not (got >= min_snr_db):
-                emit(rid, cid, part, f"SNR {got:.1f} dB < {min_snr_db:.1f} dB")
-
-    if ref_wave_batch_fn is None:
-        scalar(rows)
-        return
-    groups: dict[tuple[int, int], list] = {}
-    for r in rows:
-        groups.setdefault((r[2], r[3]), []).append(r)
-    for (sr, dur), grp in groups.items():
-        n = max(1, sr * dur // 1000)
-        if n > _BATCH_MAX_SAMPLES:
-            scalar(grp)
-            continue
-        for lo in range(0, len(grp), _SNR_GROUP_CHUNK):
-            chunk = grp[lo : lo + _SNR_GROUP_CHUNK]
-            ok = [r for r in chunk if r[1].size == n]
-            for cid, dec, _, _, part in (r for r in chunk if r[1].size != n):
-                emit(rid, cid, part, f"SNR -inf dB < {min_snr_db:.1f} dB")
-            if not ok:
-                continue
-            ref = ref_wave_batch_fn([r[0] for r in ok], sr, dur).astype(np.float64)
-            dec = np.stack([r[1] for r in ok]).astype(np.float64)
-            err = ref - dec
-            p_sig = np.einsum("ij,ij->i", ref, ref)
-            p_err = np.einsum("ij,ij->i", err, err)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                snr = 10.0 * np.log10(p_sig / p_err)
-            snr = np.where(p_err == 0.0, np.inf, snr)
-            snr = np.where((p_sig == 0.0) & (p_err > 0.0), -np.inf, snr)
-            for i in np.nonzero(~(snr >= min_snr_db))[0]:
-                cid, _, _, _, part = ok[int(i)]
-                emit(rid, cid, part, f"SNR {snr[i]:.1f} dB < {min_snr_db:.1f} dB")
+_FILES_BATCH_ROWS = 8192  # rows per parquet batch the files reader holds
 
 
 def _positive(v) -> bool:
@@ -282,19 +221,14 @@ _PCM_SCHEMA = (
 )
 
 
-def _pcm_frame(
-    rows,
-    arrow,
-    ref_wave_fn: RefWaveFn,
-    ref_wave_batch_fn: "RefWaveBatchFn | None",
-    min_snr_db: float,
-):
+def _pcm_frame(rows, arrow, ref_wave_fn: RefWaveFn, min_snr_db: float):
     """The PCM check over ``(cid, buf, sr, dur, codec, part)`` rows, as
     one Arrow batch typed by ``arrow`` (``arrow_schema(_PCM_SCHEMA)``) —
-    shared by both readers so they cannot drift. NULL bytes are
-    ``missing_field:bytes``; structurally invalid rows are skipped;
-    bytes that fail to decode are ``bad_pcm``; the rest get the SNR
-    check (``_content_violations``)."""
+    shared by both readers so they cannot drift. One pass, one decoded
+    clip held at a time: NULL bytes are ``missing_field:bytes``;
+    structurally invalid rows are skipped; bytes that fail to decode are
+    ``bad_pcm``; a decoded length other than ``RefWaveFn``'s is
+    ``SNR -inf``; the rest are checked by SNR against ``ref_wave_fn``."""
     rid = S.rule_id(S.BAD_PCM, "bytes")
     rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
     out = []
@@ -302,7 +236,6 @@ def _pcm_frame(
     def emit(r, c, p, m):
         out.append((r, c, "bytes", m, p))
 
-    decodable = []
     for cid, buf, sr, dur, codec, part in rows:
         if buf is None:
             emit(rid_null, cid, part, "required field bytes is missing")
@@ -314,9 +247,13 @@ def _pcm_frame(
         except Exception as exc:  # undecodable bytes ARE a violation
             emit(rid, cid, part, f"decode failed: {type(exc).__name__}")
             continue
-        decodable.append((cid, dec, int(sr), int(dur), part))
-    _content_violations(decodable, ref_wave_fn, ref_wave_batch_fn,
-                        min_snr_db, rid, emit)
+        sr, dur = int(sr), int(dur)
+        if dec.size != max(1, sr * dur // 1000):
+            got = float("-inf")  # length contract (RefWaveFn)
+        else:
+            got = snr_db(ref_wave_fn(cid, sr, dur), dec)
+        if not (got >= min_snr_db):
+            emit(rid, cid, part, f"SNR {got:.1f} dB < {min_snr_db:.1f} dB")
     return arrow_batch(out, arrow)
 
 
@@ -326,7 +263,6 @@ def pcm_violations(
     min_snr_db: float = 30.0,
     key_col: str = "clip_id",
     part_col: str = "part_id",
-    ref_wave_batch_fn: "RefWaveBatchFn | None" = None,
 ) -> DataFrame:
     """bad_pcm violations via mapInArrow (Arrow batches, BASELINE.json).
 
@@ -348,7 +284,7 @@ def pcm_violations(
     def check(batches: Iterator) -> Iterator:
         for rb in batches:
             yield _pcm_frame(zip(*(c.to_pylist() for c in rb.columns)), arrow,
-                             ref_wave_fn, ref_wave_batch_fn, min_snr_db)
+                             ref_wave_fn, min_snr_db)
 
     return clips.select(*cols).mapInArrow(check, _PCM_SCHEMA)
 
@@ -358,9 +294,7 @@ def pcm_violations_over_files(
     clips_dir: str,
     ref_wave_fn: RefWaveFn,
     min_snr_db: float = 30.0,
-    batch_size: int = 8192,
     parts: "list[int] | None" = None,
-    ref_wave_batch_fn: "RefWaveBatchFn | None" = None,
 ) -> DataFrame:
     """File-sliced PCM check: workers read parquet slices DIRECTLY.
 
@@ -401,11 +335,10 @@ def pcm_violations_over_files(
             for fid in ids.column(0).to_pylist():
                 path, part = files[fid]
                 pf = pq.ParquetFile(path)
-                for rb in pf.iter_batches(batch_size=batch_size, columns=cols):
+                for rb in pf.iter_batches(batch_size=_FILES_BATCH_ROWS, columns=cols):
                     rows = zip(*(rb.column(c).to_pylist() for c in cols),
                                [part] * rb.num_rows)
-                    yield _pcm_frame(rows, arrow, ref_wave_fn,
-                                     ref_wave_batch_fn, min_snr_db)
+                    yield _pcm_frame(rows, arrow, ref_wave_fn, min_snr_db)
 
     n = len(files)
     return spark.range(0, n, 1, max(n, 1)).mapInArrow(check, _PCM_SCHEMA)

@@ -94,11 +94,6 @@ class ValidationRun:
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     ruleset: RuleSet = field(default_factory=mds_clip_rules)
     ref_wave_fn: audio.RefWaveFn | None = None
-    # optional vectorized reference generator (audio.RefWaveBatchFn):
-    # short-clip groups get one matrix synthesis + one vectorized SNR
-    # (~2.5x below ~256 samples; longer rows stay on the scalar path,
-    # which already saturates numpy). Same violations either way.
-    ref_wave_batch_fn: "audio.RefWaveBatchFn | None" = None
     min_snr_db: float = 30.0
     n_parts: int = 16
     group_size: int = 4  # part_ids per commit group
@@ -132,8 +127,9 @@ class ValidationRun:
         """Read-back with an EXPLICIT schema: a group with zero violations
         writes an empty parquet dir (no footers), and schema inference
         would fail — with the declared schema an empty dir is just an
-        empty DataFrame."""
-        return self.spark.read.schema(schema).parquet(path)
+        empty DataFrame. The select restores the schema's column order:
+        Spark appends a partition column (``part_id``) last."""
+        return self.spark.read.schema(schema).parquet(path).select(*schema.fieldNames())
 
     def groups(self) -> list[tuple[int, list[int]]]:
         parts = list(range(self.n_parts))
@@ -150,12 +146,10 @@ class ValidationRun:
             return audio.pcm_violations_over_files(
                 self.spark, self.clips_path, self.ref_wave_fn,
                 self.min_snr_db, parts=parts,
-                ref_wave_batch_fn=self.ref_wave_batch_fn,
             )
         return audio.pcm_violations(
             clips, self.ref_wave_fn, self.min_snr_db,
             key_col=self.ruleset.key_col, part_col=self.ruleset.part_col,
-            ref_wave_batch_fn=self.ref_wave_batch_fn,
         )
 
     def run(

@@ -139,26 +139,6 @@ def _wave_params(clip_id: str) -> tuple[float, float]:
     return 80.0 + (h % 1000) / 1000.0 * 600.0, ((h >> 12) % 6283) / 1000.0
 
 
-def ref_waveform_batch(clip_ids: list, sr_hz: int, dur_ms: int) -> np.ndarray:
-    """Vectorized twin of ``ref_waveform`` for a group of SAME-(sr,dur)
-    clips: one (k, n) matrix of sines instead of k separate syntheses.
-    Identical operation order per element, so every row is bit-identical
-    to the scalar function (the SNR checker may use either)."""
-    n = max(1, int(sr_hz) * int(dur_ms) // 1000)
-    sr = int(sr_hz)
-    t = _time_base(sr, n)
-    params = np.asarray([_wave_params(c) for c in clip_ids], dtype=np.float64)
-    freqs = params[:, 0:1]   # (k, 1)
-    phases = params[:, 1:2]
-    w = 0.42 * np.sin(2 * np.pi * freqs * t + phases)
-    # Per-row memoized second harmonic: elementwise ops on identical
-    # float64 inputs, so each row matches the (k, n)-matrix form bit for
-    # bit while unique-(freq, sr, n) sines are synthesized only once.
-    for i in range(w.shape[0]):
-        w[i] += _second_harmonic(float(params[i, 0]), sr, n)
-    return w.astype(np.float32)
-
-
 # ------------------------------------------------------------ fault plan
 
 FAULT_KINDS = [

@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 
+from mds_provider_spark import schema as S
 from mds_provider_spark.functions import audio
 from mds_provider_spark.sources import fixtures as FX
 
@@ -63,39 +64,6 @@ def test_audio_features(spark):
         assert r.zero_crossings > 0
 
 
-def test_batch_snr_path_equals_row_path(spark):
-    """Vectorized (grouped matrix) SNR checking must emit the IDENTICAL
-    violation set as the scalar path, faults included."""
-    from mds_provider_spark.sources import fixtures as FX
-
-    n = 400
-    # short durations so some (sr,dur) groups fall under _BATCH_MAX_SAMPLES
-    # (matrix path) while others stay scalar — both paths exercised
-    clips = FX.generate_clips(spark, n, n_parts=4, seed=42,
-                              faults=FX.default_fault_plan(n),
-                              sr_choices=[8000], dur_choices=[10, 20, 60]).cache()
-    row = sorted(
-        (r.rule_id, r.clip_id) for r in
-        audio.pcm_violations(clips, FX.ref_waveform).collect()
-    )
-    batch = sorted(
-        (r.rule_id, r.clip_id) for r in
-        audio.pcm_violations(clips, FX.ref_waveform,
-                             ref_wave_batch_fn=FX.ref_waveform_batch).collect()
-    )
-    assert row == batch and len(row) >= 2  # bad_pcm + null_bytes present
-    clips.unpersist()
-
-
-def test_ref_waveform_batch_bit_identical(spark):
-    from mds_provider_spark.sources import fixtures as FX
-
-    ids = [FX.clip_id_at(7, i) for i in range(5)]
-    batch = FX.ref_waveform_batch(ids, 8000, 120)
-    for i, cid in enumerate(ids):
-        assert np.array_equal(batch[i], FX.ref_waveform(cid, 8000, 120))
-
-
 def test_ref_waveform_memo_bit_identical():
     """The per-process second-harmonic memo must not change a single bit
     vs synthesizing both harmonics inline (the generator/checker/oracle
@@ -118,9 +86,6 @@ def test_ref_waveform_memo_bit_identical():
             want = ref_inline(cid, sr, dur)
             assert np.array_equal(got, want)
             assert np.array_equal(again, want)
-        batch = FX.ref_waveform_batch(ids, sr, dur)
-        for i, cid in enumerate(ids):
-            assert np.array_equal(batch[i], ref_inline(cid, sr, dur))
     with pytest.raises(ValueError):  # memoized arrays are read-only
         next(iter(FX._H2_MEMO.values()))[0] = 0.0
 
@@ -494,13 +459,17 @@ def test_audio_embedding_clips_skip_contract(spark, name):
 def test_audio_has_one_decode_site():
     """No Spark needed: in audio.py only the feature UDFs' shared loop
     (``_map_decoded``) and the PCM check (``_pcm_frame``) call
-    ``decode``, and no UDF goes back to a pandas batch loop of its own."""
+    ``decode``, only ``_pcm_frame`` calls ``snr_db`` and ``ref_wave_fn``
+    (one SNR site, no second PCM path), and no UDF goes back to a pandas
+    batch loop of its own."""
     import ast
     import pathlib
 
     path = pathlib.Path(audio.__file__)
     src = path.read_text()
     assert "mapInPandas" not in src
+    allowed = {"decode": ("_map_decoded", "_pcm_frame"),
+               "snr_db": ("_pcm_frame",), "ref_wave_fn": ("_pcm_frame",)}
     callers = []
 
     def walk(node, fn):
@@ -509,11 +478,38 @@ def test_audio_has_one_decode_site():
                 walk(child, fn or child.name)  # nested defs count as their outer function
                 continue
             if (isinstance(child, ast.Call) and isinstance(child.func, ast.Name)
-                    and child.func.id == "decode"):
-                callers.append((child.lineno, fn))
+                    and child.func.id in allowed):
+                callers.append((child.func.id, child.lineno, fn))
             walk(child, fn)
 
     walk(ast.parse(src, str(path)), None)
-    stray = [f"audio.py:{line} in {fn}" for line, fn in callers
-             if fn not in ("_map_decoded", "_pcm_frame")]
-    assert callers and not stray, "decode( outside the two decode loops: " + ", ".join(stray)
+    assert {name for name, _, _ in callers} == set(allowed)
+    stray = [f"{name}( at audio.py:{line} in {fn}" for name, line, fn in callers
+             if fn not in allowed[name]]
+    assert not stray, "calls outside their one site: " + ", ".join(stray)
+
+
+def test_pcm_frame_checks_one_row_at_a_time():
+    """No Spark needed: ``_pcm_frame`` finishes row i (decode, reference,
+    SNR) before it draws row i+1, so a task holds one decoded clip, not a
+    whole Arrow batch of them."""
+    sr, dur = 8000, 20
+    ids = [FX.clip_id_at(5, i) for i in range(6)]
+    events = []
+
+    def rows():
+        for i, cid in enumerate(ids):
+            events.append(("draw", cid))
+            wave = FX.ref_waveform(cid, sr, dur)
+            if i == 3:  # one content fault among the rows
+                wave = -wave
+            yield cid, audio.encode_pcm_s16le(wave), sr, dur, "pcm_s16le", 0
+
+    def ref(cid, sr_hz, dur_ms):
+        events.append(("ref", cid))
+        return FX.ref_waveform(cid, sr_hz, dur_ms)
+
+    # VIOLATIONS_SCHEMA has _PCM_SCHEMA's fields and converts without a JVM
+    out = audio._pcm_frame(rows(), audio.arrow_schema(S.VIOLATIONS_SCHEMA), ref, 30.0)
+    assert events == [(kind, cid) for cid in ids for kind in ("draw", "ref")]
+    assert out.column("clip_id").to_pylist() == [ids[3]]

@@ -5,6 +5,7 @@ partitions)."""
 import os
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
 from mds_provider_spark import schema as S
@@ -200,10 +201,9 @@ def test_counts_reconcile_with_outputs(spark, tmp_path, data, emit_clean):
     clips, ts = data
     run = _mk_run(spark, tmp_path / "full", n_parts=PARTS + 2, emit_clean=emit_clean)
     run.run(clips, ts)
-    cols = S.VERDICTS_SCHEMA.names
-    want = run.ruleset.verdicts_from_violations(clips, run.violations()).select(*cols)
-    got = run.verdicts().select(*cols)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert run.verdicts().columns == S.VERDICTS_SCHEMA.fieldNames()
+    want = run.ruleset.verdicts_from_violations(clips, run.violations())
+    assert sorted(map(tuple, run.verdicts().collect())) == sorted(map(tuple, want.collect()))
     n_rows = {r.part_id: r.n_rows for r in run.verdicts().collect()}
     metrics = {r.part_id: r.rows for r in run.metrics().collect()}
     assert metrics == {p: n_rows.get(p, 0) for p in range(PARTS + 2)}
@@ -214,6 +214,8 @@ def test_counts_reconcile_with_outputs(spark, tmp_path, data, emit_clean):
         n_null = ids.count(None)
         assert n_named > 0 and n_null > 0
         assert sum(n_rows.values()) == run.clean().count() + n_named + n_null
+        part_first = T.StructType(sorted(clips.schema, key=lambda f: f.name != "part_id"))
+        assert run.clean(part_first).columns == part_first.fieldNames()
 
     # crash window: group 0's data is written, its marker is not
     out = tmp_path / "crash"

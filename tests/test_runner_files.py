@@ -2,6 +2,7 @@
 row-based strategy (same checkpointed run, same violations)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from mds_provider_spark import schema as S
 from mds_provider_spark.operators import drift as DR
@@ -35,9 +36,14 @@ def _assert_same(rows_run, files_run):
             == sorted(map(tuple, files_run.verdicts().collect())))
 
 
-def test_files_strategy_matches_rows(spark, tmp_path):
+@pytest.mark.parametrize("shape", [
+    {},
+    # 80-480 samples per clip: the short-clip regime
+    {"sr_choices": [8000], "dur_choices": [10, 20, 60]},
+], ids=["default", "short_clips"])
+def test_files_strategy_matches_rows(spark, tmp_path, shape):
     faults = FX.default_fault_plan(N)
-    clips = FX.generate_clips(spark, N, n_parts=PARTS, seed=42, faults=faults)
+    clips = FX.generate_clips(spark, N, n_parts=PARTS, seed=42, faults=faults, **shape)
     ts = FX.generate_transcripts(spark, N, n_parts=PARTS, seed=42)
     clips_path = str(tmp_path / "clips")
     clips.repartition("part_id").write.mode("overwrite").partitionBy("part_id").parquet(clips_path)
