@@ -1,8 +1,8 @@
 """Benchmark harness — prints ONE JSON line per the driver contract.
 
 Headline metric (BASELINE.md): validated clips/sec — the full engine
-(row rules + salted uniqueness + referential + transcript equality +
-Arrow-batched PCM/SNR decode checks) over the deterministic synthetic
+(row rules, uniqueness, referential and transcript equality in one keyed
+pass, plus Arrow-batched PCM/SNR decode checks) over the deterministic synthetic
 audio table. Run at two parallelism levels (local[N] vs local[4N],
 default 1 vs 4 — see the sandbox-noise note below) on the SAME
 pre-materialized input as the sandbox substitute for N vs 4N executors;
@@ -92,13 +92,9 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
     Warm repeats, best-of: fresh-JVM first iterations are dominated by
     JIT + python-worker spawn, which a long-lived cluster amortizes.
     """
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-
     from mds_provider_spark import rules as R
     from mds_provider_spark.functions import audio
-    from mds_provider_spark.plans.runner import violation_layers
+    from mds_provider_spark.plans.runner import keyed_verdicts, keyed_violations
     from mds_provider_spark.sources import fixtures as FX
 
     spark = _spark(parallelism)
@@ -108,13 +104,11 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
         rs = R.mds_clip_rules()
 
         def rules_only():
-            """JVM-only path (no Python stage): rule projection + salted
-            uniqueness + referential joins — isolates codegen scaling."""
+            """JVM-only path (no Python stage): the keyed plan without PCM
+            (rule projection, windowed uniqueness, one transcript join) —
+            isolates codegen scaling."""
             t0 = time.monotonic()
-            layers = violation_layers(rs, clips, ts)
-            v = reduce(DataFrame.unionByName, (
-                layers[k] for k in ("rules", "uniqueness", "referential")))
-            v.count()
+            keyed_violations(rs, clips, ts).count()
             return time.monotonic() - t0
 
         def once():
@@ -123,14 +117,11 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
                 spark, CLIPS_DIR, FX.ref_waveform,
             ).cache()
             pcm.count()  # own job: python-only stage
-            v = reduce(DataFrame.unionByName,
-                       violation_layers(rs, clips, ts, pcm).values()).cache()
-            n_viol = v.count()
-            verd = rs.verdicts_from_violations(clips, v).collect()
+            n_viol = keyed_violations(rs, clips, ts, pcm).count()
+            verd = keyed_verdicts(rs, clips, ts, pcm).collect()
             n_rows = sum(r.n_rows for r in verd)
             elapsed = time.monotonic() - t0
             pcm.unpersist()
-            v.unpersist()
             return elapsed, n_rows, n_viol
         runs = [once() for _ in range(repeats)]
         elapsed, n_rows, n_viol = min(runs, key=lambda r: r[0])

@@ -11,19 +11,20 @@ Maps the reference's entry points (SURVEY.md §3) onto the engine:
 
 One object, three calls: build rules, validate, inspect. ``Validator``
 and ``ValidationRun`` build their violations with the same
-``plans.runner.violation_layers``, so both report the same rows.
+``plans.runner.keyed_violations``, so both report the same rows;
+``Validator``'s verdicts count the same keyed frame
+(``plans.runner.keyed_verdicts``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame
 
 from mds_provider_spark import rules as R
 from mds_provider_spark.functions import audio
-from mds_provider_spark.plans.runner import violation_layers
+from mds_provider_spark.plans.runner import keyed_verdicts, keyed_violations
 
 
 @dataclass
@@ -132,7 +133,6 @@ class Validator:
                                  key_col=rs.key_col, part_col=rs.part_col)
             if self.ref_wave_fn is not None else None
         )
-        v = reduce(DataFrame.unionByName,
-                   violation_layers(rs, df, transcripts, pcm).values())
-        verd = rs.verdicts_from_violations(df, v)
-        return ValidationResult(violations=v, verdicts=verd)
+        return ValidationResult(
+            violations=keyed_violations(rs, df, transcripts, pcm),
+            verdicts=keyed_verdicts(rs, df, transcripts, pcm))

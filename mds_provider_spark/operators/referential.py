@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from mds_provider_spark import schema as S
+from mds_provider_spark.rules import Rule
 from mds_provider_spark.session import local_frame
 
 
@@ -29,6 +30,30 @@ def orphans(
     if broadcast_right:
         rhs = F.broadcast(rhs)
     return left.join(rhs, key, "left_anti")
+
+
+_ORPHAN_MESSAGES = {"clips": "clip has no transcript row",
+                    "transcripts": "transcript has no clip row"}
+
+
+def orphan_rule(key: str, side: str, predicate) -> Rule:
+    """The ``referential_orphan`` rule for an orphan in table ``side``
+    (``clips`` or ``transcripts``, its ``column_name``), shared by
+    ``referential_violations`` and the runner's keyed plan."""
+    return Rule(S.rule_id(S.REFERENTIAL_ORPHAN, key), side, _ORPHAN_MESSAGES[side], predicate)
+
+
+def mismatch_rule(predicate) -> Rule:
+    """The ``transcript_mismatch`` rule, shared by
+    ``transcript_mismatch_violations`` and the runner's keyed plan."""
+    return Rule(S.rule_id(S.TRANSCRIPT_MISMATCH, "transcript"), "transcript",
+                "transcript differs from reference", predicate)
+
+
+def differs(transcript: str, reference: str):
+    """Transcript equality: a present transcript that is not null-safe
+    equal to the reference. NULL is missing_field's job."""
+    return F.col(transcript).isNotNull() & ~F.col(transcript).eqNullSafe(F.col(reference))
 
 
 def referential_violations(
@@ -55,7 +80,6 @@ def referential_violations(
     the join and drop immediately — no blowup for the near-unique id
     keys this audit exists for.
     """
-    rid = S.rule_id(S.REFERENTIAL_ORPHAN, key)
     c = clips.select(
         F.col(key).alias("_ck"),
         F.col(part_col).alias("_cp"),
@@ -67,16 +91,18 @@ def referential_violations(
         F.lit(True).alias("_tpres"),
     )
     j = c.join(t, c["_ck"] == t["_tk"], "full_outer")
+    in_clips = orphan_rule(key, "clips", lambda: F.col("_tpres").isNull())
+    in_ts = orphan_rule(key, "transcripts", lambda: F.col("_cpres").isNull())
     # one filter + one side-conditional projection (NOT a union of two
     # filters over j — that would evaluate the join twice)
-    is_clip_orphan = F.col("_tpres").isNull()
-    return j.where(is_clip_orphan | F.col("_cpres").isNull()).select(
-        F.lit(rid).alias("rule_id"),
+    is_clip_orphan = in_clips.predicate()
+    return j.where(is_clip_orphan | in_ts.predicate()).select(
+        F.lit(in_clips.rule_id).alias("rule_id"),
         F.when(is_clip_orphan, F.col("_ck")).otherwise(F.col("_tk")).alias("clip_id"),
-        F.when(is_clip_orphan, F.lit("clips"))
-        .otherwise(F.lit("transcripts")).alias("column_name"),
-        F.when(is_clip_orphan, F.lit("clip has no transcript row"))
-        .otherwise(F.lit("transcript has no clip row")).alias("message"),
+        F.when(is_clip_orphan, F.lit(in_clips.column))
+        .otherwise(F.lit(in_ts.column)).alias("column_name"),
+        F.when(is_clip_orphan, F.lit(in_clips.message))
+        .otherwise(F.lit(in_ts.message)).alias("message"),
         F.when(is_clip_orphan, F.col("_cp")).otherwise(F.col("_tp")).alias("part_id"),
     )
 
@@ -90,23 +116,19 @@ def transcript_mismatch_violations(
     """Per-row transcript equality vs the reference text (BASELINE input_hint).
 
     Equi-join on the key (sort-merge at scale; both sides are the full
-    tables) then a null-safe inequality. ``eqNullSafe`` keeps NULL
-    transcripts out of this rule — NULL is missing_field's job.
+    tables) then a null-safe inequality (``differs``).
     """
-    rid = S.rule_id(S.TRANSCRIPT_MISMATCH, "transcript")
+    r = mismatch_rule(lambda: differs("transcript", "transcript_ref"))
     t = transcripts.select(key, "transcript_ref")
     return (
         clips.select(key, part_col, "transcript")
         .join(t, key, "inner")
-        .where(
-            F.col("transcript").isNotNull()
-            & ~F.col("transcript").eqNullSafe(F.col("transcript_ref"))
-        )
+        .where(r.predicate())
         .select(
-            F.lit(rid).alias("rule_id"),
+            F.lit(r.rule_id).alias("rule_id"),
             F.col(key).alias("clip_id"),
-            F.lit("transcript").alias("column_name"),
-            F.lit("transcript differs from reference").alias("message"),
+            F.lit(r.column).alias("column_name"),
+            F.lit(r.message).alias("message"),
             F.col(part_col).alias("part_id"),
         )
     )

@@ -23,6 +23,17 @@ reader wants the shape visible in the code.
 The final duplicate set is tiny relative to input, so every downstream
 join against it broadcasts.
 
+The product path (``plans.runner.keyed_violations``) does not use the
+semi-join below: there each unique key's duplicate count is a
+``count(1)`` window over the key's exchange, which the transcript join
+shares, so the table is shuffled once for every cross-row check. That is
+skew-safe in a different way: a hot key goes to one task, but the
+window's and the join's row buffers spill past a row threshold and the
+plan builds no per-key array, so the key costs disk, not task memory
+(tests/test_keyed.py runs a key repeated 10^5 times). The operators here
+stay the stand-alone form, and the reference the keyed plan is tested
+against.
+
 Broadcast contract: NO forced hint anywhere in this module. These
 operators exist precisely because a table might be corrupt — and on a
 corrupt or wrongly-merged 10^12-row table the duplicated-key set is
@@ -43,6 +54,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from mds_provider_spark import schema as S
+from mds_provider_spark.rules import Rule
 
 
 def duplicate_keys(df: DataFrame, cols: Sequence[str], salt_partitions: int | None = None) -> DataFrame:
@@ -94,6 +106,15 @@ def duplicate_exemplars(
     )
 
 
+def duplicate_rule(cols: Sequence[str], predicate) -> Rule:
+    """The ``duplicate_id`` rule of unique key ``cols`` (id, column and
+    message), shared by ``duplicate_violations`` and the runner's keyed
+    plan, where ``predicate`` reads the row's windowed duplicate count."""
+    name = ",".join(cols)
+    return Rule(S.rule_id(S.DUPLICATE_ID, name), name,
+                f"duplicate key on ({', '.join(cols)})", predicate)
+
+
 def duplicate_violations(
     df: DataFrame,
     cols: Sequence[str],
@@ -111,14 +132,14 @@ def duplicate_violations(
     """
     cols = list(cols)
     dup = duplicate_keys(df, cols).select(*cols)
-    rid = S.rule_id(S.DUPLICATE_ID, ",".join(cols))
+    r = duplicate_rule(cols, lambda: F.lit(True))  # the semi-join is the predicate
     return (
         df.join(dup, cols, "left_semi")
         .select(
-            F.lit(rid).alias("rule_id"),
+            F.lit(r.rule_id).alias("rule_id"),
             F.col(key_col).alias("clip_id"),
-            F.lit(",".join(cols)).alias("column_name"),
-            F.lit(f"duplicate key on ({', '.join(cols)})").alias("message"),
+            F.lit(r.column).alias("column_name"),
+            F.lit(r.message).alias("message"),
             F.col(part_col).alias("part_id"),
         )
     )

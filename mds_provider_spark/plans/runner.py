@@ -16,14 +16,16 @@ computed by the fixture generator here). Consequences:
     and every cross-row check still sees all the rows it needs.
 
 Per group the input filter is a partition-pruned scan (``part_id IN
-(...)`` prunes files/Iceberg manifests), the row-rule pass is one codegen
-projection, PCM runs in Arrow batches, and the two joins are co-partition
-joins within the group. Hot-codec skew never enters a shuffle key here
-(codec is only aggregated in stats, where partial agg + AQE handle it).
+(...)`` prunes files/Iceberg manifests), PCM runs in Arrow batches, and
+every other check is one keyed plan (``keyed_violations``): the rule
+projection, the duplicate-count windows and one full-outer transcript
+join, with one exchange per table. Hot-codec skew never enters a shuffle
+key here (codec is only aggregated in stats, where partial agg + AQE
+handle it).
 
 A group is bound by per-job latency, not rows: its writes count rows per
 part as observed metrics, verdicts and the marker's metrics rows come
-from those counts (10 Spark jobs per group, files reader + emit_clean).
+from those counts (7 Spark jobs per group, files reader + emit_clean).
 """
 
 from __future__ import annotations
@@ -33,7 +35,8 @@ import uuid
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql import (Column, DataFrame, Observation, SparkSession, Window,
+                         functions as F, types as T)
 
 from mds_provider_spark import schema as S
 from mds_provider_spark.functions import audio
@@ -59,32 +62,110 @@ def _write_counted(df: DataFrame, parts: list[int], path: str,
     return {p: seen.get[str(p)] for p in parts}
 
 
-def violation_layers(
+def _keyed(ruleset: RuleSet, clips: DataFrame,
+           transcripts: DataFrame | None) -> DataFrame:
+    """The keyed plan: one row per clip row, or per joined (clip,
+    transcript) row, as ``(clip_id, part_id, _row, _hits)``. ``_row`` is
+    true on exactly one row per clip row; ``_hits`` holds every finding
+    of that row: the row rules, a ``duplicate_id`` per unique key,
+    ``referential_orphan`` in either direction and ``transcript_mismatch``.
+
+    The clips are projected once. A unique key's duplicate count is a
+    ``count(1)`` window over its columns; keys containing ``key_col``
+    share the key's exchange with the full-outer transcript join, so each
+    table is shuffled once (a key without ``key_col`` pays its own
+    exchange, before the shared one). A NULL key component is never a
+    duplicate and a NULL key never matches (a one-sided orphan). Several
+    transcript rows per key are numbered by a ``row_number`` window, and
+    the clip's own findings ride only the row numbered 1 (or the unmatched
+    one): no per-key array, so a hot key costs spillable window and join
+    buffers, never task memory. Without transcripts and unique keys the
+    plan is the rule projection alone, shuffle-free.
+    """
+    key, part = ruleset.key_col, ruleset.part_col
+    own = [uk for uk in ruleset.unique_keys if key not in uk.cols]
+    shared = [uk for uk in ruleset.unique_keys if key in uk.cols]
+    keep = [key, part, *(["transcript"] if transcripts is not None else []),
+            *(col for uk in own + shared for col in uk.cols)]
+    c = clips.select(*dict.fromkeys(keep), ruleset.hits_column().alias("_hits"),
+                     F.lit(True).alias("_c"))
+
+    def counted(df: DataFrame, uks: list, first: int) -> DataFrame:
+        return df.select("*", *[
+            reduce(Column.__and__, [F.col(col).isNotNull() for col in uk.cols],
+                   F.count(F.lit(1)).over(Window.partitionBy(*uk.cols)) > 1)
+            .alias(f"_d{first + i}") for i, uk in enumerate(uks)])
+
+    c = counted(c, own, 0)
+    if shared or transcripts is not None:
+        c = c.repartition(key)
+    c = counted(c, shared, len(own))
+    cid, pid, row, cross = F.col(key), F.col(part), F.lit(True), []
+    if transcripts is not None:
+        t = transcripts.select(F.col(key).alias("_tk"), F.col(part).alias("_tp"),
+                                F.col("transcript_ref").alias("_tref"))
+        t = t.withColumn("_tn", F.row_number().over(
+            Window.partitionBy("_tk").orderBy("_tref")))
+        c = c.join(t, F.col(key) == F.col("_tk"), "full_outer")
+        present, matched = F.col("_c").isNotNull(), F.col("_tn").isNotNull()
+        cid = F.when(present, cid).otherwise(F.col("_tk"))
+        pid = F.when(present, pid).otherwise(F.col("_tp"))
+        row = present & (~matched | (F.col("_tn") == 1))
+        cross = [REF.orphan_rule(key, "clips", lambda: present & ~matched),
+                 REF.orphan_rule(key, "transcripts", lambda: ~present),
+                 REF.mismatch_rule(lambda: matched & REF.differs("transcript", "_tref"))]
+    cross += [U.duplicate_rule(uk.cols, lambda i=i: row & F.col(f"_d{i}"))
+              for i, uk in enumerate(own + shared)]
+    hits = F.when(row, F.col("_hits")).otherwise(F.expr(f"cast(array() as {RuleSet._HIT_TYPE})"))
+    if cross:
+        hits = F.concat(hits, F.filter(F.array(*[r.hit() for r in cross]), lambda x: x.isNotNull()))
+    return c.select(cid.alias("clip_id"), pid.alias("part_id"), row.alias("_row"),
+                    hits.alias("_hits"))
+
+
+def keyed_violations(
     ruleset: RuleSet,
     clips: DataFrame,
     transcripts: DataFrame | None = None,
     pcm: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """The one violation builder: layer name -> violations, in order
-    ``rules``, ``uniqueness`` (one check per ``ruleset.unique_keys``
-    entry), ``referential`` and ``transcript`` (with transcripts only),
-    ``audio`` (the PCM frame the caller built with its reader). Every
-    layer keys on ``ruleset.key_col``/``part_col``; callers union the
-    values once."""
-    key, part = ruleset.key_col, ruleset.part_col
-    layers = {"rules": ruleset.violations(clips)}
-    dups = [U.duplicate_violations(clips, list(uk.cols), key_col=key, part_col=part)
-            for uk in ruleset.unique_keys]
-    if dups:
-        layers["uniqueness"] = reduce(DataFrame.unionByName, dups)
-    if transcripts is not None:
-        layers["referential"] = REF.referential_violations(
-            clips, transcripts, key=key, part_col=part)
-        layers["transcript"] = REF.transcript_mismatch_violations(
-            clips, transcripts, key=key, part_col=part)
+) -> DataFrame:
+    """The one violation builder: every finding of the keyed plan
+    (``_keyed``) as VIOLATIONS_SCHEMA rows, plus the PCM frame the caller
+    built with its reader. The same rows as the union of
+    ``ruleset.violations`` and the stand-alone ``duplicate_violations``,
+    ``referential_violations`` and ``transcript_mismatch_violations``,
+    from one exchange per table."""
+    v = (_keyed(ruleset, clips, transcripts)
+         .select("clip_id", "part_id", F.explode("_hits").alias("h"))
+         .select("h.rule_id", "clip_id", "h.column_name", "h.message", "part_id"))
+    return v if pcm is None else v.unionByName(pcm)
+
+
+def keyed_verdicts(
+    ruleset: RuleSet,
+    clips: DataFrame,
+    transcripts: DataFrame | None = None,
+    pcm: DataFrame | None = None,
+) -> DataFrame:
+    """VERDICTS_SCHEMA rows from the same keyed plan: per part, its clip
+    rows and the findings ``keyed_violations`` reports, PCM rows counted
+    in; a part with no clip rows (only orphan transcripts) gets no
+    verdict. Equal to ``ruleset.verdicts_from_violations`` over those
+    violations, with one aggregation instead of a second scan."""
+    counts = _keyed(ruleset, clips, transcripts).select(
+        "part_id", F.col("_row").cast("long").alias("n_rows"),
+        F.size("_hits").cast("long").alias("n_violations"))
     if pcm is not None:
-        layers["audio"] = pcm
-    return layers
+        counts = counts.unionByName(pcm.select(
+            "part_id", F.lit(0).cast("long").alias("n_rows"),
+            F.lit(1).cast("long").alias("n_violations")))
+    return (counts.groupBy("part_id")
+            .agg(F.sum("n_rows").alias("n_rows"), F.sum("n_violations").alias("n_violations"))
+            .where(F.col("n_rows") > 0)
+            .select("part_id",
+                    F.when(F.col("n_violations") > 0, F.lit("fail"))
+                    .otherwise(F.lit("pass")).alias("status"),
+                    "n_rows", "n_violations"))
 
 
 @dataclass
@@ -193,8 +274,7 @@ class ValidationRun:
             )
             pcm = (self._pcm_violations(sub, parts)
                    if self.ref_wave_fn is not None else None)
-            viol = reduce(DataFrame.unionByName, violation_layers(
-                self.ruleset, sub, sub_t, pcm).values())
+            viol = keyed_violations(self.ruleset, sub, sub_t, pcm)
             # clear the group's partitions first: a crashed attempt may
             # have left rows in a part whose retry writes nothing, and
             # dynamic overwrite would keep them (checkpoint.clear_parts).

@@ -526,10 +526,10 @@ def unique_key(cols: str | Sequence[str]) -> "UniqueKey":
 class UniqueKey:
     """Cross-row uniqueness; compiled separately (needs a shuffle).
 
-    Executed as the salted two-stage hash aggregation mandated by
-    BASELINE.json (see operators/uniqueness.py): partial counts per
-    (input-partition, key) map-side, then final merge per key — identical
-    hot keys never concentrate on one reducer in stage 1.
+    On the product path a ``count(1)`` window over the key's exchange
+    (``plans.runner.keyed_violations``); stand-alone, the two-stage hash
+    aggregation of operators/uniqueness.py. Both report every row of a
+    duplicated non-NULL key.
     """
 
     cols: tuple[str, ...]
@@ -589,9 +589,10 @@ class RuleSet:
         """Row-level violations in the canonical VIOLATIONS_SCHEMA order.
 
         Does NOT include cross-row (unique/referential) violations — those
-        need shuffles and are produced by their operators, then unioned by
-        the runner. Keeping this path shuffle-free means it pipelines with
-        the scan at 100 TB.
+        need shuffles and come from the runner's keyed plan
+        (``plans.runner.keyed_violations``), which is this projection
+        alone when there are none. Keeping this path shuffle-free means it
+        pipelines with the scan at 100 TB.
         """
         return (
             self.flagged(df)
@@ -642,16 +643,17 @@ class RuleSet:
         materialized: n_rows comes from a count-only scan (with the table
         partitioned by part_id this reads parquet metadata, zero data
         pages), and the violation counts come from the tiny violations
-        set — no second pass over 100 TB.
+        set — no second pass over 100 TB. The join is null-safe: a NULL
+        part_id's violations count against its NULL-part rows.
         """
         rows = df.groupBy(F.col(self.part_col).alias("part_id")).agg(
             F.count(F.lit(1)).alias("n_rows")
         )
-        viol = all_violations.groupBy("part_id").agg(
+        viol = all_violations.groupBy(F.col("part_id").alias("_vp")).agg(
             F.count(F.lit(1)).alias("n_violations")
         )
         return (
-            rows.join(F.broadcast(viol), "part_id", "left")
+            rows.join(F.broadcast(viol), F.col("part_id").eqNullSafe(F.col("_vp")), "left")
             .select(
                 "part_id",
                 F.when(F.coalesce(F.col("n_violations"), F.lit(0)) > 0, F.lit("fail"))

@@ -104,9 +104,11 @@ def test_files_strategy_huge_duration_is_a_violation(spark, tmp_path):
 
 def test_spark_jobs_per_group_and_drift_pass(spark, tmp_path):
     """Pins the Spark jobs of one commit group and of the drift pass on
-    the files reader with emit_clean and a baseline snapshot: per group 7
-    for the violations write, 2 for the clean write (key-set broadcast,
-    write) and 1 for the verdicts; 5 for the drift pass."""
+    the files reader with emit_clean and a baseline snapshot: per group 4
+    for the violations write (the keyed plan's clip and transcript
+    exchanges, the part_id exchange that also runs PCM, the write), 2 for
+    the clean write (key-set broadcast, write) and 1 for the verdicts; 5
+    for the drift pass."""
     n = 2000
     clips = FX.generate_clips(spark, n, n_parts=4, seed=7, faults=FX.default_fault_plan(n))
     ts = FX.generate_transcripts(spark, n, n_parts=4, seed=7, missing_idx={11},
@@ -133,5 +135,5 @@ def test_spark_jobs_per_group_and_drift_pass(spark, tmp_path):
         return len(sc.statusTracker().getJobIdsForGroup(tag))
 
     one, two = jobs("one", stop=1), jobs("two", stop=2)
-    assert (one, two - one) == (10, 10)
+    assert (one, two - one) == (7, 7)
     assert jobs("drift", baseline_snapshot=baseline) - two == 5
