@@ -33,7 +33,7 @@ from mds_provider_spark.operators import text as TX
 from mds_provider_spark.operators import uniqueness as U
 from mds_provider_spark.functions import audio
 from mds_provider_spark.functions import geometry as GEO
-from mds_provider_spark.plans.runner import keyed_violations
+from mds_provider_spark.plans.runner import keyed_plan, keyed_violations
 from mds_provider_spark.sources import fixtures as FX
 
 # Irregular pentagon around the origin, sized to the embedding component
@@ -997,7 +997,7 @@ def clips_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         1
     ).write.mode("overwrite").parquet(f"{_ORACLE_DIR}/pcm_fault_ledger")
     pcm = audio.pcm_violations(clips, FX.ref_waveform)
-    v = keyed_violations(R.mds_clip_rules(), clips, ts, pcm)
+    v = keyed_violations(keyed_plan(R.mds_clip_rules(), clips, ts), pcm)
     return v.select("rule_id", "clip_id", "column_name", "part_id")
 
 

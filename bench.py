@@ -94,7 +94,7 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
     """
     from mds_provider_spark import rules as R
     from mds_provider_spark.functions import audio
-    from mds_provider_spark.plans.runner import keyed_verdicts, keyed_violations
+    from mds_provider_spark.plans.runner import keyed_plan, keyed_verdicts, keyed_violations
     from mds_provider_spark.sources import fixtures as FX
 
     spark = _spark(parallelism)
@@ -108,7 +108,7 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
             (rule projection, windowed uniqueness, one transcript join) —
             isolates codegen scaling."""
             t0 = time.monotonic()
-            keyed_violations(rs, clips, ts).count()
+            keyed_violations(keyed_plan(rs, clips, ts)).count()
             return time.monotonic() - t0
 
         def once():
@@ -117,8 +117,9 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
                 spark, CLIPS_DIR, FX.ref_waveform,
             ).cache()
             pcm.count()  # own job: python-only stage
-            n_viol = keyed_violations(rs, clips, ts, pcm).count()
-            verd = keyed_verdicts(rs, clips, ts, pcm).collect()
+            plan = keyed_plan(rs, clips, ts)
+            n_viol = keyed_violations(plan, pcm).count()
+            verd = keyed_verdicts(plan, pcm).collect()
             n_rows = sum(r.n_rows for r in verd)
             elapsed = time.monotonic() - t0
             pcm.unpersist()

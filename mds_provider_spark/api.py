@@ -13,7 +13,7 @@ One object, three calls: build rules, validate, inspect. ``Validator``
 and ``ValidationRun`` build their violations with the same
 ``plans.runner.keyed_violations``, so both report the same rows;
 ``Validator``'s verdicts count the same keyed frame
-(``plans.runner.keyed_verdicts``).
+(``plans.runner.keyed_verdicts``), built once per ``validate``.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 
 from mds_provider_spark import rules as R
 from mds_provider_spark.functions import audio
-from mds_provider_spark.plans.runner import keyed_verdicts, keyed_violations
+from mds_provider_spark.plans.runner import keyed_plan, keyed_verdicts, keyed_violations
 
 
 @dataclass
@@ -133,6 +133,6 @@ class Validator:
                                  key_col=rs.key_col, part_col=rs.part_col)
             if self.ref_wave_fn is not None else None
         )
-        return ValidationResult(
-            violations=keyed_violations(rs, df, transcripts, pcm),
-            verdicts=keyed_verdicts(rs, df, transcripts, pcm))
+        plan = keyed_plan(rs, df, transcripts)
+        return ValidationResult(violations=keyed_violations(plan, pcm),
+                                verdicts=keyed_verdicts(plan, pcm))

@@ -1,8 +1,9 @@
 """Distribution-drift detection vs a baseline snapshot (BASELINE.json A5/J2).
 
-One quantile path: every snapshot, grouped or not, takes its quantiles
-from ``stats.profile`` (built-in ``percentile_approx``, a deterministic
-GK-style mergeable sketch, partial+final automatic). Histogram (PSI/JS)
+One sketch path: every snapshot, grouped or not, takes its quantiles
+and distinct counts from ``stats.profile`` (built-in
+``percentile_approx``, a deterministic GK-style mergeable sketch, and
+DataSketches HLL; partial+final automatic). Histogram (PSI/JS)
 and categorical drift count exactly and need no sketch.
 
 The comparison itself is a broadcast join of two tiny snapshot tables
@@ -29,7 +30,10 @@ def snapshot(
     snapshot_id: str,
     probs: Sequence[float] = DEFAULT_PROBS,
 ) -> DataFrame:
-    """Per-column sketch rows in SNAPSHOT_SCHEMA shape (FIXTURES.md §3)."""
+    """Per-column sketch rows in SNAPSHOT_SCHEMA shape (FIXTURES.md §3):
+    ``stats.profile``'s quantiles and its ``approx_distinct``, a
+    DataSketches HLL estimate at lgConfigK 12 read from the merged sketch,
+    so a snapshot does not depend on the input partitioning."""
     return profile(df, cols, probs=probs).select(
         F.lit(snapshot_id).alias("snapshot_id"),
         "column_name",
@@ -58,6 +62,10 @@ def grouped_snapshot(
     aggregate over ONE scan; the shuffle carries one partial row per
     (input partition, group). Skewed group values are exactly the
     partial-aggregation case Spark handles map-side.
+
+    ``rsd`` sets the HLL sketch size, ``lgConfigK = stats.hll_lg_k(rsd)``
+    (0.02 -> 12); each group's distinct count is read from its merged
+    sketch, like ``snapshot``'s.
 
     Compare two of these with
     ``drift_violations(..., join_cols=(group_col, "column_name"))``.

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from mds_provider_spark import rules as R
+from mds_provider_spark.operators.stats import approx_distinct
 from mds_provider_spark.session import local_frame
 
 _NUMERIC = (
@@ -59,8 +60,8 @@ def suggest_rules(
                        distinct count <= enum_max_distinct.
 
     ``exact_distinct=False`` swaps ``count_distinct`` for
-    ``approx_count_distinct`` (HLL) — the 100 TB setting, where the enum
-    gate only needs an order-of-magnitude answer. Exact is the default
+    ``stats.approx_distinct`` (DataSketches HLL) — the 100 TB setting,
+    where the enum gate only needs an order-of-magnitude answer. Exact is the default
     so the suggestion table is reproducible for the oracle.
 
     ``robust_k``: when set, numeric columns ALSO get a
@@ -80,7 +81,7 @@ def suggest_rules(
         if exact_distinct:
             aggs.append(F.count_distinct(F.col(c)).alias(f"_d_{c}"))
         else:
-            aggs.append(F.approx_count_distinct(F.col(c)).alias(f"_d_{c}"))
+            aggs.append(approx_distinct(df, c).alias(f"_d_{c}"))
         if isinstance(fields[c], _NUMERIC):
             aggs.append(F.round(F.min(F.col(c).cast("double")), 6).alias(f"_min_{c}"))
             aggs.append(F.round(F.max(F.col(c).cast("double")), 6).alias(f"_max_{c}"))

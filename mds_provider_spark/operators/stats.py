@@ -15,9 +15,10 @@ comparator and the snapshot table directly.
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from mds_provider_spark.session import local_frame
@@ -30,8 +31,41 @@ _NUMERIC = (
 )
 
 
+# the input types ``hll_sketch_agg`` takes as they are; others go as strings
+_HLL_INPUT = (T.IntegerType, T.LongType, T.StringType, T.BinaryType)
+
+
 def _is_numeric(df: DataFrame, col: str) -> bool:
     return isinstance(df.schema[col].dataType, _NUMERIC)
+
+
+def hll_lg_k(rsd: float) -> int:
+    """The smallest DataSketches ``lgConfigK`` whose relative standard
+    error 1.04/sqrt(2^lgK) is at most ``rsd`` (0.02 -> 12), within the
+    library's range [4, 21]."""
+    return min(max(math.ceil(2 * math.log2(1.04 / rsd)), 4), 21)
+
+
+def _hll_input(df: DataFrame, col: str) -> Column:
+    c = F.col(col)
+    return c if isinstance(df.schema[col].dataType, _HLL_INPUT) else c.cast("string")
+
+
+def _hll_estimate(sketch: Column) -> Column:
+    """Distinct estimate of a sketch column, read from its union with
+    itself. A single un-merged sketch answers with the HIP estimator,
+    whose value depends on how the input was partitioned (10^5 distinct
+    values: 101,148 on one partition, 102,878 on four); a union sketch
+    answers the same on any partitioning."""
+    return F.hll_sketch_estimate(F.hll_union(sketch, sketch))
+
+
+def approx_distinct(df: DataFrame, col: str, rsd: float = 0.02) -> Column:
+    """The library's one approximate distinct count: a DataSketches HLL
+    aggregate of ``col`` at ``hll_lg_k(rsd)``, estimated from the merged
+    sketch (``_hll_estimate``), so the count does not depend on the input
+    partitioning. NULLs are not counted; no rows or only NULLs give 0."""
+    return _hll_estimate(F.hll_sketch_agg(_hll_input(df, col), hll_lg_k(rsd)))
 
 
 def profile(
@@ -45,9 +79,12 @@ def profile(
     """One row per column: (column_name, n_rows, null_count, null_rate,
     min_val, max_val, approx_distinct, quantiles).
 
-    ``exact_distinct=True`` swaps HLL for count(distinct) — used only by
-    the DuckDB oracle path at test scale (HLL estimates are
-    engine-specific); production keeps the sketch.
+    ``approx_distinct`` comes from the function of that name: a
+    DataSketches HLL at ``lgConfigK = hll_lg_k(rsd)``, estimated from the
+    merged sketch, so it is the same on any input partitioning; 3·rsd is
+    its ~99.7 % relative error bound. ``exact_distinct=True`` swaps it for
+    count(distinct) — used only by the DuckDB oracle path at test scale
+    (HLL estimates are engine-specific); production keeps the sketch.
 
     ``group_cols`` give one row per (group, column), group columns first.
 
@@ -63,7 +100,7 @@ def profile(
         if exact_distinct:
             aggs.append(F.count_distinct(F.col(c)).alias(f"_dist_{c}"))
         else:
-            aggs.append(F.approx_count_distinct(c, rsd).alias(f"_dist_{c}"))
+            aggs.append(approx_distinct(df, c, rsd).alias(f"_dist_{c}"))
         if _is_numeric(df, c):
             aggs.append(F.min(F.col(c).cast("double")).alias(f"_min_{c}"))
             aggs.append(F.max(F.col(c).cast("double")).alias(f"_max_{c}"))
@@ -133,6 +170,8 @@ def hll_sketches(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     partial/merge aggregation for sketch combination" refers to: sketches
     from independent runs/partitions merge via ``hll_union_agg`` without
     rescanning data — e.g. daily sketches folding into a monthly profile.
+    Every value is hashed as a string, so sketches of any run merge;
+    ``estimate`` is read from the merged sketch (``_hll_estimate``).
     """
     aggs = [F.hll_sketch_agg(F.col(c).cast("string")).alias(c) for c in cols]
     wide = df.agg(*aggs)
@@ -140,7 +179,7 @@ def hll_sketches(df: DataFrame, cols: Sequence[str]) -> DataFrame:
         F.struct(
             F.lit(c).alias("column_name"),
             F.col(c).alias("sketch"),
-            F.hll_sketch_estimate(F.col(c)).alias("estimate"),
+            _hll_estimate(F.col(c)).alias("estimate"),
         )
         for c in cols
     ]

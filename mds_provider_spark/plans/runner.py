@@ -17,7 +17,7 @@ computed by the fixture generator here). Consequences:
 
 Per group the input filter is a partition-pruned scan (``part_id IN
 (...)`` prunes files/Iceberg manifests), PCM runs in Arrow batches, and
-every other check is one keyed plan (``keyed_violations``): the rule
+every other check is one keyed plan (``keyed_plan``): the rule
 projection, the duplicate-count windows and one full-outer transcript
 join, with one exchange per table. Hot-codec skew never enters a shuffle
 key here (codec is only aggregated in stats, where partial agg + AQE
@@ -62,8 +62,8 @@ def _write_counted(df: DataFrame, parts: list[int], path: str,
     return {p: seen.get[str(p)] for p in parts}
 
 
-def _keyed(ruleset: RuleSet, clips: DataFrame,
-           transcripts: DataFrame | None) -> DataFrame:
+def keyed_plan(ruleset: RuleSet, clips: DataFrame,
+               transcripts: DataFrame | None = None) -> DataFrame:
     """The keyed plan: one row per clip row, or per joined (clip,
     transcript) row, as ``(clip_id, part_id, _row, _hits)``. ``_row`` is
     true on exactly one row per clip row; ``_hits`` holds every finding
@@ -123,36 +123,25 @@ def _keyed(ruleset: RuleSet, clips: DataFrame,
                     hits.alias("_hits"))
 
 
-def keyed_violations(
-    ruleset: RuleSet,
-    clips: DataFrame,
-    transcripts: DataFrame | None = None,
-    pcm: DataFrame | None = None,
-) -> DataFrame:
-    """The one violation builder: every finding of the keyed plan
-    (``_keyed``) as VIOLATIONS_SCHEMA rows, plus the PCM frame the caller
-    built with its reader. The same rows as the union of
-    ``ruleset.violations`` and the stand-alone ``duplicate_violations``,
-    ``referential_violations`` and ``transcript_mismatch_violations``,
-    from one exchange per table."""
-    v = (_keyed(ruleset, clips, transcripts)
-         .select("clip_id", "part_id", F.explode("_hits").alias("h"))
+def keyed_violations(plan: DataFrame, pcm: DataFrame | None = None) -> DataFrame:
+    """The one violation builder: every finding of a ``keyed_plan`` as
+    VIOLATIONS_SCHEMA rows, plus the PCM frame the caller built with its
+    reader. The same rows as the union of ``ruleset.violations`` and the
+    stand-alone ``duplicate_violations``, ``referential_violations`` and
+    ``transcript_mismatch_violations``, from one exchange per table."""
+    v = (plan.select("clip_id", "part_id", F.explode("_hits").alias("h"))
          .select("h.rule_id", "clip_id", "h.column_name", "h.message", "part_id"))
     return v if pcm is None else v.unionByName(pcm)
 
 
-def keyed_verdicts(
-    ruleset: RuleSet,
-    clips: DataFrame,
-    transcripts: DataFrame | None = None,
-    pcm: DataFrame | None = None,
-) -> DataFrame:
-    """VERDICTS_SCHEMA rows from the same keyed plan: per part, its clip
-    rows and the findings ``keyed_violations`` reports, PCM rows counted
-    in; a part with no clip rows (only orphan transcripts) gets no
-    verdict. Equal to ``ruleset.verdicts_from_violations`` over those
-    violations, with one aggregation instead of a second scan."""
-    counts = _keyed(ruleset, clips, transcripts).select(
+def keyed_verdicts(plan: DataFrame, pcm: DataFrame | None = None) -> DataFrame:
+    """VERDICTS_SCHEMA rows from a ``keyed_plan``: per part, its clip rows
+    and the findings ``keyed_violations`` reports, PCM rows counted in; a
+    part with no clip rows (only orphan transcripts) gets no verdict.
+    Equal to ``ruleset.verdicts_from_violations`` over those violations,
+    with one aggregation instead of a second scan. Pass the plan the
+    violations came from: the plan is built once for both frames."""
+    counts = plan.select(
         "part_id", F.col("_row").cast("long").alias("n_rows"),
         F.size("_hits").cast("long").alias("n_violations"))
     if pcm is not None:
@@ -274,7 +263,7 @@ class ValidationRun:
             )
             pcm = (self._pcm_violations(sub, parts)
                    if self.ref_wave_fn is not None else None)
-            viol = keyed_violations(self.ruleset, sub, sub_t, pcm)
+            viol = keyed_violations(keyed_plan(self.ruleset, sub, sub_t), pcm)
             # clear the group's partitions first: a crashed attempt may
             # have left rows in a part whose retry writes nothing, and
             # dynamic overwrite would keep them (checkpoint.clear_parts).

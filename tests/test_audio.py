@@ -489,6 +489,22 @@ def test_audio_has_one_decode_site():
     assert not stray, "calls outside their one site: " + ", ".join(stray)
 
 
+def test_library_has_one_distinct_sketch():
+    """No Spark needed: the library counts distinct values approximately
+    only through ``stats.approx_distinct`` (DataSketches HLL); nothing in
+    the package calls Spark's HLL++ ``approx_count_distinct``."""
+    import pathlib
+
+    import mds_provider_spark
+
+    root = pathlib.Path(mds_provider_spark.__file__).parent
+    hits = [f"{p.relative_to(root)}:{n}"
+            for p in sorted(root.rglob("*.py"))
+            for n, line in enumerate(p.read_text().splitlines(), 1)
+            if "approx_count_distinct(" in line]
+    assert not hits, "HLL++ outside stats.approx_distinct: " + ", ".join(hits)
+
+
 def test_pcm_frame_checks_one_row_at_a_time():
     """No Spark needed: ``_pcm_frame`` finishes row i (decode, reference,
     SNR) before it draws row i+1, so a task holds one decoded clip, not a

@@ -1,5 +1,6 @@
-"""The keyed plan (plans/runner.keyed_violations, keyed_verdicts) against
-the stand-alone cross-row operators it replaces on the product path:
+"""The keyed plan (plans/runner.keyed_plan and the keyed_violations and
+keyed_verdicts built from it) against the stand-alone cross-row
+operators it replaces on the product path:
 same violation multiset, same verdicts, one exchange per table, the same
 NULL semantics, and a hot key that finishes under small spill buffers."""
 
@@ -16,7 +17,7 @@ from mds_provider_spark import schema as S
 from mds_provider_spark.api import Validator
 from mds_provider_spark.operators import referential as REF
 from mds_provider_spark.operators import uniqueness as U
-from mds_provider_spark.plans.runner import keyed_violations
+from mds_provider_spark.plans.runner import keyed_plan, keyed_violations
 from mds_provider_spark.sources import fixtures as FX
 from mds_provider_spark.session import local_frame
 
@@ -87,7 +88,7 @@ def test_keyed_equals_standalone_operators(spark, unique):
         *[U.duplicate_violations(clips, list(uk.cols)) for uk in rs.unique_keys],
         REF.referential_violations(clips, ts),
         REF.transcript_mismatch_violations(clips, ts)])
-    got = _multiset(keyed_violations(rs, clips, ts))
+    got = _multiset(keyed_violations(keyed_plan(rs, clips, ts)))
     assert got == _multiset(standalone)
     # the input really holds each case
     rules = Counter(r for r, *_ in got.elements())
@@ -114,6 +115,25 @@ def test_keyed_verdicts_equal_verdicts_from_violations(spark, unique, ref_wave_f
     assert [p for p, *_ in got] == list(range(PARTS))
     assert ([(f.name, f.dataType) for f in res.verdicts.schema]
             == [(f.name, f.dataType) for f in S.VERDICTS_SCHEMA])
+
+
+def test_validate_builds_the_keyed_plan_once(spark, monkeypatch):
+    """``Validator.validate`` derives its violations and verdicts from one
+    ``keyed_plan`` frame."""
+    from mds_provider_spark import api
+
+    built = []
+
+    def counting(*args):
+        built.append(args)
+        return keyed_plan(*args)
+
+    monkeypatch.setattr(api, "keyed_plan", counting)
+    clips, ts = _adversarial(spark)
+    res = Validator(ref_wave_fn=FX.ref_waveform).validate(clips, ts)
+    res.violations.count()
+    res.verdicts.collect()
+    assert len(built) == 1
 
 
 def test_null_part_id_verdict_counts_its_violations(spark):
@@ -163,12 +183,13 @@ def stored(spark, tmp_path_factory):
                          ids=["mds_clip_rules", "composite"])
 def test_keyed_plan_one_exchange_per_table(spark, stored, unique):
     clips, ts = (spark.read.parquet(p) for p in stored)
-    assert _exchanges_over_scans(keyed_violations(_ruleset(unique), clips, ts)) == [1, 1]
+    plan = keyed_plan(_ruleset(unique), clips, ts)
+    assert _exchanges_over_scans(keyed_violations(plan)) == [1, 1]
 
 
 def test_keyed_plan_rules_only_is_shuffle_free(spark, stored):
     clips = spark.read.parquet(stored[0])
-    assert _exchanges_over_scans(keyed_violations(_ruleset([]), clips)) == [0]
+    assert _exchanges_over_scans(keyed_violations(keyed_plan(_ruleset([]), clips))) == [0]
 
 
 def test_hot_key_finishes_with_small_spill_buffers(spark):
@@ -187,7 +208,7 @@ def test_hot_key_finishes_with_small_spill_buffers(spark):
             F.lit(80).alias("dur_ms"), F.lit("wav").alias("codec"),
             F.lit("hello").alias("transcript"), F.lit(0).alias("part_id"))
         ts = local_frame(spark, [(cid, "hello", 0)], S.TRANSCRIPTS_SCHEMA)
-        got = dict(keyed_violations(R.mds_clip_rules(), clips, ts)
+        got = dict(keyed_violations(keyed_plan(R.mds_clip_rules(), clips, ts))
                    .groupBy("rule_id").count().collect())
     finally:
         for c in confs:

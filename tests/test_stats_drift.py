@@ -26,7 +26,7 @@ def test_profile_single_pass(spark, num_df):
 def test_profile_degenerate_inputs(spark):
     empty = spark.createDataFrame([], "x double")
     r = ST.profile(empty, ["x"]).collect()[0]
-    assert (r.n_rows, r.null_count, r.null_rate) == (0, 0, None)
+    assert (r.n_rows, r.null_count, r.null_rate, r.approx_distinct) == (0, 0, None, 0)
     allnull = spark.createDataFrame([(None,), (None,)], "x double")
     r = ST.profile(allnull, ["x"]).collect()[0]
     assert (r.n_rows, r.null_count, r.null_rate) == (2, 2, 1.0)
@@ -37,6 +37,21 @@ def test_profile_is_one_aggregate(spark, num_df):
     plan = ST.profile(num_df, ["a", "b"])._jdf.queryExecution().executedPlan().toString()
     # exactly one shuffle: partial agg -> final agg
     assert plan.count("Exchange") == 1, plan
+
+
+@pytest.mark.parametrize("n", [10, 1_000, 100_000])
+def test_profile_distinct_partition_invariant_and_bounded(spark, n):
+    """``approx_distinct`` is read from the merged sketch: the same on 1,
+    4 and 16 input partitions, and within 3·rsd of the true count, for a
+    bigint column (hashed as is) and a double column (hashed as string)."""
+    got = set()
+    for parts in (1, 4, 16):
+        x = spark.range(0, 3 * n, 1, parts).select((F.col("id") % n).alias("x"))
+        df = x.select("x", (F.col("x") / 7.0).alias("d"))
+        got.add(tuple(r.approx_distinct for r in ST.profile(df, ["x", "d"]).collect()))
+    assert len(got) == 1, got
+    for est in got.pop():
+        assert abs(est - n) <= 3 * 0.02 * n
 
 
 def test_hll_sketch_merge_matches_union(spark, num_df):
