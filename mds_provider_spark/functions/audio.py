@@ -29,9 +29,12 @@ enum rule catches them BEFORE the PCM stage so the UDF never sees them.
 All decode/SNR math is numpy over whole clips inside Arrow batches; the
 only per-clip Python is the loop over variable-length binary cells, which
 is unavoidable for ragged binary and costs nothing next to the vector
-math. That loop exists twice: ``_map_decoded`` (pruned select, skip,
-decode, per-clip callback, one typed Arrow batch out) runs every feature
-UDF, and ``_pcm_frame`` runs the PCM check for both of its readers.
+math. Every feature UDF runs that loop through ``_map_decoded`` (skip,
+decode, per-clip callback) on the library's one row loop,
+``session.map_rows`` (pruned select, one typed Arrow batch out per
+input batch). The PCM check keeps its own loop, ``_pcm_frame``: it is
+the product's hot path, and its files reader gets rows from parquet
+slices, not from a DataFrame.
 """
 
 from __future__ import annotations
@@ -46,7 +49,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mds_provider_spark import schema as S
-from mds_provider_spark.session import arrow_batch, arrow_schema
+from mds_provider_spark.session import arrow_batch, arrow_schema, map_rows
 
 # ---------------------------------------------------------------- codecs
 
@@ -221,6 +224,8 @@ _PCM_SCHEMA = (
 )
 
 
+# Not on session.map_rows: this is the product's hot PCM path, and the
+# files reader's rows come from parquet slices, not from a DataFrame.
 def _pcm_frame(rows, arrow, ref_wave_fn: RefWaveFn, min_snr_db: float):
     """The PCM check over ``(cid, buf, sr, dur, codec, part)`` rows, as
     one Arrow batch typed by ``arrow`` (``arrow_schema(_PCM_SCHEMA)``) —
@@ -353,32 +358,26 @@ def _map_decoded(
     per_clip: Callable[..., "list[tuple]"],
     schema: str,
 ) -> DataFrame:
-    """The one decode loop behind every audio feature UDF, via
-    ``mapInArrow``. ``cols`` is ``[key, "bytes", "codec", *extra]``: the
-    pruned select, so the bytes cross the Arrow pipe once and no column
-    the UDF does not read crosses at all. Rows with NULL bytes, an
+    """The decode step behind every audio feature UDF, on
+    ``session.map_rows``. ``cols`` is ``[key, "bytes", "codec", *extra]``:
+    the pruned select, so the bytes cross the Arrow pipe once and no
+    column the UDF does not read crosses at all. Rows with NULL bytes, an
     unregistered codec or bytes that fail to decode are skipped (layered
     contract: those are the not_null/enum/bad_pcm findings). For every
     other row ``per_clip(w, cid, codec, *extra)`` gets the decoded
     waveform and returns the row's output tuples in ``schema`` (DDL)
-    order — none to skip the row, several to explode it. Each input
-    batch gives one output batch, typed by ``arrow_batch``."""
-    arrow = arrow_schema(schema)
+    order — none to skip the row, several to explode it."""
 
-    def run(batches: Iterator) -> Iterator:
-        for rb in batches:
-            out = []
-            for cid, buf, codec, *extra in zip(*(c.to_pylist() for c in rb.columns)):
-                if buf is None or codec not in DECODERS:
-                    continue
-                try:
-                    w = decode(codec, buf)
-                except Exception:
-                    continue
-                out.extend(per_clip(w, cid, codec, *extra))
-            yield arrow_batch(out, arrow)
+    def per_row(cid, buf, codec, *extra):
+        if buf is None or codec not in DECODERS:
+            return ()
+        try:
+            w = decode(codec, buf)
+        except Exception:
+            return ()
+        return per_clip(w, cid, codec, *extra)
 
-    return clips.select(*cols).mapInArrow(run, schema)
+    return map_rows(clips, cols, per_row, schema)
 
 
 def _rms64(x: np.ndarray) -> float:

@@ -2,23 +2,25 @@
 ``binary`` with typed metadata, processed batch-wise over Arrow.
 
 The Spark-side contract is REAL and tested — column-pruned selects, a
-codec/modality registry, ``mapInPandas`` with fixed output schemas, batch
-shapes that hold at 10^12 rows. PNG decoding is real (pure-stdlib,
-functions/png.py), audio decoding is real (functions/audio.py), and RAW
-video is real (YUV4MPEG2 container parse + frame sampling,
-functions/video.py); jpeg and COMPRESSED video decoders need libraries
-absent from this container (PIL/opencv/ffmpeg), so those registry
-entries raise ``NotImplementedError`` at decode time — a production
-deployment swaps one dict entry.
+codec/modality registry, per-row decoding on ``session.map_rows`` with
+fixed output schemas, batch shapes that hold at 10^12 rows. PNG decoding
+is real (pure-stdlib, functions/png.py), audio decoding is real
+(functions/audio.py), and RAW video is real (YUV4MPEG2 container parse +
+frame sampling, functions/video.py); jpeg and COMPRESSED video decoders
+need libraries this package does not depend on (PIL/opencv/ffmpeg), so
+the jpeg registry entry raises ``NotImplementedError`` at decode time and
+``video.sample_frames`` skips non-Y4M rows — a production deployment
+swaps one dict entry.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
+
+from mds_provider_spark.session import map_rows
 
 # decoder: bytes -> np.ndarray (HxWxC for images, frames x H x W x C for video)
 ImageDecoder = Callable[[bytes], np.ndarray]
@@ -57,80 +59,24 @@ def image_features(
     Decode errors and unregistered formats yield NULL features rather than
     failing the job (per-row fault isolation — one corrupt image must not
     kill a 10^12-row pass); the decode_ok flag feeds a validation rule.
+    Exactly one row per input row; NULL ids are kept, and the id is cast
+    to string in the select.
     """
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("item_id", "height", "width", "channels", "mean_intensity", "decode_ok")}
-            for iid, buf, fmt in zip(pdf[key_col], pdf[bytes_col], pdf[format_col]):
-                out["item_id"].append(iid)
-                dec = IMAGE_DECODERS.get(fmt)
-                try:
-                    if dec is None or buf is None:
-                        raise NotImplementedError(fmt)
-                    img = dec(bytes(buf))
-                    out["height"].append(img.shape[0])
-                    out["width"].append(img.shape[1])
-                    out["channels"].append(img.shape[2] if img.ndim > 2 else 1)
-                    out["mean_intensity"].append(float(img.mean()))
-                    out["decode_ok"].append(True)
-                except Exception:
-                    out["height"].append(None)
-                    out["width"].append(None)
-                    out["channels"].append(None)
-                    out["mean_intensity"].append(None)
-                    out["decode_ok"].append(False)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.array(out["item_id"], dtype="string"),
-                    "height": pd.array(out["height"], dtype="Int32"),
-                    "width": pd.array(out["width"], dtype="Int32"),
-                    "channels": pd.array(out["channels"], dtype="Int32"),
-                    "mean_intensity": pd.array(out["mean_intensity"], dtype="Float64"),
-                    "decode_ok": pd.array(out["decode_ok"], dtype="boolean"),
-                }
-            )
+    def per_row(iid, buf, fmt):
+        dec = IMAGE_DECODERS.get(fmt)
+        try:
+            if dec is None or buf is None:
+                raise NotImplementedError(fmt)
+            img = dec(buf)
+            return [(iid, img.shape[0], img.shape[1],
+                     img.shape[2] if img.ndim > 2 else 1, float(img.mean()), True)]
+        except Exception:
+            return [(iid, None, None, None, None, False)]
 
-    pruned = df.select(key_col, bytes_col, format_col)
-    return pruned.mapInPandas(
-        feats,
+    return map_rows(
+        df, [F.col(key_col).cast("string").alias("item_id"), bytes_col, format_col],
+        per_row,
         "item_id string, height int, width int, channels int, "
         "mean_intensity double, decode_ok boolean",
-    )
-
-
-def frame_sample_plumbing(
-    df: DataFrame,
-    every_nth: int = 30,
-    key_col: str = "item_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Legacy video frame-sampling STUB (fan-out shape only). The REAL
-    operator is ``functions/video.sample_frames`` — full YUV4MPEG2 parse
-    + per-frame PNG re-encode; this stub remains for COMPRESSED formats,
-    whose extraction needs ffmpeg (absent here): it emits frame_idx rows
-    with NULL bytes so downstream partitioning/joins can be exercised."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs = [], []
-            for iid, buf in zip(pdf[key_col], pdf[bytes_col]):
-                if buf is None:
-                    continue
-                # stub: pretend a fixed 3-frame sample; ffmpeg would yield
-                # len(video)/every_nth real frames here
-                for k in range(3):
-                    ids.append(iid)
-                    idxs.append(k * every_nth)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.array(ids, dtype="string"),
-                    "frame_idx": pd.array(idxs, dtype="Int64"),
-                    "frame_bytes": pd.array([None] * len(ids), dtype=object),
-                }
-            )
-
-    return df.select(key_col, bytes_col).mapInPandas(
-        sample, "item_id string, frame_idx long, frame_bytes binary"
     )

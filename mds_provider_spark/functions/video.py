@@ -3,26 +3,24 @@ uncompressed interchange format (plain-text stream header + per-frame
 ``FRAME\\n`` markers + raw planes) — pure stdlib/numpy, the video
 analog of the WAV container in functions/audio.py. Mono (grayscale)
 colorspace only; compressed codecs (h264/vp9/...) need ffmpeg-class
-libraries absent from this container and stay stubbed in
-functions/multimodal.py — a production deployment swaps one registry
-entry, the Spark-side plumbing below is unchanged.
+libraries this package does not depend on, so ``sample_frames`` skips those
+rows — a production deployment adds a decoder, the Spark-side plumbing
+below is unchanged.
 
 ``sample_frames`` is the real frame-sampling operator: decode the Y4M
-stream inside an Arrow batch, keep every Nth frame, and re-encode each
-kept frame as a REAL PNG (functions/png.py) — one binary row in, many
-binary rows out, each of which the image pipeline can consume
-(multimodal.image_features decodes them right back).
+stream per row on ``session.map_rows``, keep every Nth frame, and
+re-encode each kept frame as a REAL PNG (functions/png.py) — one binary
+row in, many binary rows out, each of which the image pipeline can
+consume (multimodal.image_features decodes them right back).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from mds_provider_spark.functions.png import encode_png
+from mds_provider_spark.session import map_rows
 
 
 def encode_y4m(frames: np.ndarray, fps: int = 30) -> bytes:
@@ -103,7 +101,8 @@ def sample_frames(
 ) -> DataFrame:
     """Video frame sampling, REAL end to end for Y4M: decode the stream,
     keep frames 0, N, 2N, ..., and emit each as a PNG binary —
-    (item_id, frame_idx, height, width, frame_png). Undecodable rows and
+    (item_id, frame_idx, height, width, frame_png); the id is cast to
+    string in the select and NULL ids are kept. Undecodable rows and
     non-Y4M formats are skipped (layered contract: the enum rule flags
     them upstream; one corrupt video must not kill a 10^12-row pass).
     Row count multiplies by n_frames/every_nth — the fan-out shape the
@@ -113,36 +112,19 @@ def sample_frames(
         # every task holding a valid row, not fault-isolate
         raise ValueError("every_nth must be >= 1")
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, hs, ws, pngs = [], [], [], [], []
-            for iid, buf, fmt in zip(pdf[key_col], pdf[bytes_col], pdf[format_col]):
-                if buf is None or fmt != "y4m":
-                    continue
-                try:
-                    # step-decode: only kept frames are materialized
-                    frames, _fps = decode_y4m(bytes(buf), step=every_nth)
-                except Exception:
-                    continue
-                for i in range(frames.shape[0]):
-                    f = frames[i]
-                    ids.append(iid)
-                    idxs.append(i * every_nth)
-                    hs.append(int(f.shape[0]))
-                    ws.append(int(f.shape[1]))
-                    pngs.append(encode_png(f[:, :, None]))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.array(ids, dtype="string"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "height": pd.array(hs, dtype="int32"),
-                    "width": pd.array(ws, dtype="int32"),
-                    "frame_png": pd.array(pngs, dtype=object),
-                }
-            )
+    def per_row(iid, buf, fmt):
+        if buf is None or fmt != "y4m":
+            return ()
+        try:
+            # step-decode: only kept frames are materialized
+            frames, _fps = decode_y4m(buf, step=every_nth)
+        except Exception:
+            return ()
+        return [(iid, i * every_nth, int(f.shape[0]), int(f.shape[1]),
+                 encode_png(f[:, :, None])) for i, f in enumerate(frames)]
 
-    pruned = df.select(key_col, bytes_col, format_col)
-    return pruned.mapInPandas(
-        work,
+    return map_rows(
+        df, [F.col(key_col).cast("string").alias("item_id"), bytes_col, format_col],
+        per_row,
         "item_id string, frame_idx int, height int, width int, frame_png binary",
     )

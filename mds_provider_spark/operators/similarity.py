@@ -104,6 +104,8 @@ def _sign_bits(vec: Column, planes_2d: list[list[float]]) -> Column:
     )
 
 
+# A crossover twin of _sign_bits: it stays a pandas UDF until an
+# interleaved A/B at two scales decides which of the two is kept.
 def _sign_bits_pandas(vec: Column, planes_2d: list[list[float]]) -> Column:
     """BLAS fast path for wide plane sets: ONE matrix multiply per Arrow
     batch instead of L*b higher-order dot products per row (~100x at
@@ -294,6 +296,7 @@ def _nearest_centroids_expr(vec: Column, cents: np.ndarray, nprobe: int) -> Colu
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"])
 
 
+# A crossover twin of _nearest_centroids_expr, kept like _sign_bits_pandas.
 def _nearest_centroids_pandas(vec: Column, cents: np.ndarray, nprobe: int) -> Column:
     """BLAS path for wide centroid sets: one (batch x dim)@(dim x k)
     matmul + stable argsort per Arrow batch, constant plan size in

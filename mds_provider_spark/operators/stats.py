@@ -210,6 +210,8 @@ def mg_partition_summaries(
     verify) and the streaming marker-borne heavy-hitter snapshots."""
     import pandas as pd
 
+    # A per-partition fold over value_counts, not a row loop, so not on
+    # session.map_rows.
     cap = int(capacity)
 
     def mg(batches) -> "pd.DataFrame":

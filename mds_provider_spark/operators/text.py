@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from mds_provider_spark.operators.dedup import norm_text, tokens
+from mds_provider_spark.session import map_rows
 
 # pack_token_budget id-space span per packer stream; see the guard there
 _PACK_IDX_SPAN = 1_000_000_000
@@ -760,7 +761,7 @@ def compression_ratio(
     Complements ``repetition_profile`` (n-gram view) with a whole-
     document information-density view.
 
-    Arrow-batched mapInPandas (zlib is not expressible in Catalyst);
+    One ``session.map_rows`` pass (zlib is not expressible in Catalyst);
     only (id, text) cross the pipe, one pass, no shuffle. DETERMINISTIC
     by construction: zlib output depends only on (bytes, level) — same
     ratio on every executor, every retry, every platform zlib (the
@@ -770,39 +771,23 @@ def compression_ratio(
 
     Output: (id, n_raw_bytes, n_compressed_bytes, ratio) with ratio =
     compressed/raw rounded to 6 (empty text -> ratio 1.0 by convention;
-    NULL text is skipped — absence is the rule layer's finding).
+    NULL text is skipped — absence is the rule layer's finding). The id
+    keeps its own type, and NULL ids are kept.
     """
     import zlib
 
-    import pandas as pd
+    def per_row(i, t):
+        if t is None:
+            return ()
+        b = str(t).encode("utf-8")
+        c = len(zlib.compress(b, level)) if b else 0
+        return [(i, len(b), c, round(c / len(b), 6) if b else 1.0)]
 
-    def work(batches):
-        for pdf in batches:
-            ids, raws, comps, ratios = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    continue
-                b = str(t).encode("utf-8")
-                c = len(zlib.compress(b, level)) if b else 0
-                ids.append(i)
-                raws.append(len(b))
-                comps.append(c)
-                ratios.append(round(c / len(b), 6) if b else 1.0)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "n_raw_bytes": pd.array(raws, dtype="int64"),
-                    "n_compressed_bytes": pd.array(comps, dtype="int64"),
-                    "ratio": pd.array(ratios, dtype="float64"),
-                }
-            )
-
-    pruned = df.select(F.col(id_col).alias(id_col), text_col)
     schema = (
         f"id {dict(df.dtypes)[id_col]}, n_raw_bytes long, "
         "n_compressed_bytes long, ratio double"
     )
-    return pruned.mapInPandas(work, schema).withColumnRenamed("id", id_col)
+    return map_rows(df, [id_col, text_col], per_row, schema).withColumnRenamed("id", id_col)
 
 
 def split_assign(

@@ -3,7 +3,8 @@
 Defaults are chosen for the 100 TB design point and are safe locally:
   - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
     per BASELINE.json north_star ("AQE skew-join handling for hot codecs").
-  - Arrow on for every pandas-UDF surface (PCM decode, t-digest partials).
+  - Arrow on for the pandas surfaces that remain (fixture generation,
+    the Misra-Gries partition summaries, similarity's pandas UDFs).
   - UTC session timezone so timestamp semantics are deterministic and
     engine-independent (oracle comparisons vs DuckDB).
 """
@@ -11,6 +12,7 @@ Defaults are chosen for the 100 TB design point and are safe locally:
 from __future__ import annotations
 
 import os
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -100,13 +102,38 @@ def arrow_batch(rows: list[tuple], arrow):
     """Rows (tuples in ``arrow`` field order) as one ``pyarrow.RecordBatch``
     typed by the ``arrow_schema`` result ``arrow``; zero rows give an
     empty batch of the same schema. Needs no Spark, so it also runs on
-    workers (the audio UDFs emit their batches through it)."""
+    workers (``map_rows`` and the PCM check emit their batches through
+    it)."""
     import pyarrow as pa
 
     cols = list(zip(*rows)) or [()] * len(arrow)
     return pa.RecordBatch.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
+
+
+def map_rows(df: DataFrame, cols: list, per_row: Callable[..., Iterable[tuple]],
+             schema: StructType | str) -> DataFrame:
+    """The one per-row Python stage: ``df.select(*cols)`` crosses the
+    Arrow pipe through ``mapInArrow``, and ``per_row(*row)`` gets each
+    row's values (Python objects, in ``cols`` order) and returns the
+    row's output tuples in ``schema`` order — none to skip the row,
+    several to fan it out. Each input batch gives one output batch,
+    typed by ``arrow_batch``, so a value ``schema`` cannot hold fails the
+    task instead of being coerced; cast in ``cols`` when a conversion is
+    wanted. Every per-row stage of the library runs here except the PCM
+    check (``audio._pcm_frame``), whose files reader has no DataFrame;
+    ``tests/test_audio.py`` guards that no pandas batch loop comes back."""
+    arrow = arrow_schema(schema)
+
+    def run(batches: Iterator) -> Iterator:
+        for rb in batches:
+            out = []
+            for row in zip(*(c.to_pylist() for c in rb.columns)):
+                out.extend(per_row(*row))
+            yield arrow_batch(out, arrow)
+
+    return df.select(*cols).mapInArrow(run, schema)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple],

@@ -17,7 +17,9 @@ treats it the same way.
 For genuinely parallel ingestion (many providers x many time windows),
 ``fetch_many`` fans the independent (provider, window) requests out via
 ``spark.range(...).mapInPandas`` so each executor pulls its own slice —
-the distributed analog of running many reference clients at once.
+the distributed analog of running many reference clients at once. It
+calls HTTP rather than checking rows, so it is not on
+``session.map_rows``.
 """
 
 from __future__ import annotations

@@ -9,7 +9,8 @@ so golden fixtures are stable and the engine's reference-waveform check
 No external data (BASELINE.json), no RNG state shared across rows.
 
 Generation runs distributed via ``spark.range(n).mapInPandas`` — at any
-scale each executor synthesizes only its own id range.
+scale each executor synthesizes only its own id range. It makes rows
+rather than checking them, so it is not on ``session.map_rows``.
 """
 
 from __future__ import annotations

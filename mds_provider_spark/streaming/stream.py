@@ -1,16 +1,17 @@
 """Streaming validation — the reference has NO streaming (its "paging" is
 synchronous HTTP, mds/api.py ≈L150–250); the north rule is batch over
 Iceberg. This module exists for the streaming-arrival case: the SAME rule
-compiler applied per micro-batch via foreachBatch, so batch and stream
-share one rule path (no semantic drift between modes), plus a native
-readStream aggregation for continuous verdict monitoring.
+compiler applied per micro-batch via foreachBatch and committed through
+the batch runner's ``CommitLog`` (``validate_stream_committed``,
+exactly-once across restarts), so batch and stream share one rule path
+(no semantic drift between modes), plus a native readStream aggregation
+for continuous verdict monitoring.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -32,33 +33,6 @@ def _checkpoint_identity(checkpoint_dir: str) -> str | None:
         return str(qid) if qid else None
     except (OSError, ValueError):
         return None
-
-
-def validate_stream(
-    stream_df: DataFrame,
-    ruleset: RuleSet,
-    sink: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """foreachBatch: compile-once rule set, violations per micro-batch.
-
-    ``sink(violations_df, batch_id)`` receives the canonical violation
-    rows for each batch; exactly-once delivery is Spark's foreachBatch +
-    checkpoint contract (transactional when the sink is idempotent, as
-    our dynamic-partition-overwrite writers are).
-    """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sink(ruleset.violations(batch_df), batch_id)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def validate_stream_committed(

@@ -174,14 +174,6 @@ def test_image_features_plumbing(spark):
     assert not got["unknown"].decode_ok
 
 
-def test_frame_sample_plumbing(spark):
-    df = spark.createDataFrame(
-        [("v1", b"xx"), ("v2", None)], "item_id string, bytes binary"
-    )
-    got = MM.frame_sample_plumbing(df, every_nth=10).collect()
-    assert [(r.item_id, r.frame_idx) for r in got] == [("v1", 0), ("v1", 10), ("v1", 20)]
-
-
 # ------------------------------------------- round-5 facade surfaces
 
 

@@ -505,6 +505,42 @@ def test_library_has_one_distinct_sketch():
     assert not hits, "HLL++ outside stats.approx_distinct: " + ", ".join(hits)
 
 
+def test_library_has_one_python_batch_boundary():
+    """No Spark needed: per-row Python stages run on ``session.map_rows``.
+    The only pandas batch loops left in the package (``mapInPandas``,
+    ``applyInPandas``, ``applyInPandasWithState``) are fixture
+    generation, the HTTP client and the Misra-Gries partition summaries,
+    none of which checks rows."""
+    import ast
+    import pathlib
+
+    import mds_provider_spark
+
+    loops = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
+    allowed = {("sources/fixtures.py", None), ("sources/api_client.py", None),
+               ("operators/stats.py", "mg_partition_summaries")}
+    root = pathlib.Path(mds_provider_spark.__file__).parent
+    sites = []
+
+    def walk(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, rel, fn or child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr in loops:
+                sites.append((rel, fn, child.attr, child.lineno))
+            walk(child, rel, fn)
+
+    for p in sorted(root.rglob("*.py")):
+        rel = p.relative_to(root).as_posix()
+        walk(ast.parse(p.read_text(), str(p)), rel, None)
+    stray = [f"{attr} at {rel}:{line} in {fn}" for rel, fn, attr, line in sites
+             if (rel, None) not in allowed and (rel, fn) not in allowed]
+    assert not stray, "pandas batch loops outside session.map_rows: " + ", ".join(stray)
+    assert {(rel, fn) for rel, fn, _, _ in sites} >= {
+        ("operators/stats.py", "mg_partition_summaries")}
+
+
 def test_pcm_frame_checks_one_row_at_a_time():
     """No Spark needed: ``_pcm_frame`` finishes row i (decode, reference,
     SNR) before it draws row i+1, so a task holds one decoded clip, not a

@@ -80,30 +80,6 @@ def test_registry_find(spark, tmp_path):
     assert REG.find(reg, "unknown").count() == 0
 
 
-def test_streaming_validation_foreachbatch(spark, tmp_path):
-    src_dir = tmp_path / "stream_src"
-    src_dir.mkdir()
-    df = spark.createDataFrame(
-        [("a", 16000, 0), ("b", 11025, 0), ("c", 48000, 1)],
-        "clip_id string, sr_hz int, part_id int",
-    )
-    df.write.mode("overwrite").parquet(str(src_dir / "batch0"))
-
-    stream = (
-        spark.readStream.schema("clip_id string, sr_hz int, part_id int")
-        .parquet(str(src_dir / "batch0"))
-    )
-    rs = R.RuleSet().add(R.is_in("sr_hz", [8000, 16000, 22050, 44100, 48000]))
-    got = []
-
-    def sink(vdf, batch_id):
-        got.extend((r.rule_id, r.clip_id) for r in vdf.collect())
-
-    q = STR.validate_stream(stream, rs, sink, str(tmp_path / "ckpt"))
-    q.awaitTermination(60)
-    assert got == [("bad_enum:sr_hz", "b")]
-
-
 def test_streaming_dedup_first_arrival_wins(spark, tmp_path):
     """Cross-micro-batch content dedup: the SAME normalized text arriving
     in a later batch (within the watermark) is dropped; distinct content

@@ -1,50 +1,8 @@
-"""applyInPandasWithState running verdicts + explicit salted groupBy."""
+"""Explicit salted groupBy."""
 
 import pyspark.sql.functions as F
 
-from mds_provider_spark import rules as R
-from mds_provider_spark import schema as S
 from mds_provider_spark.operators.stats import salted_group_count
-from mds_provider_spark.streaming import stateful as STF
-
-
-def test_running_verdicts_accumulate_state(spark, tmp_path):
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "clip_id string, sr_hz int, part_id int"
-
-    spark.createDataFrame(
-        [("a", 16000, 0), ("b", 11025, 0), ("c", 8000, 1)], schema
-    ).write.mode("append").parquet(str(src))
-
-    rs = R.RuleSet().add(R.is_in("sr_hz", S.SR_HZ_ENUM))
-
-    def run_once():
-        collected = {}
-
-        def sink(batch_df, batch_id):
-            for r in batch_df.collect():
-                collected[r.part_id] = (r.n_rows, r.n_violations, r.status)
-
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        out = STF.running_verdicts(stream, rs)
-        q = (out.writeStream.foreachBatch(sink)
-             .outputMode("update").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return collected
-
-    got1 = run_once()
-    assert got1[0] == (2, 1, "fail") and got1[1] == (1, 0, "pass")
-
-    # second micro-batch: state must RESUME from the checkpoint and
-    # accumulate, not restart from zero
-    spark.createDataFrame([("d", 99, 1), ("e", 48000, 0)], schema) \
-        .write.mode("append").parquet(str(src))
-    got2 = run_once()
-    assert got2[0] == (3, 1, "fail")
-    assert got2[1] == (2, 1, "fail")
 
 
 def test_salted_group_count_matches_plain(spark):
