@@ -403,12 +403,16 @@ def simhash_dedup(
 # --------------------------------------------- duplicate-group resolution
 
 
+# Edge count at or below which resolve_duplicate_groups solves the graph
+# with a driver-side union-find (see the hybrid cutoff in its body).
+_LOCAL_MAX_EDGES = 100_000
+
+
 def resolve_duplicate_groups(
     pairs: DataFrame,
     max_iters: int = 40,
     reliable_checkpoint_dir: str | None = None,
     reliable_every: int = 4,
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, group_id).
 
@@ -654,7 +658,7 @@ def resolve_duplicate_groups(
     )
     edges, handle = cut(edges)
     # Hybrid cutoff (the quicksort-insertion-sort discipline): below
-    # ``local_threshold`` edges the distributed contraction's per-round
+    # ``_LOCAL_MAX_EDGES`` edges the distributed contraction's per-round
     # fixed cost (a checkpoint materialization + four shuffles + a
     # termination-test job, times O(log^2) rounds) dominates by orders
     # of magnitude, so solve the graph with a driver-side union-find
@@ -668,7 +672,7 @@ def resolve_duplicate_groups(
     # take the unchanged distributed path, so the 100 TB story is
     # untouched.
     n_edges = edges.count()
-    if n_edges <= local_threshold:
+    if n_edges <= _LOCAL_MAX_EDGES:
         parent: dict = {}
 
         def find(x):

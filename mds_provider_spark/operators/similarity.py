@@ -13,7 +13,9 @@ Two paths, same contract:
                      corpus this is the path (bounded candidate sets per
                      query, no full scan per query).
 
-Dot products run in Catalyst (`zip_with` + `aggregate`, codegen'd); no
+LSH sign bits and IVF list assignment run in BLAS: one matrix multiply
+per Arrow batch (``_sign_bits``, ``_nearest_centroids``). Scoring stays in
+Catalyst (``dot``/``l2norm``: `zip_with` + `aggregate`, codegen'd); no
 Python in the scoring loop. Vectors are cast to double once so scores are
 engine-reproducible (float accumulation order would not be).
 """
@@ -88,56 +90,54 @@ def brute_force_topk(
     )
 
 
+def _vector_width(df: DataFrame, vec_col: str) -> int:
+    """Length of the first non-NULL vector (a driver job; callers that
+    know the width pass ``dim``). A NULL row must not decide it: it
+    would fail the job instead of getting NULL signs."""
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    return int(row[0]) if row is not None else 0
+
+
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
 def _sign_bits(vec: Column, planes_2d: list[list[float]]) -> Column:
-    """array<long> of 0/1 signs for ALL planes in one loop expression —
-    the planes live in a single 2-D literal, so codegen emits one tight
-    loop instead of one chained expression per plane."""
-    planes_lit = F.array(*[F.array(*[F.lit(float(x)) for x in p]) for p in planes_2d])
-    return F.transform(
-        planes_lit,
-        lambda p: F.when(dot(vec, p) >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long"),
-    )
-
-
-# A crossover twin of _sign_bits: it stays a pandas UDF until an
-# interleaved A/B at two scales decides which of the two is kept.
-def _sign_bits_pandas(vec: Column, planes_2d: list[list[float]]) -> Column:
-    """BLAS fast path for wide plane sets: ONE matrix multiply per Arrow
-    batch instead of L*b higher-order dot products per row (~100x at
-    128+ planes; the HOF path allocates a zip_with array per plane per
-    row). Sign boundaries (dot exactly 0.0) could differ from the
-    Catalyst fold order in the last ulp, but bucket assignment only has
-    to be impl-CONSISTENT — both sides of every LSH join are hashed by
-    the same implementation — so this is safe for candidate generation
-    (the exact-cosine verify still decides membership)."""
+    """array<long> of 0/1 signs for all planes: ONE matrix multiply per
+    Arrow batch instead of L*b higher-order dot products per row (a
+    Catalyst fold allocates a zip_with array per plane per row and was
+    slower in an interleaved A/B already at 32 planes). A NULL
+    or wrong-length vector gets NULL signs, so its bucket is NULL: it
+    never equi-joins and is never a candidate or a result (the
+    ``_nearest_centroids`` / ``pq_encode`` contract). Sign boundaries
+    (dot exactly 0.0) depend on the BLAS summation order, but bucket
+    assignment only has to be CONSISTENT — both sides of every LSH join
+    are hashed here — and the exact-cosine verify decides membership.
+    Registered ``asNondeterministic`` for the reason ``pq_encode`` gives:
+    otherwise the join's inferred not-NULL filter on the bucket is
+    pushed below this projection and every vector is hashed twice."""
     from pyspark.sql.functions import pandas_udf
 
     P = np.asarray(planes_2d, dtype=np.float64).T  # (dim, L*b)
+    dim = P.shape[0]
 
     @pandas_udf("array<long>")
     def signs(v: pd.Series) -> pd.Series:
-        if v.empty:
-            return pd.Series([], dtype=object)
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        s = (m @ P >= 0).astype(np.int64)
-        return pd.Series(list(s))
+        out: list = [None] * len(v)
+        valid = [i for i, x in enumerate(v) if x is not None and len(x) == dim]
+        if valid:
+            m = np.stack([np.asarray(v.iloc[i], dtype=np.float64) for i in valid])
+            s = (m @ P >= 0).astype(np.int64)
+            for j, i in enumerate(valid):
+                out[i] = s[j]
+        return pd.Series(out, dtype=object)
 
-    return signs(vec)
-
-
-# plane count at or above which the pandas/BLAS sign path wins over the
-# Catalyst HOF path (measured crossover is well below this; conservative)
-_PANDAS_SIGNS_MIN_PLANES = 64
+    return signs.asNondeterministic()(vec)
 
 
 def _bucketed_packed(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int, n_tables: int, seed: int,
-    sign_impl: str = "auto",
+    df: DataFrame, vec_col: str, dim: int, n_planes: int, n_tables: int, seed: int
 ) -> DataFrame:
     """df plus ONE ``_tb`` array<struct<table,bucket>> column — the
     PRE-explode form of ``_bucketed``. Splitting this out lets callers
@@ -156,10 +156,7 @@ def _bucketed_packed(
     planes: list[list[float]] = []
     for t in range(n_tables):
         planes.extend(_hyperplanes(dim, n_planes, seed + 7919 * t))
-    if sign_impl == "auto":
-        sign_impl = "pandas" if len(planes) >= _PANDAS_SIGNS_MIN_PLANES else "catalyst"
-    sign_fn = _sign_bits_pandas if sign_impl == "pandas" else _sign_bits
-    step = df.withColumn("_signs", sign_fn(F.col(vec_col), planes))
+    step = df.withColumn("_signs", _sign_bits(F.col(vec_col), planes))
 
     def bucket_expr(t: int) -> Column:
         e = F.lit(0).cast("long")
@@ -189,14 +186,13 @@ def _explode_buckets(packed: DataFrame) -> DataFrame:
 
 
 def _bucketed(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int, n_tables: int, seed: int,
-    sign_impl: str = "auto",
+    df: DataFrame, vec_col: str, dim: int, n_planes: int, n_tables: int, seed: int
 ) -> DataFrame:
     """Explode into one row per (table, bucket) — the multi-table recall
     lever: a true neighbor missed by one table's split collides in
     another with prob 1-(1-p^b)^L, tunable without coarsening buckets."""
     return _explode_buckets(
-        _bucketed_packed(df, vec_col, dim, n_planes, n_tables, seed, sign_impl)
+        _bucketed_packed(df, vec_col, dim, n_planes, n_tables, seed)
     )
 
 
@@ -212,7 +208,6 @@ def lsh_topk(
     seed: int = 2024,
     round_digits: int = 6,
     max_bucket_size: int | None = 100_000,
-    sign_impl: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: score only pairs sharing a bucket in >=1 table.
 
@@ -224,7 +219,7 @@ def lsh_topk(
     tables (dedup._cap_buckets rationale).
     """
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = _vector_width(corpus, vec_col)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_cv")
     ).withColumn("_cn", l2norm(F.col("_cv")))
@@ -235,14 +230,14 @@ def lsh_topk(
     from pyspark import StorageLevel
 
     c_packed = _bucketed_packed(
-        c, "_cv", dim, n_planes, n_tables, seed, sign_impl
+        c, "_cv", dim, n_planes, n_tables, seed
     ).persist(StorageLevel.MEMORY_AND_DISK)
     c = _explode_buckets(c_packed)
     c = _cap_buckets(c, ["table", "bucket"], max_bucket_size)
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qv")
     ).withColumn("_qn", l2norm(F.col("_qv")))
-    q = _bucketed(q, "_qv", dim, n_planes, n_tables, seed, sign_impl)
+    q = _bucketed(q, "_qv", dim, n_planes, n_tables, seed)
     scored = (
         q.join(c, ["table", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -279,38 +274,21 @@ def _kmeans_centroids(sample: np.ndarray, k: int, iters: int, seed: int) -> np.n
     return cent
 
 
-def _nearest_centroids_expr(vec: Column, cents: np.ndarray, nprobe: int) -> Column:
-    """array of the nprobe nearest centroid ids (squared-L2), pure
-    Catalyst: distances as an array of expressions, ranked via sort of
-    (dist, id) structs. One expression PER CENTROID — fine at n_lists
-    ~16-64, but the plan grows linearly (codegen/constant-pool blowup at
-    the 4096 lists a 10^9-vector corpus wants); see
-    _nearest_centroids_pandas for the wide path."""
-    dists = []
-    for i, c in enumerate(cents):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        diff = F.zip_with(vec, lit, lambda a, b: (a - b) * (a - b))
-        d2 = F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-        dists.append(F.struct(d2.alias("d"), F.lit(i).alias("cid")))
-    ranked = F.array_sort(F.array(*dists))
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"])
-
-
-# A crossover twin of _nearest_centroids_expr, kept like _sign_bits_pandas.
-def _nearest_centroids_pandas(vec: Column, cents: np.ndarray, nprobe: int) -> Column:
-    """BLAS path for wide centroid sets: one (batch x dim)@(dim x k)
-    matmul + stable argsort per Arrow batch, constant plan size in
-    n_lists — mirrors _sign_bits_pandas. Selection is a STABLE argsort
-    on distance, so ties keep column (= cid) order — exactly the
-    Catalyst (dist, cid) struct sort INCLUDING ties at the nprobe cut
+def _nearest_centroids(vec: Column, cents: np.ndarray, nprobe: int) -> Column:
+    """array<int> of the nprobe nearest centroid ids (squared L2): one
+    (batch x dim)@(dim x k) matmul + stable argsort per Arrow batch, so
+    the plan size is constant in n_lists (one expression per centroid
+    lost an interleaved A/B even at 8-16 lists, and its plan grows
+    linearly toward the 4096 lists a 10^9-vector corpus wants). The
+    STABLE argsort on distance keeps column (= cid) order among ties,
+    so the ordering is (distance, cid), ties at the nprobe cut included
     (argpartition would pick an arbitrary tied subset there; the sort's
     O(k log k) is noise next to the O(k*dim) matmul). Null or
     wrong-dimension vectors yield a null assignment and drop out of the
-    list join, matching the Catalyst path's graceful degradation
-    instead of failing the task. float64 throughout; the distance
-    formula differs from the Catalyst fold in the last ulp, which only
-    matters for assignment CONSISTENCY — both corpus and queries go
-    through the same impl per call."""
+    list join instead of failing the task. float64 throughout; corpus
+    and queries go through this one kernel, so assignment is consistent
+    per call. ``asNondeterministic`` as in ``_sign_bits``: the list
+    join's not-NULL filter would otherwise run the kernel twice."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(cents, dtype=np.float64)
@@ -331,21 +309,7 @@ def _nearest_centroids_pandas(vec: Column, cents: np.ndarray, nprobe: int) -> Co
                 out[i] = ids[j]
         return pd.Series(out, dtype=object)
 
-    return probe(vec)
-
-
-# list count at or above which the pandas/BLAS assignment path wins (and
-# below which the pure-Catalyst plan stays small enough to prefer codegen)
-_PANDAS_ASSIGN_MIN_LISTS = 64
-
-
-def _nearest_centroids(
-    vec: Column, cents: np.ndarray, nprobe: int, impl: str = "auto"
-) -> Column:
-    if impl == "auto":
-        impl = "pandas" if len(cents) >= _PANDAS_ASSIGN_MIN_LISTS else "catalyst"
-    fn = _nearest_centroids_pandas if impl == "pandas" else _nearest_centroids_expr
-    return fn(vec, cents, nprobe)
+    return probe.asNondeterministic()(vec)
 
 
 _TRAIN_SAMPLE_MOD = 64
@@ -458,14 +422,13 @@ def ivf_topk(
     kmeans_iters: int = 8,
     seed: int = 7,
     round_digits: int = 6,
-    assign_impl: str = "auto",
     centroids: "np.ndarray | None" = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k.
 
     Train a coarse quantizer (k-means on a driver sample — deterministic
-    seed), assign each corpus vector to its nearest list (one Catalyst
-    projection; centroids are plan literals, no shuffle), probe the
+    seed), assign each corpus vector to its nearest list (one BLAS
+    matmul per Arrow batch, ``_nearest_centroids``; no shuffle), probe the
     ``nprobe`` nearest lists per query, score only same-list pairs.
     Candidate set per query ≈ nprobe/n_lists of the corpus — at 10^9
     vectors with 4096 lists and nprobe=8 that's a 512x scan reduction
@@ -486,12 +449,12 @@ def ivf_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_cv")
     )
-    c = c.withColumn("_list", _nearest_centroids(F.col("_cv"), cents, 1, assign_impl)[0])
+    c = c.withColumn("_list", _nearest_centroids(F.col("_cv"), cents, 1)[0])
     c = c.withColumn("_cn", l2norm(F.col("_cv")))
 
     q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qv"))
     q = q.withColumn(
-        "_list", F.explode(_nearest_centroids(F.col("_qv"), cents, nprobe, assign_impl))
+        "_list", F.explode(_nearest_centroids(F.col("_qv"), cents, nprobe))
     ).withColumn("_qn", l2norm(F.col("_qv")))
 
     scored = (
@@ -784,9 +747,7 @@ def _adc_search(
         )
         .withColumn(
             "list",
-            F.explode(
-                _nearest_centroids(F.col("_qv"), cents, nprobe, "auto")
-            ),
+            F.explode(_nearest_centroids(F.col("_qv"), cents, nprobe)),
         )
         .withColumn("_lut", lut_udf(F.col("_qv"), F.col("list")))
         .drop("_qv")
@@ -954,9 +915,7 @@ def pq_search(
     probe_lists = sorted(
         int(r["_l"])
         for r in queries.select(
-            F.explode(
-                _nearest_centroids(as_double(vec_col), cents, nprobe, "auto")
-            ).alias("_l")
+            F.explode(_nearest_centroids(as_double(vec_col), cents, nprobe)).alias("_l")
         )
         .distinct()
         .collect()
@@ -1173,7 +1132,6 @@ def embedding_near_duplicates(
     n_tables: int = 12,
     seed: int = 2024,
     max_bucket_size: int | None = 10_000,
-    sign_impl: str = "auto",
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, sim >= threshold).
@@ -1189,8 +1147,8 @@ def embedding_near_duplicates(
     the worst-case join size is bounded by n_tables * cap * |bucket
     count| rather than quadratic in the hottest bucket.
     """
-    if dim is None:  # a driver job; callers that know the width skip it
-        dim = len(df.select(vec_col).first()[0])
+    if dim is None:
+        dim = _vector_width(df, vec_col)
     v = df.select(F.col(id_col).alias("_id"), as_double(vec_col).alias("_v"))
     v = v.withColumn("_n", l2norm(F.col("_v")))
     # Persist the PACKED bucketed table (one (table,bucket) array per
@@ -1198,16 +1156,15 @@ def embedding_near_duplicates(
     # the bucketed rows three times (the bucket-size aggregation inside
     # _cap_buckets and both self-join sides), and each reference would
     # otherwise re-run the corpus scan + the n_tables*n_planes sign
-    # computation — for the pandas/BLAS sign path that is three
-    # ArrowEvalPython passes over the corpus instead of one (the
-    # fingerprint_near_dup persist_fps rationale). The cache holds
-    # corpus-size rows (vector + ~12 bytes/table), and MEMORY_AND_DISK
-    # spills instead of evicting at scale; the explode itself is cheap
-    # JVM work re-run per reference.
+    # computation — three ArrowEvalPython (BLAS sign) passes over the
+    # corpus instead of one (the fingerprint_near_dup persist_fps
+    # rationale). The cache holds corpus-size rows (vector + ~12
+    # bytes/table), and MEMORY_AND_DISK spills instead of evicting at
+    # scale; the explode itself is cheap JVM work re-run per reference.
     from pyspark import StorageLevel
 
     packed = _bucketed_packed(
-        v, "_v", dim, n_planes, n_tables, seed, sign_impl
+        v, "_v", dim, n_planes, n_tables, seed
     ).persist(StorageLevel.MEMORY_AND_DISK)
     rows = _explode_buckets(packed)
     rows = _cap_buckets(rows, ["table", "bucket"], max_bucket_size)

@@ -601,31 +601,18 @@ class RuleSet:
             .select("h.rule_id", "clip_id", "h.column_name", "h.message", "part_id")
         )
 
-    def verdicts(self, df: DataFrame, extra_violations: DataFrame | None = None) -> DataFrame:
+    def verdicts(self, df: DataFrame) -> DataFrame:
         """Per-partition pass/fail (BASELINE.json: per-partition verdicts).
 
         Partial aggregation is automatic (hash agg partial+final); the
         shuffle moves one row per (input partition x part_id), not data.
         """
-        base = self.flagged(df).groupBy("part_id").agg(
+        return self.flagged(df).groupBy("part_id").agg(
             F.count(F.lit(1)).alias("n_rows"),
             # cast("long") pins BIGINT on both engines (DuckDB sums to
             # HUGEINT; the driver's hash is type-sensitive through pandas)
             F.sum(F.size("_hits")).cast("long").alias("n_violations"),
-        )
-        if extra_violations is not None:
-            extra = extra_violations.groupBy("part_id").agg(
-                F.count(F.lit(1)).alias("_extra")
-            )
-            base = (
-                base.join(F.broadcast(extra), "part_id", "left")
-                .withColumn(
-                    "n_violations",
-                    F.col("n_violations") + F.coalesce(F.col("_extra"), F.lit(0)),
-                )
-                .drop("_extra")
-            )
-        return base.select(
+        ).select(
             "part_id",
             F.when(F.col("n_violations") > 0, F.lit("fail"))
             .otherwise(F.lit("pass"))

@@ -4,8 +4,8 @@ Iceberg. This module exists for the streaming-arrival case: the SAME rule
 compiler applied per micro-batch via foreachBatch and committed through
 the batch runner's ``CommitLog`` (``validate_stream_committed``,
 exactly-once across restarts), so batch and stream share one rule path
-(no semantic drift between modes), plus a native readStream aggregation
-for continuous verdict monitoring.
+(no semantic drift between modes), plus native streaming dedup and
+sessionization.
 """
 
 from __future__ import annotations
@@ -693,65 +693,6 @@ def committed_stream_violations(spark: SparkSession, out_dir: str) -> DataFrame:
     if not paths:
         return local_frame(spark, [], S.VIOLATIONS_SCHEMA)
     return spark.read.parquet(*paths)
-
-
-def windowed_violation_counts(
-    stream_df: DataFrame,
-    ruleset: RuleSet,
-    time_col: str,
-    window_duration: str = "1 minute",
-    watermark_delay: str = "5 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window violation rates — the late-data-safe
-    monitoring aggregation (append mode): per (window, part_id), rows and
-    rule hits. The watermark bounds state: windows older than the delay
-    are finalized and evicted, so state size is O(partitions x windows
-    within the watermark), independent of stream length."""
-    flagged = (
-        stream_df.withWatermark(time_col, watermark_delay)
-        .select(
-            F.col(time_col),
-            F.col(ruleset.part_col).alias("part_id"),
-            F.size(ruleset.hits_column()).alias("_n_hits"),
-        )
-    )
-    return (
-        flagged.groupBy(F.window(time_col, window_duration), "part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("_n_hits").alias("n_violations"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "part_id",
-            "n_rows",
-            "n_violations",
-        )
-    )
-
-
-def streaming_verdicts(
-    stream_df: DataFrame,
-    ruleset: RuleSet,
-    watermark_col: str | None = None,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Continuous per-partition verdict aggregation as a native streaming
-    agg (update mode): running n_rows / n_violations per part_id. With a
-    watermark the state store evicts old windows; without one this is a
-    complete-mode global aggregate suitable for monitoring dashboards."""
-    src = stream_df
-    if watermark_col is not None:
-        src = src.withWatermark(watermark_col, watermark_delay)
-    flagged = src.select(
-        F.col(ruleset.part_col).alias("part_id"),
-        F.size(ruleset.hits_column()).alias("_n_hits"),
-    )
-    return flagged.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("_n_hits").alias("n_violations"),
-    )
 
 
 def streaming_dedup(

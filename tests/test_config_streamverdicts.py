@@ -4,10 +4,7 @@ import json
 
 import pytest
 
-from mds_provider_spark import rules as R
-from mds_provider_spark import schema as S
 from mds_provider_spark.sources.config import ConfigFile
-from mds_provider_spark.streaming import stream as STR
 
 
 def test_config_section_merge(tmp_path):
@@ -23,27 +20,3 @@ def test_config_section_merge(tmp_path):
     assert got == {"version": "0.4.0", "token": "abc", "n_parts": 64, "snr_db": 30.0}
     with pytest.raises(KeyError):
         cfg.section("nope")
-
-
-def test_streaming_verdicts(spark, tmp_path):
-    src = tmp_path / "sv"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [("a", 16000, 0), ("b", 11025, 0), ("c", 48000, 1), ("d", 99, 1)],
-        "clip_id string, sr_hz int, part_id int",
-    )
-    df.write.mode("overwrite").parquet(str(src / "b0"))
-    stream = (
-        spark.readStream.schema("clip_id string, sr_hz int, part_id int")
-        .parquet(str(src / "b0"))
-    )
-    rs = R.RuleSet().add(R.is_in("sr_hz", S.SR_HZ_ENUM))
-    out = STR.streaming_verdicts(stream, rs)
-    q = (
-        out.writeStream.format("memory").queryName("sv_out")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(60)
-    got = {r.part_id: (r.n_rows, r.n_violations)
-           for r in spark.sql("select * from sv_out").collect()}
-    assert got == {0: (2, 1), 1: (2, 1)}

@@ -1,13 +1,10 @@
-"""IVF ANN, LSH bucket caps, watermarked window aggregation."""
+"""IVF ANN and its assignment kernel, LSH bucket caps and NULL vectors."""
 
 import numpy as np
 import pyspark.sql.functions as F
 
-from mds_provider_spark import rules as R
-from mds_provider_spark import schema as S
 from mds_provider_spark.operators import dedup as D
 from mds_provider_spark.operators import similarity as SIM
-from mds_provider_spark.streaming import stream as STR
 
 
 def _emb(spark, n=120, dim=8, seed=3):
@@ -187,40 +184,6 @@ def test_simhash_cap(spark):
     assert D.simhash_dedup(df, "doc_id", "text", max_bucket_size=None).count() > 10_000
 
 
-def test_windowed_violation_counts(spark, tmp_path):
-    src = tmp_path / "wsrc"
-    src.mkdir()
-    rows = [
-        ("a", 16000, 0, "2024-01-01 00:00:10"),
-        ("b", 11025, 0, "2024-01-01 00:00:20"),   # violation, window 0
-        ("c", 11025, 1, "2024-01-01 00:01:30"),   # violation, window 1
-        ("d", 48000, 1, "2024-01-01 00:01:40"),
-    ]
-    df = spark.createDataFrame(
-        rows, "clip_id string, sr_hz int, part_id int, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.write.mode("overwrite").parquet(str(src / "b0"))
-    stream = (
-        spark.readStream.schema("clip_id string, sr_hz int, part_id int, ts timestamp")
-        .parquet(str(src / "b0"))
-    )
-    rs = R.RuleSet().add(R.is_in("sr_hz", S.SR_HZ_ENUM))
-    out = STR.windowed_violation_counts(stream, rs, "ts", "1 minute", "2 minutes")
-    q = (
-        out.writeStream.format("memory").queryName("wv")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(60)
-    got = {
-        (str(r.window_start), r.part_id): (r.n_rows, r.n_violations)
-        for r in spark.sql("select * from wv").collect()
-    }
-    assert got == {
-        ("2024-01-01 00:00:00", 0): (2, 1),
-        ("2024-01-01 00:01:00", 1): (2, 1),
-    }
-
-
 def _formatted_plan(df) -> str:
     import contextlib
     import io
@@ -252,39 +215,28 @@ def test_cap_buckets_broadcasts_the_hot_set(spark):
     assert semi_broadcasts == [], semi_broadcasts
 
 
-def test_ivf_assignment_paths_equivalent(spark):
-    """The pandas/BLAS argmin assignment (constant plan size in n_lists)
-    must reproduce the Catalyst expression path exactly, partial probe
-    included."""
-    e = _emb(spark, n=80, dim=8, seed=5)
-    q = e.where("vec_id < 5")
-
-    def run(impl):
-        return sorted(
-            (r.query_id, r.rank, r.neighbor_id, r.cosine_sim)
-            for r in SIM.ivf_topk(
-                e, q, k=3, n_lists=8, nprobe=3, assign_impl=impl
-            ).collect()
-        )
-
-    assert run("catalyst") == run("pandas")
+def _brute_nearest(v, cents, nprobe):
+    """Reference assignment: exact squared L2 per centroid, ordered by
+    (distance, cid), first nprobe ids."""
+    d = ((np.asarray(v)[None, :] - cents) ** 2).sum(1)
+    return sorted(range(len(cents)), key=lambda i: (d[i], i))[:nprobe]
 
 
 def test_nearest_centroid_exprs_agree(spark):
-    """Direct check of both assignment kernels: nprobe-nearest centroid
-    ids (distance-then-id ordering) must match element-for-element."""
+    """The BLAS assignment kernel against a NumPy brute force: the
+    nprobe-nearest centroid ids, (distance, cid) order, element for
+    element."""
     rng = np.random.default_rng(11)
     cents = rng.standard_normal((16, 6))
     rows = [(i, [float(x) for x in rng.standard_normal(6)]) for i in range(50)]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    both = df.select(
-        "id",
-        SIM._nearest_centroids_expr(F.col("v"), cents, 4).alias("a"),
-        SIM._nearest_centroids_pandas(F.col("v"), cents, 4).alias("b"),
-    ).collect()
-    assert len(both) == 50
-    for r in both:
-        assert list(r.a) == list(r.b), (r.id, list(r.a), list(r.b))
+    got = {
+        r.id: list(r.a)
+        for r in df.select(
+            "id", SIM._nearest_centroids(F.col("v"), cents, 4).alias("a")
+        ).collect()
+    }
+    assert got == {i: _brute_nearest(v, cents, 4) for i, v in rows}
 
 
 def test_pandas_assignment_null_and_ragged_vectors(spark):
@@ -298,29 +250,58 @@ def test_pandas_assignment_null_and_ragged_vectors(spark):
     got = {
         r.id: r.a
         for r in df.select(
-            "id", SIM._nearest_centroids_pandas(F.col("v"), cents, 2).alias("a")
+            "id", SIM._nearest_centroids(F.col("v"), cents, 2).alias("a")
         ).collect()
     }
     assert got[1] is None and got[2] is None
     assert got[0] is not None and len(got[0]) == 2
 
 
+def test_lsh_null_and_ragged_vectors_never_match(spark):
+    """A NULL vector and a wrong-length vector in an 8-dim table get NULL
+    signs: both LSH operators finish at their defaults, and neither bad
+    row appears in any output row (no bucket, so never a candidate, a
+    query hit or a result). The NULL row comes first, so it must not
+    decide the inferred width either."""
+    rng = np.random.default_rng(9)
+    base = rng.standard_normal((40, 8))
+    base[1] = base[0] + 0.001 * rng.standard_normal(8)  # one near-dup pair
+    rows = [(100, None)]
+    rows += [(i, [float(x) for x in base[i]]) for i in range(40)]
+    rows += [(101, [1.0, 2.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    bad = {100, 101}
+
+    pairs = [(r.id_a, r.id_b) for r in SIM.embedding_near_duplicates(df).collect()]
+    assert (0, 1) in pairs
+    assert not bad & {x for p in pairs for x in p}, pairs
+
+    topk = SIM.lsh_topk(df, df.where("vec_id in (0, 100, 101)")).collect()
+    assert {r.query_id for r in topk} == {0}
+    assert not bad & {r.neighbor_id for r in topk}
+    assert all(r.cosine_sim is not None for r in topk)
+
+
 def test_assignment_kernels_agree_on_distance_ties(spark):
     """Duplicate centroids create exact distance ties AT the nprobe cut;
-    both kernels must select the lowest centroid ids (stable order),
-    not an arbitrary tied subset."""
+    the kernel must select the lowest centroid ids (stable order), as
+    the brute force does, not an arbitrary tied subset."""
     rng = np.random.default_rng(4)
     base = rng.standard_normal((4, 6))
     cents = np.vstack([base, base, base])  # every distance tied 3 ways
     rows = [(i, [float(x) for x in rng.standard_normal(6)]) for i in range(20)]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    both = df.select(
-        "id",
-        SIM._nearest_centroids_expr(F.col("v"), cents, 5).alias("a"),
-        SIM._nearest_centroids_pandas(F.col("v"), cents, 5).alias("b"),
-    ).collect()
-    for r in both:
-        assert list(r.a) == list(r.b), (r.id, list(r.a), list(r.b))
+    got = {
+        r.id: list(r.a)
+        for r in df.select(
+            "id", SIM._nearest_centroids(F.col("v"), cents, 5).alias("a")
+        ).collect()
+    }
+    want = {i: _brute_nearest(v, cents, 5) for i, v in rows}
+    assert got == want
+    # the cut falls inside a tie: the second-nearest centroid's copies
+    # (cid, cid+4, cid+8) all have the same distance, lowest ids first
+    assert all(len(set(np.asarray(a) % 4)) == 2 for a in got.values())
 
 
 def test_append_replay_duplicates_never_duplicate_topk(spark, tmp_path):

@@ -362,21 +362,22 @@ def test_resolve_groups_long_chain_pointer_doubling(spark):
     assert got == {i: 0 for i in range(60)}
 
 
-def test_resolve_groups_nonconvergence_raises(spark):
+def test_resolve_groups_nonconvergence_raises(spark, monkeypatch):
     """When max_iters genuinely can't cover the chain, the DISTRIBUTED
     resolver must RAISE, never return partially-merged groups (keep-one
-    would silently retain extra exemplars). local_threshold=0 forces the
-    contraction path — below the threshold the driver-side union-find
+    would silently retain extra exemplars). _LOCAL_MAX_EDGES=0 forces the
+    contraction path — below the cutoff the driver-side union-find
     solves any graph exactly, so the guard is contraction-specific."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(49)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(D, "_LOCAL_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.resolve_duplicate_groups(pairs, max_iters=2, local_threshold=0)
+        D.resolve_duplicate_groups(pairs, max_iters=2)
 
 
-def test_resolve_groups_local_matches_distributed(spark):
-    """The hybrid cutoff (driver-side union-find below local_threshold
+def test_resolve_groups_local_matches_distributed(spark, monkeypatch):
+    """The hybrid cutoff (driver-side union-find up to _LOCAL_MAX_EDGES
     edges) must produce the identical (doc_id, group_id) mapping the
     star-contraction path produces — bridge graph, chains, and
     singleton pairs in one go."""
@@ -385,15 +386,16 @@ def test_resolve_groups_local_matches_distributed(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     local = {(r.doc_id, r.group_id)
              for r in D.resolve_duplicate_groups(pairs).collect()}
+    monkeypatch.setattr(D, "_LOCAL_MAX_EDGES", 0)
     dist = {(r.doc_id, r.group_id)
-            for r in D.resolve_duplicate_groups(pairs, local_threshold=0).collect()}
+            for r in D.resolve_duplicate_groups(pairs).collect()}
     assert local == dist
     assert local == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
                      (10, 10), (11, 10), (20, 20), (21, 20), (22, 20),
                      (30, 30), (31, 30)}
 
 
-def test_resolve_groups_reliable_checkpoint_dir(spark, tmp_path):
+def test_resolve_groups_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
     """The cluster fault-tolerance knob: with reliable_checkpoint_dir
     set, every reliable_every-th round uses a RELIABLE checkpoint()
     (recomputable after executor loss), rounds between cuts keep their
@@ -407,11 +409,11 @@ def test_resolve_groups_reliable_checkpoint_dir(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(D, "_LOCAL_MAX_EDGES", 0)  # the contraction path
     got = {
         r.doc_id: r.group_id
         for r in D.resolve_duplicate_groups(
             pairs, reliable_checkpoint_dir=str(ckpt), reliable_every=2,
-            local_threshold=0,  # force the contraction path under test
         ).collect()
     }
     assert got == {i: 0 for i in range(31)}
