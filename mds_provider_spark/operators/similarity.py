@@ -15,9 +15,10 @@ Two paths, same contract:
 
 LSH sign bits and IVF list assignment run in BLAS: one matrix multiply
 per Arrow batch (``_sign_bits``, ``_nearest_centroids``). Scoring stays in
-Catalyst (``dot``/``l2norm``: `zip_with` + `aggregate`, codegen'd); no
-Python in the scoring loop. Vectors are cast to double once so scores are
-engine-reproducible (float accumulation order would not be).
+Catalyst (``_cosine_sim`` over ``dot``/``l2norm``: `zip_with` +
+`aggregate`, codegen'd); no Python in the scoring loop. Vectors are cast
+to double once so scores are engine-reproducible (float accumulation
+order would not be).
 """
 
 from __future__ import annotations
@@ -46,8 +47,14 @@ def l2norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+def _cosine_sim(a: str, b: str, a_norm: str, b_norm: str, digits: int) -> Column:
+    """The one cosine scorer: vectors ``a``, ``b`` with their precomputed
+    L2 norms, rounded to ``digits`` as ``cosine_sim``. NULL when either
+    side is the zero vector (it has no direction), never a divide-by-zero
+    failure; a NULL ranks last in a top-k and never clears a threshold."""
+    return F.round(
+        F.try_divide(dot(F.col(a), F.col(b)), F.col(a_norm) * F.col(b_norm)), digits
+    ).alias("cosine_sim")
 
 
 def brute_force_topk(
@@ -76,8 +83,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-                    round_digits).alias("cosine_sim"),
+            _cosine_sim("_qv", "_cv", "_qn", "_cn", round_digits),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -244,8 +250,7 @@ def lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-                    round_digits).alias("cosine_sim"),
+            _cosine_sim("_qv", "_cv", "_qn", "_cn", round_digits),
         )
         .distinct()  # a pair can collide in several tables
     )
@@ -463,8 +468,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-                    round_digits).alias("cosine_sim"),
+            _cosine_sim("_qv", "_cv", "_qn", "_cn", round_digits),
         )
         .distinct()  # a neighbor can appear via several probed lists
     )
@@ -814,11 +818,7 @@ def _adc_search(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn")),
-                round_digits,
-            ).alias("cosine_sim"),
+            _cosine_sim("_qv", "_cv", "_qn", "_cn", round_digits),
         )
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -1175,9 +1175,7 @@ def embedding_near_duplicates(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            F.round(
-                dot(F.col("a._v"), F.col("b._v")) / (F.col("a._n") * F.col("b._n")), 6
-            ).alias("cosine_sim"),
+            _cosine_sim("a._v", "b._v", "a._n", "b._n", 6),
         )
         .where(F.col("cosine_sim") >= threshold)
         .distinct()

@@ -240,6 +240,27 @@ def mg_partition_summaries(
     )
 
 
+def mg_merged_top(
+    df: DataFrame, col: str, capacity: int, n: int
+) -> "tuple[int, list]":
+    """Merge the per-partition Misra–Gries summaries of ``col`` and return
+    ``(n_nonnull, rows)``: the column's non-null count and the top ``n``
+    merged ``(value, est)`` rows by est desc, value asc. One bounded
+    collect of n+1 rows (the NULL total row sorts first); the merged set
+    itself, up to partitions*(capacity+1) rows, never reaches the driver.
+    ``frequent_items`` and the stream's marker-borne summaries share it."""
+    head = (
+        mg_partition_summaries(df, col, capacity)
+        .groupBy("value").agg(F.sum("weight").alias("est"))
+        .orderBy(F.col("value").isNotNull(), F.desc("est"), F.asc("value"))
+        .limit(n + 1)
+        .collect()
+    )
+    if head and head[0]["value"] is None:
+        return int(head[0]["est"]), head[1:]
+    return 0, head
+
+
 def frequent_items(
     df: DataFrame,
     col: str,
@@ -294,56 +315,28 @@ def frequent_items(
             "Raise mg_capacity above 1/threshold_frac - 1."
         )
     cap = int(mg_capacity)
-    summaries = mg_partition_summaries(df, col, cap)
-    # NOTE on the merge shuffle size: summaries hold <= (cap+1) rows per
-    # input partition, so even 10^6 partitions merge in one small stage.
-    # The DRIVER, however, never sees that merged set: at 10^6 partitions
-    # it is up to ~partitions*(cap+1) ≈ 10^8-10^9 distinct rows — a
-    # driver-OOM if collected. n_total comes back as ONE row, the cutoff
-    # filter runs distributed, and the only collect is the candidate set
-    # itself, bounded by max_candidates + 1 BY CONSTRUCTION (limit before
-    # collect; the loud cap check runs on that bounded list). ``merged``
-    # is persisted so the sketch scan (stage 1) runs once, not three
-    # times — it is summary-scale, not data-scale.
-    merged = summaries.groupBy("value").agg(F.sum("weight").alias("est"))
-    merged.persist()
-    try:
-        # ONE bounded collect for BOTH the total and the candidates
-        # (round 7; previously two driver jobs): the NULL row (summed
-        # per-partition non-null counts) sorts first, then the top
-        # max_candidates+1 summary rows by estimate. Sorting by est is
-        # sound because the candidate set is {v: est >= cutoff} — if
-        # the LAST collected row still clears the cutoff the set may be
-        # truncated and the loud cap check fires; otherwise every
-        # candidate is inside the collected prefix. Still candidate-
-        # scale: max_candidates + 2 rows, never summary-scale.
-        head = (
-            merged.orderBy(
-                F.col("value").isNotNull().cast("int").asc(), F.desc("est")
-            )
-            .limit(max_candidates + 2)
-            .collect()
+    # The merged summary set holds up to partitions*(cap+1) rows — a
+    # driver-OOM at 10^6 partitions if collected. The one collect is its
+    # NULL total row plus the top max_candidates+1 rows by estimate.
+    # Sorting by est is sound because the candidate set is {v: est >=
+    # cutoff} — if the LAST collected row still clears the cutoff the set
+    # may be truncated and the loud cap check fires; otherwise every
+    # candidate is inside the collected prefix.
+    n_total, rest = mg_merged_top(df, col, cap, max_candidates + 1)
+    if n_total == 0:
+        return df.select(F.col(col).alias("value")).limit(0).withColumn(
+            "cnt", F.lit(0).cast("long")
         )
-        n_total = (
-            int(head[0]["est"]) if head and head[0]["value"] is None else 0
+    threshold = int(math.ceil(threshold_frac * n_total))
+    cutoff = threshold - n_total // (cap + 1)
+    if len(rest) > max_candidates and int(rest[-1]["est"]) >= cutoff:
+        raise RuntimeError(
+            f"frequent_items: more than max_candidates="
+            f"{max_candidates} candidates survive the cutoff — the "
+            "column is too high-entropy for this threshold; raise "
+            "the threshold or the cap"
         )
-        if n_total == 0:
-            return df.select(F.col(col).alias("value")).limit(0).withColumn(
-                "cnt", F.lit(0).cast("long")
-            )
-        threshold = int(math.ceil(threshold_frac * n_total))
-        cutoff = threshold - n_total // (cap + 1)
-        rest = head[1:]
-        if len(rest) > max_candidates and int(rest[-1]["est"]) >= cutoff:
-            raise RuntimeError(
-                f"frequent_items: more than max_candidates="
-                f"{max_candidates} candidates survive the cutoff — the "
-                "column is too high-entropy for this threshold; raise "
-                "the threshold or the cap"
-            )
-        cands = [r["value"] for r in rest if int(r["est"]) >= cutoff]
-    finally:
-        merged.unpersist()
+    cands = [r["value"] for r in rest if int(r["est"]) >= cutoff]
     spark = df.sparkSession
     # "_fi_cand" dodges collisions with the caller's own columns (the
     # left_semi join resolves both sides' names in one scope)

@@ -126,9 +126,10 @@ def keyed_plan(ruleset: RuleSet, clips: DataFrame,
 def keyed_violations(plan: DataFrame, pcm: DataFrame | None = None) -> DataFrame:
     """The one violation builder: every finding of a ``keyed_plan`` as
     VIOLATIONS_SCHEMA rows, plus the PCM frame the caller built with its
-    reader. The same rows as the union of ``ruleset.violations`` and the
+    reader. The same rows as the union of the row-rule findings and the
     stand-alone ``duplicate_violations``, ``referential_violations`` and
-    ``transcript_mismatch_violations``, from one exchange per table."""
+    ``transcript_mismatch_violations``, from one exchange per table.
+    ``RuleSet.violations`` is this builder over a row-rules-only plan."""
     v = (plan.select("clip_id", "part_id", F.explode("_hits").alias("h"))
          .select("h.rule_id", "clip_id", "h.column_name", "h.message", "part_id"))
     return v if pcm is None else v.unionByName(pcm)

@@ -12,9 +12,10 @@ in ``DataValidationError``). Instead of an interpreted per-record walk, a
 
 which Catalyst fuses into a single whole-stage-codegen stage over the
 scan — one pass over 100 TB regardless of rule count, with column pruning
-limited to exactly the columns the rules reference. Violations are
-``explode(hits)``; per-partition verdicts are a groupBy over the same
-projection (shared scan).
+limited to exactly the columns the rules reference. Violation rows and
+per-partition verdicts come from ``plans.runner.keyed_violations`` and
+``keyed_verdicts`` over that projection (``keyed_plan`` with no cross-row
+checks), the same builders ``api.Validator`` and the batch runner use.
 
 JSON-Schema keyword -> rule mapping (SURVEY.md §2.2):
   required            -> not_null          (P1)
@@ -34,7 +35,7 @@ fire on NULL (that's ``not_null``'s job), mirroring JSON Schema where
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -575,51 +576,30 @@ class RuleSet:
         arr = F.array(*[r.hit() for r in self.rules])
         return F.filter(arr, lambda x: x.isNotNull())
 
-    def flagged(self, df: DataFrame) -> DataFrame:
-        """ONE projection: (clip_id, part_id, _hits). Whole-stage codegen;
-        shared by violations() and verdicts() so the scan happens once
-        when the caller persists or writes it."""
-        return df.select(
-            F.col(self.key_col).alias("clip_id"),
-            F.col(self.part_col).alias("part_id"),
-            self.hits_column().alias("_hits"),
-        )
-
     def violations(self, df: DataFrame) -> DataFrame:
-        """Row-level violations in the canonical VIOLATIONS_SCHEMA order.
+        """Row-level violations in the canonical VIOLATIONS_SCHEMA order:
+        ``keyed_violations`` over this rule set's ``keyed_plan`` without
+        unique keys or transcripts.
 
         Does NOT include cross-row (unique/referential) violations — those
-        need shuffles and come from the runner's keyed plan
-        (``plans.runner.keyed_violations``), which is this projection
-        alone when there are none. Keeping this path shuffle-free means it
-        pipelines with the scan at 100 TB.
+        need shuffles and come from the full keyed plan. Keeping this path
+        shuffle-free means it pipelines with the scan at 100 TB.
         """
-        return (
-            self.flagged(df)
-            .where(F.size("_hits") > 0)
-            .select("clip_id", "part_id", F.explode("_hits").alias("h"))
-            .select("h.rule_id", "clip_id", "h.column_name", "h.message", "part_id")
-        )
+        from mds_provider_spark.plans.runner import keyed_plan, keyed_violations
+
+        return keyed_violations(keyed_plan(replace(self, unique_keys=[]), df))
 
     def verdicts(self, df: DataFrame) -> DataFrame:
-        """Per-partition pass/fail (BASELINE.json: per-partition verdicts).
+        """Per-partition pass/fail (BASELINE.json: per-partition verdicts):
+        ``keyed_verdicts`` over the same row-rules-only plan as
+        ``violations``.
 
         Partial aggregation is automatic (hash agg partial+final); the
         shuffle moves one row per (input partition x part_id), not data.
         """
-        return self.flagged(df).groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            # cast("long") pins BIGINT on both engines (DuckDB sums to
-            # HUGEINT; the driver's hash is type-sensitive through pandas)
-            F.sum(F.size("_hits")).cast("long").alias("n_violations"),
-        ).select(
-            "part_id",
-            F.when(F.col("n_violations") > 0, F.lit("fail"))
-            .otherwise(F.lit("pass"))
-            .alias("status"),
-            "n_rows",
-            "n_violations",
-        )
+        from mds_provider_spark.plans.runner import keyed_plan, keyed_verdicts
+
+        return keyed_verdicts(keyed_plan(replace(self, unique_keys=[]), df))
 
     def verdicts_from_violations(
         self, df: DataFrame, all_violations: DataFrame

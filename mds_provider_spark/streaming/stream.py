@@ -1,7 +1,9 @@
 """Streaming validation — the reference has NO streaming (its "paging" is
 synchronous HTTP, mds/api.py ≈L150–250); the north rule is batch over
 Iceberg. This module exists for the streaming-arrival case: the SAME rule
-compiler applied per micro-batch via foreachBatch and committed through
+compiler and finding builders (``RuleSet.violations``/``verdicts``, i.e.
+the runner's ``keyed_violations``/``keyed_verdicts``) applied per
+micro-batch via foreachBatch and committed through
 the batch runner's ``CommitLog`` (``validate_stream_committed``,
 exactly-once across restarts), so batch and stream share one rule path
 (no semantic drift between modes), plus native streaming dedup and
@@ -16,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from mds_provider_spark.plans.checkpoint import CommitLog
 from mds_provider_spark.rules import RuleSet
 from mds_provider_spark.session import local_frame
 
@@ -127,8 +130,6 @@ def validate_stream_committed(
     O(groups x emb_dim), batch-size independent; ``emb_group_col``
     must therefore be LOW-cardinality (label/domain/source), the same
     contract as the other marker payloads."""
-    from mds_provider_spark.plans.checkpoint import CommitLog
-
     log = CommitLog(out_dir)
     if ruleset.part_col not in stream_df.columns:
         raise ValueError(
@@ -217,32 +218,18 @@ def validate_stream_committed(
 
     def _process_batch(batch_df: DataFrame, bid: int, ckpt_key: str) -> None:
         target = os.path.join(out_dir, "violations", f"batch_id={bid}")
-        # one scan for all counts — per input PARTITION (north rule:
-        # per-partition pass/fail), rolled up for the batch marker
-        per_part = (
-            batch_df.select(
-                F.col(ruleset.part_col).alias("part_id"),
-                F.size(ruleset.hits_column()).alias("_n"),
-            )
-            .groupBy("part_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("_n").alias("n_violations"),
-            )
-            .collect()
-        )
-        n_rows = sum(int(r["n_rows"]) for r in per_part)
-        n_violations = sum(int(r["n_violations"] or 0) for r in per_part)
+        # per input PARTITION counts (north rule: per-partition
+        # pass/fail), rolled up for the batch marker
+        per_part = ruleset.verdicts(batch_df).collect()
+        n_rows = sum(r["n_rows"] for r in per_part)
+        n_violations = sum(r["n_violations"] for r in per_part)
         ruleset.violations(batch_df).write.mode("overwrite").parquet(target)
         extra = {"kind": "stream_batch",
                  "checkpoint": ckpt_key,
                  "n_rows": n_rows,
                  "n_violations": n_violations,
-                 "per_part": {
-                     str(r["part_id"]): [int(r["n_rows"]),
-                                         int(r["n_violations"] or 0)]
-                     for r in per_part
-                 }}
+                 "per_part": {str(r["part_id"]): [r["n_rows"], r["n_violations"]]
+                              for r in per_part}}
         if drift_cols:
             from mds_provider_spark.operators.stats import profile
 
@@ -278,33 +265,13 @@ def validate_stream_committed(
                 ],
             }
         if hh_col:
-            from mds_provider_spark.operators.stats import (
-                mg_partition_summaries,
-            )
+            from mds_provider_spark.operators.stats import mg_merged_top
 
-            merged = mg_partition_summaries(
-                batch_df, hh_col, hh_capacity
-            ).groupBy("value").agg(F.sum("weight").alias("est"))
-            merged.persist()
-            try:
-                n_nonnull = int(
-                    merged.where(F.col("value").isNull())
-                    .agg(F.coalesce(F.sum("est"), F.lit(0)))
-                    .first()[0]
-                )
-                # driver-side MG re-trim to hh_capacity needs only the
-                # top cap+1 merged rows (everything below the (cap+1)-th
-                # weight is dropped by the trim anyway), so the collect
-                # is bounded by the CAPACITY, not by batch partitions —
-                # the frequent_items discipline applied to the stream.
-                top = (
-                    merged.where(F.col("value").isNotNull())
-                    .orderBy(F.desc("est"), F.asc("value"))
-                    .limit(int(hh_capacity) + 1)
-                    .collect()
-                )
-            finally:
-                merged.unpersist()
+            # driver-side MG re-trim to hh_capacity needs only the top
+            # cap+1 merged rows (everything below the (cap+1)-th weight is
+            # dropped by the trim anyway)
+            n_nonnull, top = mg_merged_top(batch_df, hh_col, hh_capacity,
+                                           int(hh_capacity) + 1)
             d = int(top[-1]["est"]) if len(top) > int(hh_capacity) else 0
             counters = {
                 r["value"]: int(r["est"]) - d
@@ -341,25 +308,31 @@ def validate_stream_committed(
     return writer.start()
 
 
+def _markers(out_dir: str, keys: "tuple[str, ...]",
+             missing: str) -> "list[tuple[int, dict]]":
+    """Committed ``(batch, marker)`` pairs in batch order, each checked to
+    carry every one of ``keys``. A marker without one RAISES ("commit marker for batch
+    <b> carries no <missing>"): skipping the batch or defaulting its
+    payload to 0 would hide a monitoring gap with no signal."""
+    pairs = sorted(CommitLog(out_dir).committed_groups().items())
+    for b, meta in pairs:
+        if any(meta.get(k) is None for k in keys):
+            raise RuntimeError(f"commit marker for batch {b} carries no {missing}")
+    return pairs
+
+
 def committed_stream_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-BATCH pass/fail verdicts from the commit markers alone —
     the streaming twin of the batch runner's per-partition verdicts
     (north rule: per-partition lineage + metrics rows). Metadata-only:
     no violation data is scanned."""
-    from mds_provider_spark.plans.checkpoint import CommitLog
-
     rows = []
-    for b, meta in sorted(CommitLog(out_dir).committed_groups().items()):
-        if "n_rows" not in meta or "n_violations" not in meta:
-            # loud, matching committed_stream_part_verdicts: defaulting a
-            # legacy/malformed marker to 0 would report the batch as a
-            # PASSING one with no signal that the counts are missing
-            raise RuntimeError(
-                f"commit marker for batch {b} carries no row/violation "
-                "counts (written by an older sink); batch verdicts cannot "
-                "be reconstructed from it — recompute from "
-                "committed_stream_violations instead"
-            )
+    for b, meta in _markers(
+        out_dir, ("n_rows", "n_violations"),
+        "row/violation counts (written by an older sink); batch verdicts "
+        "cannot be reconstructed from it — recompute from "
+        "committed_stream_violations instead",
+    ):
         rows.append(
             (
                 int(b),
@@ -383,19 +356,13 @@ def committed_stream_part_verdicts(spark: SparkSession, out_dir: str) -> DataFra
     micro-batches aggregates them all)."""
     from collections import defaultdict
 
-    from mds_provider_spark.plans.checkpoint import CommitLog
-
     acc: dict[int | None, list[int]] = defaultdict(lambda: [0, 0])
-    for b, meta in sorted(CommitLog(out_dir).committed_groups().items()):
-        if "per_part" not in meta:
-            # loud like the checkpoint-mismatch guard: silently skipping
-            # a marked batch would under-count partitions with no signal
-            raise RuntimeError(
-                f"commit marker for batch {b} carries no per-partition "
-                "counts (written by an older sink); per-partition verdicts "
-                "cannot be reconstructed from it — recompute from "
-                "committed_stream_violations instead"
-            )
+    for b, meta in _markers(
+        out_dir, ("per_part",),
+        "per-partition counts (written by an older sink); per-partition "
+        "verdicts cannot be reconstructed from it — recompute from "
+        "committed_stream_violations instead",
+    ):
         for pid, (nr, nv) in meta["per_part"].items():
             # rows with NULL part_id are reported under part_id NULL,
             # never dropped (batch totals and partition totals must agree)
@@ -419,18 +386,14 @@ def committed_stream_snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     loudly on a marked batch without drift metadata (sink ran without
     ``drift_cols``): silently skipping it would hide a monitoring gap,
     matching the policy of the other marker readers."""
-    from mds_provider_spark.plans.checkpoint import CommitLog
-
     rows = []
-    for b, meta in sorted(CommitLog(out_dir).committed_groups().items()):
-        if "drift" not in meta:
-            raise RuntimeError(
-                f"commit marker for batch {b} carries no drift snapshot "
-                "(the sink ran without drift_cols); per-batch drift cannot "
-                "be reconstructed from markers — rerun the stream with "
-                "drift_cols set, or snapshot committed_stream_* output "
-                "with operators.drift.snapshot instead"
-            )
+    for b, meta in _markers(
+        out_dir, ("drift",),
+        "drift snapshot (the sink ran without drift_cols); per-batch drift "
+        "cannot be reconstructed from markers — rerun the stream with "
+        "drift_cols set, or snapshot committed_stream_* output with "
+        "operators.drift.snapshot instead",
+    ):
         for col, s in sorted(meta["drift"].items()):
             rows.append((
                 int(b), col,
@@ -477,18 +440,14 @@ def committed_stream_histogram_counts(
     Raises loudly on a marked batch without histogram metadata or with a
     bin grid that disagrees with the others (PSI across batches is only
     comparable on one grid), matching the other marker readers."""
-    from mds_provider_spark.plans.checkpoint import CommitLog
-
     rows, bins, n_bins = [], None, None
-    for b, meta in sorted(CommitLog(out_dir).committed_groups().items()):
-        h = meta.get("hist")
-        if h is None:
-            raise RuntimeError(
-                f"commit marker for batch {b} carries no histogram counts "
-                "(the sink ran without hist_bins); per-batch PSI cannot be "
-                "reconstructed from markers — rerun the stream with "
-                "hist_bins set"
-            )
+    for b, meta in _markers(
+        out_dir, ("hist",),
+        "histogram counts (the sink ran without hist_bins); per-batch PSI "
+        "cannot be reconstructed from markers — rerun the stream with "
+        "hist_bins set",
+    ):
+        h = meta["hist"]
         grid = {c: (float(lo), float(hi)) for c, (lo, hi) in h["bins"].items()}
         if bins is None:
             bins, n_bins = grid, int(h["n_bins"])
@@ -578,20 +537,16 @@ def committed_stream_heavy_hitters(
     without a summary, matching the other marker readers."""
     import math
 
-    from mds_provider_spark.plans.checkpoint import CommitLog
-
     if threshold_frac <= 0 or threshold_frac > 1:
         raise ValueError(f"threshold_frac must be in (0, 1]: {threshold_frac}")
     rows = []
-    for b, meta in sorted(CommitLog(out_dir).committed_groups().items()):
-        hh = meta.get("hh")
-        if hh is None:
-            raise RuntimeError(
-                f"commit marker for batch {b} carries no heavy-hitter "
-                "summary (the sink ran without hh_col); hot keys cannot "
-                "be reconstructed from markers — rerun the stream with "
-                "hh_col set"
-            )
+    for b, meta in _markers(
+        out_dir, ("hh",),
+        "heavy-hitter summary (the sink ran without hh_col); hot keys "
+        "cannot be reconstructed from markers — rerun the stream with "
+        "hh_col set",
+    ):
+        hh = meta["hh"]
         n = int(hh["n"])
         if n == 0:
             continue
@@ -646,22 +601,16 @@ def committed_stream_embedding_drift(
     Groups absent from either side are skipped (category story), and a
     dim/grid mismatch between baseline and markers raises."""
     from mds_provider_spark.operators.drift import drift_from_summaries
-    from mds_provider_spark.plans.checkpoint import CommitLog
 
-    committed = sorted(CommitLog(out_dir).committed_groups().items())
-    for b, meta in committed:
-        if "emb" not in meta:
-            raise RuntimeError(
-                f"commit marker for batch {b} carries no embedding "
-                "summary (the sink ran without emb_col); embedding drift "
-                "cannot be reconstructed from markers. Markers already "
-                "committed without summaries are never rewritten (replay "
-                "skips committed batches), so start a NEW out/checkpoint "
-                "pair with emb_col set"
-            )
     rows = []
     base = baseline
-    for b, meta in committed:
+    for b, meta in _markers(
+        out_dir, ("emb",),
+        "embedding summary (the sink ran without emb_col); embedding drift "
+        "cannot be reconstructed from markers. Markers already committed "
+        "without summaries are never rewritten (replay skips committed "
+        "batches), so start a NEW out/checkpoint pair with emb_col set",
+    ):
         emb = meta["emb"]
         if base is None:
             base = emb
@@ -683,7 +632,6 @@ def committed_stream_violations(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read violation rows of MARKED batches only — uncommitted dirs from
     crashed attempts never reach a reader."""
     from mds_provider_spark import schema as S
-    from mds_provider_spark.plans.checkpoint import CommitLog
 
     ids = sorted(CommitLog(out_dir).committed_groups())
     paths = [

@@ -505,6 +505,42 @@ def test_library_has_one_distinct_sketch():
     assert not hits, "HLL++ outside stats.approx_distinct: " + ", ".join(hits)
 
 
+def test_library_has_one_finding_builder():
+    """No Spark needed: the hit array ``_hits`` is exploded into violation
+    rows only in ``keyed_violations`` and counted into per-part verdicts
+    only in ``keyed_verdicts``; ``RuleSet``, the runner, ``Validator`` and
+    the committed stream all go through those two builders."""
+    import ast
+    import pathlib
+
+    import mds_provider_spark
+
+    def on_hits(arg):
+        if isinstance(arg, ast.Call) and arg.args:  # F.col("_hits")
+            arg = arg.args[0]
+        return isinstance(arg, ast.Constant) and arg.value == "_hits"
+
+    root = pathlib.Path(mds_provider_spark.__file__).parent
+    sites = set()
+
+    def walk(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, rel, child.name)
+                continue
+            if isinstance(child, ast.Call) and child.args and on_hits(child.args[0]):
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in ("explode", "size"):
+                    sites.add((rel, fn, name))
+            walk(child, rel, fn)
+
+    for p in sorted(root.rglob("*.py")):
+        walk(ast.parse(p.read_text(), str(p)), p.relative_to(root).as_posix(), None)
+    assert sites == {("plans/runner.py", "keyed_violations", "explode"),
+                     ("plans/runner.py", "keyed_verdicts", "size")}, sorted(sites)
+
+
 def test_library_has_one_python_batch_boundary():
     """No Spark needed: per-row Python stages run on ``session.map_rows``.
     The only pandas batch loops left in the package (``mapInPandas``,

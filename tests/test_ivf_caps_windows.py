@@ -282,6 +282,41 @@ def test_lsh_null_and_ragged_vectors_never_match(spark):
     assert all(r.cosine_sim is not None for r in topk)
 
 
+def test_zero_vectors_score_null_never_fail(spark):
+    """Two all-zero vectors in an 8-dim table have no direction, so their
+    cosine is NULL instead of a divide-by-zero failure: all four top-k /
+    near-dup operators finish, and no output pair holds a zero id (a NULL
+    cosine ranks below every real neighbor and never clears the near-dup
+    threshold)."""
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((40, 8))
+    base[1] = base[0] + 0.001 * rng.standard_normal(8)  # one near-dup pair
+    # a zero vector's LSH signs are all 1; five vectors near ``hub`` share
+    # that bucket in table 0 (hub . plane = 1 for each of its 6 planes),
+    # so the LSH join scores them against the zero vectors
+    hub = np.linalg.pinv(np.asarray(SIM._hyperplanes(8, 6, 2024))) @ np.ones(6)
+    rows = [(i, [float(x) for x in base[i]]) for i in range(40)]
+    rows += [(50 + j, [float(x) for x in hub + 0.001 * rng.standard_normal(8)])
+             for j in range(5)]
+    rows += [(100, [0.0] * 8), (101, [0.0] * 8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    zero = {100, 101}
+    q = df.where("vec_id in (0, 2, 3, 50)")
+
+    for op in (SIM.brute_force_topk(df, q, k=3),
+               SIM.lsh_topk(df, q, k=3, n_planes=6, seed=2024),
+               SIM.ivf_topk(df, q, k=3, n_lists=4, nprobe=4)):
+        got = op.collect()
+        pairs = {(r.query_id, r.neighbor_id) for r in got}
+        assert (0, 1) in pairs and (50, 51) in pairs, got
+        assert not zero & {r.neighbor_id for r in got}, got
+        assert all(r.cosine_sim is not None for r in got), got
+
+    pairs = [(r.id_a, r.id_b) for r in SIM.embedding_near_duplicates(df).collect()]
+    assert (0, 1) in pairs
+    assert not zero & {x for p in pairs for x in p}, pairs
+
+
 def test_assignment_kernels_agree_on_distance_ties(spark):
     """Duplicate centroids create exact distance ties AT the nprobe cut;
     the kernel must select the lowest centroid ids (stable order), as

@@ -148,6 +148,24 @@ def test_frequent_items_broadcast_in_plan(spark):
     assert [(r.value, r.cnt) for r in out.collect()] == [("x", 20)]
 
 
+def test_frequent_items_spark_jobs(spark):
+    """Pins the Spark jobs of ``frequent_items`` on a 4k-row input, counted
+    by job group: the Misra-Gries merge's exchange and its one bounded
+    collect (total and candidates together), then the verify's exchange
+    and collect."""
+    rows = [("hot",)] * 2000 + [(f"v{i}",) for i in range(500)] * 4
+    df = spark.createDataFrame(rows, "k string")
+    sc = spark.sparkContext
+    sc.setJobGroup("frequent_items", "frequent_items")
+    try:
+        out = ST.frequent_items(df, "k", threshold_frac=0.3).collect()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("frequent_items"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [(r.value, r.cnt) for r in out] == [("hot", 2000)]
+    assert n_jobs == 5
+
+
 # ----------------------------------------------------- cross-field rules
 
 

@@ -731,3 +731,29 @@ def test_committed_stream_embedding_drift_exactly_once(spark, tmp_path):
     STR.validate_stream_committed(stream4, rs, out2, ckpt2).awaitTermination(120)
     with pytest.raises(RuntimeError, match="emb_col"):
         STR.committed_stream_embedding_drift(spark, out2)
+
+
+def test_committed_stream_spark_jobs_per_batch(spark, tmp_path):
+    """Pins the Spark jobs of one committed micro-batch, counted by the
+    query's runId job group: a plain batch takes 3 (the per-part verdicts
+    collect, its exchange, the violations write); ``hh_col`` adds the
+    Misra-Gries merge's exchange and its one bounded collect, plus the
+    batch cache, for 6."""
+    src = tmp_path / "jsrc"
+    ddl = "clip_id string, codec string, part_id int"
+    spark.createDataFrame(
+        [(f"a{i}", "opus" if i % 3 else None, i % 4) for i in range(200)], ddl
+    ).coalesce(1).write.parquet(str(src / "f_a"))
+    rs = R.RuleSet().add(R.not_null("codec"))
+    sc = spark.sparkContext
+
+    def jobs(name, **kw):
+        stream = spark.readStream.schema(ddl).parquet(str(src / "f_*"))
+        q = STR.validate_stream_committed(
+            stream, rs, str(tmp_path / f"{name}_out"),
+            str(tmp_path / f"{name}_ckpt"), **kw)
+        q.awaitTermination(120)
+        return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    assert jobs("plain") == 3
+    assert jobs("hh", hh_col="codec", hh_capacity=8) == 6
