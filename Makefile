@@ -4,7 +4,7 @@
 # "packaged for spark-submit --py-files on multi-executor clusters"):
 #     spark-submit --py-files dist/mds_provider_spark.zip your_job.py
 
-.PHONY: test bench package oracle plans loc clean
+.PHONY: test bench package oracle plans parity loc clean
 
 test:
 	python -m pytest tests/ -x -q
@@ -17,6 +17,13 @@ oracle:
 
 plans:
 	python tools/explain_audit.py
+
+# schema-compiler parity vs jsonschema on the nested GeoJSON and the
+# conditional (oneOf/anyOf/dependencies) schemas; each asserts
+# missing=0 extra=0
+parity:
+	python tools/nested_shootout.py 5000
+	python tools/combinator_shootout.py 5000
 
 # tracked line count (ROADMAP): the library plus the query entry file
 loc:

@@ -5,9 +5,11 @@ CityofSantaMonica/mds-provider (a row-at-a-time Python JSON-Schema
 validation / ETL library — see SURVEY.md): declarative rule sets compiled
 to Catalyst expressions evaluated in ONE whole-stage-codegen projection,
 per-column statistics and sketches with explicit partial/merge stages,
-salted uniqueness checks, referential anti-joins, t-digest-style drift
-detection, vectorized (Arrow) audio PCM checks, and checkpointed,
-resumable runs with per-partition lineage + metrics.
+two-stage (partial/merge) duplicate-key checks, referential anti-joins,
+drift detection from GK quantile and HLL distinct sketches, vectorized
+(Arrow) audio PCM checks, and checkpointed, resumable runs with
+per-partition lineage + metrics. JSON-Schema documents compile to the
+same rule sets (schema_compiler: one keyword table for every position).
 
 Reference parity map (symbol-anchored; reference mirror was empty, see
 SURVEY.md §0):

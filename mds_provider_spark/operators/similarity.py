@@ -97,11 +97,19 @@ def brute_force_topk(
 
 
 def _vector_width(df: DataFrame, vec_col: str) -> int:
-    """Length of the first non-NULL vector (a driver job; callers that
-    know the width pass ``dim``). A NULL row must not decide it: it
-    would fail the job instead of getting NULL signs."""
-    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
-    return int(row[0]) if row is not None else 0
+    """The most common length of the non-NULL vectors, ties to the
+    smaller (one small aggregate; callers that know the width pass
+    ``dim``). Neither a NULL row nor a wrong-length vector that happens
+    to come first may decide it: every right-length vector would get
+    NULL signs and the operator would find nothing."""
+    row = (
+        df.where(F.col(vec_col).isNotNull())
+        .groupBy(F.size(vec_col).alias("width"))
+        .count()
+        .orderBy(F.desc("count"), F.asc("width"))
+        .first()
+    )
+    return int(row["width"]) if row is not None else 0
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:

@@ -17,14 +17,21 @@ per-partition verdicts come from ``plans.runner.keyed_violations`` and
 ``keyed_verdicts`` over that projection (``keyed_plan`` with no cross-row
 checks), the same builders ``api.Validator`` and the batch runner use.
 
-JSON-Schema keyword -> rule mapping (SURVEY.md §2.2):
-  required            -> not_null          (P1)
-  type                -> castable          (P2)
-  enum                -> is_in             (P3)
-  minimum/maximum     -> in_range          (P4)
-  pattern/format      -> matches           (P5)
-  items/minItems      -> array_size / elements_in (P6)
-  (cross-row)         -> unique_key        (A4, salted two-stage)
+JSON-Schema keywords: each scalar keyword is one ``Check`` here (its
+violation test on a value Column), and ``schema_compiler._keyword_checks``
+is the one keyword -> check table. The column rules are those checks at
+a column (``column_rule``), ``element_rule`` lifts one to a field of
+array elements:
+  enum / items.enum   -> is_in / elements_in   (P3)
+  minimum/maximum     -> in_range              (P4)
+  pattern/format      -> matches               (P5)
+  minItems/maxItems   -> array_size            (P6)
+  minLength/maxLength, const, multipleOf, uniqueItems, contains
+                      -> min_length/max_length, const_value,
+                         multiple_of, unique_items, contains_match
+Outside the table: required -> not_null (P1), type -> castable (P2),
+and cross-row uniqueness -> unique_key (A4, a count over the key's
+exchange in the keyed plan).
 
 Rule semantics: a rule FIRES (emits a violation row) when its predicate is
 True. NULL handling is explicit per rule kind — e.g. ``is_in`` does not
@@ -76,6 +83,159 @@ def _nn(col: str, pred: Column) -> Column:
     return F.col(col).isNotNull() & F.coalesce(pred, F.lit(False))
 
 
+def _any(conds: list[Column]) -> Column:
+    out = conds[0]
+    for extra in conds[1:]:
+        out = out | extra
+    return out
+
+
+# ---------------------------------------------------------- keyword checks
+
+
+@dataclass(frozen=True)
+class Check:
+    """One JSON-Schema keyword's violation test on a value Column.
+
+    ``test(x)`` is True iff a NON-NULL value ``x`` violates the keyword;
+    ``x`` may be a column, a struct field or an array entry. What a NULL
+    ``x`` means is the position's call: an absent property never
+    violates (``present_violation``); a JSON-null array entry violates
+    unless ``null_ok`` (``entry_violation``) — draft-06 type-specific
+    keywords are vacuous on null, while enum/const/type fail on it unless
+    null is an allowed value. A rule built from a check has id
+    ``kind:<name>`` and message ``"<name> <what>"``.
+    ``schema_compiler._keyword_checks`` is the one keyword -> check table.
+    """
+
+    kind: str
+    what: str
+    test: Callable[[Column], Column]
+    null_ok: bool = True
+
+
+def present_violation(x: Column, check: Check) -> Column:
+    """``x`` is present and violates ``check`` (NULL = absent property)."""
+    return x.isNotNull() & F.coalesce(check.test(x), F.lit(False))
+
+
+def entry_violation(x: Column, check: Check) -> Column:
+    """Array entry ``x`` violates ``check`` (NULL = JSON null)."""
+    v = present_violation(x, check)
+    return v if check.null_ok else x.isNull() | v
+
+
+def enum_check(allowed: Sequence) -> Check:
+    vals = list(allowed)
+    # NULL is tested apart: x IN (.., NULL) is NULL for a non-member,
+    # which every position would read as "no violation"
+    members = [v for v in vals if v is not None]
+    return Check(
+        S.BAD_ENUM,
+        f"not in allowed set {vals}",
+        (lambda x: ~x.isin(members)) if members else (lambda x: F.lit(True)),
+        null_ok=len(members) < len(vals),
+    )
+
+
+def const_check(value) -> Check:
+    if value is None:  # every non-null value violates {const: null}
+        return Check(S.BAD_ENUM, "must equal None", lambda x: F.lit(True))
+    return Check(
+        S.BAD_ENUM, f"must equal {value!r}", lambda x: x != F.lit(value), null_ok=False
+    )
+
+
+def range_check(lo=None, hi=None, lo_inclusive: bool = True, hi_inclusive: bool = True) -> Check:
+    def test(x: Column) -> Column:
+        conds = []
+        if lo is not None:
+            conds.append(x < lo if lo_inclusive else x <= lo)
+        if hi is not None:
+            conds.append(x > hi if hi_inclusive else x >= hi)
+        return _any(conds)
+
+    bounds = f"[{lo},{hi}]" if lo_inclusive and hi_inclusive else f"({lo},{hi})"
+    return Check(S.OUT_OF_RANGE, f"out of range {bounds}", test)
+
+
+def pattern_check(regex: str, kind: str = S.BAD_FORMAT) -> Check:
+    return Check(kind, f"does not match /{regex}/", lambda x: ~x.rlike(regex))
+
+
+def min_length_check(n: int) -> Check:
+    """JSON-Schema ``minLength``: RAW character count (draft-06 does NOT
+    trim — whitespace-only strings satisfy minLength>=1). For the
+    stricter engine semantics use ``non_empty``."""
+    return Check(S.BAD_SHAPE, f"shorter than {n} characters", lambda x: F.length(x) < n)
+
+
+def max_length_check(n: int) -> Check:
+    return Check(S.BAD_SHAPE, f"longer than {n} characters", lambda x: F.length(x) > n)
+
+
+def multiple_of_check(divisor: int) -> Check:
+    """JSON-Schema ``multipleOf`` (integer divisors)."""
+    return Check(
+        S.OUT_OF_RANGE,
+        f"not a multiple of {divisor}",
+        lambda x: F.pmod(x, F.lit(divisor)) != 0,
+    )
+
+
+def size_check(min_items: int | None = None, max_items: int | None = None) -> Check:
+    def test(x: Column) -> Column:
+        conds = []
+        if min_items is not None:
+            conds.append(F.size(x) < min_items)
+        if max_items is not None:
+            conds.append(F.size(x) > max_items)
+        return _any(conds)
+
+    return Check(S.BAD_SHAPE, f"array size outside [{min_items},{max_items}]", test)
+
+
+def unique_items_check() -> Check:
+    return Check(
+        S.BAD_SHAPE,
+        "has duplicate array elements",
+        lambda x: F.size(F.array_distinct(x)) < F.size(x),
+    )
+
+
+def elements_in_check(allowed: Sequence) -> Check:
+    """``items: {enum}``: some entry (a JSON null included, unless null is
+    allowed) is outside the set."""
+    enum = enum_check(allowed)
+    return Check(
+        S.BAD_ENUM,
+        "has element(s) outside allowed set",
+        lambda x: F.exists(x, lambda e: entry_violation(e, enum)),
+    )
+
+
+def contains_check(element_pred: Callable[[Column], Column], description: str) -> Check:
+    """JSON-Schema draft-06 ``contains``: NO entry satisfies the
+    subschema. ``element_pred(e)`` is the per-entry satisfaction
+    predicate (the schema compiler builds it from entry checks)."""
+    return Check(
+        S.BAD_SHAPE,
+        f"has no element matching: {description}",
+        lambda x: ~F.exists(x, lambda e: F.coalesce(element_pred(e), F.lit(False))),
+    )
+
+
+def column_rule(col: str, check: Check) -> Rule:
+    """``check`` on column (or dotted struct path) ``col``; a NULL value is
+    absent and never fires (that is ``not_null``'s job)."""
+    return Rule(
+        S.rule_id(check.kind, col),
+        col,
+        f"{col} {check.what}",
+        lambda: present_violation(F.col(col), check),
+    )
+
+
 def not_null(col: str) -> Rule:
     return Rule(
         S.rule_id(S.MISSING_FIELD, col),
@@ -86,13 +246,7 @@ def not_null(col: str) -> Rule:
 
 
 def is_in(col: str, allowed: Sequence) -> Rule:
-    vals = list(allowed)
-    return Rule(
-        S.rule_id(S.BAD_ENUM, col),
-        col,
-        f"{col} not in allowed set {vals}",
-        lambda: _nn(col, ~F.col(col).isin(vals)),
-    )
+    return column_rule(col, enum_check(allowed))
 
 
 def in_range(
@@ -102,78 +256,50 @@ def in_range(
     lo_inclusive: bool = True,
     hi_inclusive: bool = True,
 ) -> Rule:
-    def pred() -> Column:
-        c = F.col(col)
-        conds = []
-        if lo is not None:
-            conds.append(c < lo if lo_inclusive else c <= lo)
-        if hi is not None:
-            conds.append(c > hi if hi_inclusive else c >= hi)
-        out = conds[0]
-        for extra in conds[1:]:
-            out = out | extra
-        return _nn(col, out)
-
-    bounds = f"[{lo},{hi}]" if lo_inclusive and hi_inclusive else f"({lo},{hi})"
-    return Rule(
-        S.rule_id(S.OUT_OF_RANGE, col), col, f"{col} out of range {bounds}", pred
-    )
+    return column_rule(col, range_check(lo, hi, lo_inclusive, hi_inclusive))
 
 
 def matches(col: str, regex: str, kind: str = S.BAD_FORMAT) -> Rule:
-    return Rule(
-        S.rule_id(kind, col),
-        col,
-        f"{col} does not match /{regex}/",
-        lambda: _nn(col, ~F.col(col).rlike(regex)),
-    )
+    return column_rule(col, pattern_check(regex, kind))
 
 
 def min_length(col: str, n: int) -> Rule:
-    """JSON-Schema ``minLength``: RAW character count (draft-06 does NOT
-    trim — whitespace-only strings satisfy minLength>=1). For the
-    stricter engine semantics use ``non_empty``."""
-    return Rule(
-        S.rule_id(S.BAD_SHAPE, col),
-        col,
-        f"{col} shorter than {n} characters",
-        lambda: _nn(col, F.length(F.col(col)) < n),
-    )
+    return column_rule(col, min_length_check(n))
 
 
 def max_length(col: str, n: int) -> Rule:
-    """JSON-Schema ``maxLength`` (raw character count)."""
-    return Rule(
-        S.rule_id(S.BAD_SHAPE, col),
-        col,
-        f"{col} longer than {n} characters",
-        lambda: _nn(col, F.length(F.col(col)) > n),
-    )
+    return column_rule(col, max_length_check(n))
 
 
 def const_value(col: str, value) -> Rule:
-    """JSON-Schema ``const``: value present but not the required constant."""
-    return Rule(
-        S.rule_id(S.BAD_ENUM, col),
-        col,
-        f"{col} must equal {value!r}",
-        lambda: _nn(col, F.col(col) != F.lit(value)),
-    )
+    return column_rule(col, const_check(value))
 
 
 def multiple_of(col: str, divisor: int) -> Rule:
-    """JSON-Schema ``multipleOf`` (integer divisors)."""
-    return Rule(
-        S.rule_id(S.OUT_OF_RANGE, col),
-        col,
-        f"{col} not a multiple of {divisor}",
-        lambda: _nn(col, F.pmod(F.col(col), F.lit(divisor)) != 0),
-    )
+    return column_rule(col, multiple_of_check(divisor))
+
+
+def array_size(col: str, min_items: int | None = None, max_items: int | None = None) -> Rule:
+    return column_rule(col, size_check(min_items, max_items))
+
+
+def elements_in(col: str, allowed: Sequence) -> Rule:
+    return column_rule(col, elements_in_check(allowed))
+
+
+def unique_items(col: str) -> Rule:
+    return column_rule(col, unique_items_check())
+
+
+def contains_match(
+    col: str, element_pred: Callable[[Column], Column], description: str
+) -> Rule:
+    return column_rule(col, contains_check(element_pred, description))
 
 
 def non_empty(col: str, kind: str = S.EMPTY_TEXT) -> Rule:
     """Fires on whitespace-only / empty strings (stricter than JSON-Schema
-    minLength — see min_length). NULL is not_null's job."""
+    minLength — see min_length_check). NULL is not_null's job."""
     return Rule(
         S.rule_id(kind, col),
         col,
@@ -189,79 +315,6 @@ def castable(col: str, to_type: str) -> Rule:
         col,
         f"{col} not castable to {to_type}",
         lambda: _nn(col, F.col(col).try_cast(to_type).isNull()),
-    )
-
-
-def array_size(col: str, min_items: int | None = None, max_items: int | None = None) -> Rule:
-    def pred() -> Column:
-        sz = F.size(F.col(col))
-        conds = []
-        if min_items is not None:
-            conds.append(sz < min_items)
-        if max_items is not None:
-            conds.append(sz > max_items)
-        out = conds[0]
-        for extra in conds[1:]:
-            out = out | extra
-        return _nn(col, out)
-
-    return Rule(
-        S.rule_id(S.BAD_SHAPE, col),
-        col,
-        f"{col} array size outside [{min_items},{max_items}]",
-        pred,
-    )
-
-
-def elements_in(col: str, allowed: Sequence) -> Rule:
-    allowed = list(allowed)
-    return Rule(
-        S.rule_id(S.BAD_ENUM, col),
-        col,
-        f"{col} has element(s) outside allowed set",
-        # literals built INSIDE the deferred predicate: F.lit needs an
-        # active SparkSession, and RuleSets must compile without one
-        lambda: _nn(
-            col,
-            ~F.forall(
-                F.col(col),
-                lambda x: F.array_contains(F.array(*[F.lit(v) for v in allowed]), x),
-            ),
-        ),
-    )
-
-
-def contains_match(
-    col: str, element_pred: Callable[[Column], Column], description: str
-) -> Rule:
-    """JSON-Schema draft-06 ``contains``: the array is present but NO
-    element satisfies the subschema. ``element_pred(x)`` is the deferred
-    per-element satisfaction predicate (built by the schema compiler —
-    its keyword fragments already encode jsonschema's null-entry
-    semantics: type-specific keywords are vacuous on null, enum/const
-    fail); one ``exists`` loop, same codegen projection as every other
-    rule."""
-    return Rule(
-        S.rule_id(S.BAD_SHAPE, col),
-        col,
-        f"{col} has no element matching: {description}",
-        lambda: _nn(
-            col,
-            ~F.exists(
-                F.col(col),
-                lambda x: F.coalesce(element_pred(x), F.lit(False)),
-            ),
-        ),
-    )
-
-
-def unique_items(col: str) -> Rule:
-    """JSON-Schema ``uniqueItems``: array contains duplicate elements."""
-    return Rule(
-        S.rule_id(S.BAD_SHAPE, col),
-        col,
-        f"{col} has duplicate array elements",
-        lambda: _nn(col, F.size(F.array_distinct(F.col(col))) < F.size(F.col(col))),
     )
 
 
@@ -316,122 +369,20 @@ def element_required(
     )
 
 
-def element_in(col: str, fpath: tuple[str, ...], allowed: Sequence) -> Rule:
-    allowed = list(allowed)
+def element_rule(col: str, fpath: tuple[str, ...], check: Check) -> Rule:
+    """``check`` on field ``fpath`` of the elements of array ``col`` (e.g.
+    ``route.features[].geometry.type``): fires when some element has the
+    field present and violating. One ``exists`` over the array."""
     name = _edotted(col, fpath)
     return Rule(
-        S.rule_id(S.BAD_ENUM, name),
+        S.rule_id(check.kind, name),
         name,
-        f"{name} has value(s) outside allowed set",
-        # deferred literal construction — see elements_in
+        f"{name} {check.what}",
         lambda: _nn(
             col,
-            F.exists(
-                F.col(col),
-                lambda x: _epath(x, fpath).isNotNull()
-                & ~F.array_contains(
-                    F.array(*[F.lit(v) for v in allowed]), _epath(x, fpath)
-                ),
-            ),
+            F.exists(F.col(col), lambda x: present_violation(_epath(x, fpath), check)),
         ),
     )
-
-
-def element_matches(col: str, fpath: tuple[str, ...], regex: str) -> Rule:
-    name = _edotted(col, fpath)
-    return Rule(
-        S.rule_id(S.BAD_FORMAT, name),
-        name,
-        f"{name} does not match /{regex}/",
-        lambda: _nn(
-            col,
-            F.exists(
-                F.col(col),
-                lambda x: _epath(x, fpath).isNotNull()
-                & ~_epath(x, fpath).rlike(regex),
-            ),
-        ),
-    )
-
-
-def element_const(col: str, fpath: tuple[str, ...], value) -> Rule:
-    name = _edotted(col, fpath)
-    return Rule(
-        S.rule_id(S.BAD_ENUM, name),
-        name,
-        f"{name} must equal {value!r}",
-        lambda: _nn(
-            col,
-            F.exists(
-                F.col(col),
-                lambda x: _epath(x, fpath).isNotNull()
-                & (_epath(x, fpath) != F.lit(value)),
-            ),
-        ),
-    )
-
-
-def element_array_size(
-    col: str,
-    fpath: tuple[str, ...],
-    min_items: int | None = None,
-    max_items: int | None = None,
-) -> Rule:
-    """``minItems``/``maxItems`` on an ARRAY FIELD of array elements
-    (e.g. route.features[].geometry.coordinates)."""
-    name = _edotted(col, fpath)
-
-    def pred() -> Column:
-        def bad(x: Column) -> Column:
-            v = _epath(x, fpath)
-            sz = F.size(v)
-            conds = []
-            if min_items is not None:
-                conds.append(sz < min_items)
-            if max_items is not None:
-                conds.append(sz > max_items)
-            out = conds[0]
-            for extra in conds[1:]:
-                out = out | extra
-            return v.isNotNull() & out
-
-        return _nn(col, F.exists(F.col(col), bad))
-
-    return Rule(
-        S.rule_id(S.BAD_SHAPE, name),
-        name,
-        f"{name} array size outside [{min_items},{max_items}]",
-        pred,
-    )
-
-
-def element_in_range(
-    col: str,
-    fpath: tuple[str, ...],
-    lo=None,
-    hi=None,
-    lo_inclusive: bool = True,
-    hi_inclusive: bool = True,
-) -> Rule:
-    name = _edotted(col, fpath)
-
-    def pred() -> Column:
-        def bad(x: Column) -> Column:
-            v = _epath(x, fpath)
-            conds = []
-            if lo is not None:
-                conds.append(v < lo if lo_inclusive else v <= lo)
-            if hi is not None:
-                conds.append(v > hi if hi_inclusive else v >= hi)
-            out = conds[0]
-            for extra in conds[1:]:
-                out = out | extra
-            return v.isNotNull() & out
-
-        return _nn(col, F.exists(F.col(col), bad))
-
-    bounds = f"[{lo},{hi}]" if lo_inclusive and hi_inclusive else f"({lo},{hi})"
-    return Rule(S.rule_id(S.OUT_OF_RANGE, name), name, f"{name} out of range {bounds}", pred)
 
 
 def required_with(col: str, present_col: str) -> Rule:

@@ -2,29 +2,51 @@
 
 The reference validates records by walking a draft-06 MDS JSON Schema
 with ``jsonschema.Draft6Validator.iter_errors`` per record
-(mds/schemas.py ≈L150–220, Schema/DataValidator). This module consumes
-the SAME schema documents and compiles the row-expressible keyword subset
-into the engine's RuleSet — one Catalyst projection instead of a Python
-walk per record, same rule-id/violation-row contract.
+(mds/schemas.py ≈L150–220, Schema/DataValidator). This module compiles
+the SAME schema documents into the engine's RuleSet — one Catalyst
+projection instead of a Python walk per record, same rule-id/violation-row
+contract.
 
-Supported keywords (the ones MDS provider schemas actually use at the
-record level): required, type (via nullable cast check on string-typed
-reads), enum, minimum/maximum (+ exclusive variants), pattern, format:
-uuid, minItems/maxItems, uniqueItems, contains, items.enum (arrays of
-enums), minLength (non-empty strings), and — round 4 — the combinators
-``allOf``/``anyOf``/``oneOf``/``not``/``dependencies`` (draft-06) plus
-``if``/``then``/``else`` (the draft-07 spelling), at both record and
-property level. Combinator branches compile to deferred predicates and
-fuse into the SAME single-projection pass as every other rule.
+Scalar keywords: one table, ``_keyword_checks``, maps each keyword to one
+``rules.Check`` (its violation test on a value Column):
 
-Round 5 completes the draft-06 structural surface: internal
-``$ref``/``definitions`` pointers are inlined up front (``resolve_refs``
-— raw fetched MDS schema documents compile unmodified), ``type`` inside
-combinator branches compiles to a runtime typeof()+nullness predicate
-(the nullable-via-oneOf idiom), ``items`` as a LIST (tuple validation)
-with ``additionalItems``, ``patternProperties``/``propertyNames``/
-``minProperties``/``maxProperties`` against the static declared-name
-universe the strict read schema guarantees.
+  keyword                                  check                    rule kind
+  enum                                     enum_check               bad_enum
+  const                                    const_check              bad_enum
+  pattern, format: uuid                    pattern_check            bad_format
+  minLength / maxLength (raw length)       min_/max_length_check    bad_shape
+  minimum / maximum / exclusive* (_bounds) range_check              out_of_range
+  multipleOf (positive integer)            multiple_of_check        out_of_range
+  minItems / maxItems                      size_check               bad_shape
+  uniqueItems                              unique_items_check       bad_shape
+  items: {enum}                            elements_in_check        bad_enum
+  contains                                 contains_check           bad_shape
+  type (combinator branches, entries)      _type_check              bad_type
+
+Every keyword compiles at every position. A position decides only how it
+addresses the value, its presence guard and what NULL means:
+
+  column / nested property   F.col(path), NULL = absent    _compile_scalar
+  array-element field        x.f in exists(array, x -> ..)  _compile_items
+  element-branch field       x.f in a combinator branch     _element_branch_violation
+  array entry                contains, tuple items,         _entry_sat
+                             additionalItems, propertyNames;
+                             NULL = JSON null (``rules.entry_violation``)
+
+Outside branches and entries ``type`` is structural: the strict read
+schema enforces it (rule P2 ``castable`` covers string-typed reads).
+
+The positions compile the structural keywords themselves: ``required``,
+``properties`` and nested objects; ``items`` as an object schema (one
+``exists`` loop per rule over array<struct>) or as a list (tuple
+validation) with ``additionalItems``; ``patternProperties`` /
+``propertyNames`` / ``minProperties`` / ``maxProperties`` against the
+declared-name universe the strict read schema guarantees; internal
+``$ref``/``definitions`` (inlined up front by ``resolve_refs``, so raw
+fetched MDS schema documents compile unmodified); and the combinators
+``allOf``/``anyOf``/``oneOf``/``not``/``dependencies`` plus the draft-07
+``if``/``then``/``else``, whose branches compile to deferred predicates
+fused into the same single projection as every other rule.
 
 Unsupported keywords are returned, not silently dropped — callers
 decide whether that's an error.
@@ -43,19 +65,10 @@ from pyspark.sql import functions as F
 from mds_provider_spark import rules as R
 from mds_provider_spark import schema as S
 
-_JSON_TO_SPARK_TYPE = {
-    "integer": "long",
-    "number": "double",
-    "boolean": "boolean",
-    "string": "string",
-}
-
 # JSON-Schema ``type`` -> regex over Spark's typeof() name for the value.
-# Used ONLY inside combinator branches, where ``type`` is discriminating
-# (oneOf:[{type:string},{type:null}] is the canonical nullable idiom) —
-# in the main compile path ``type`` stays structural (the strict read
-# schema enforces it; rule P2 ``castable`` covers string-typed reads).
-# The check is column-typed: a value's JSON type is decided by the
+# Used only inside combinator branches and at array entries, where
+# ``type`` is discriminating (oneOf:[{type:string},{type:null}] is the
+# canonical nullable idiom) — elsewhere ``type`` stays structural. The check is column-typed: a value's JSON type is decided by the
 # column's Spark type plus nullness. Divergence from draft-06, documented:
 # ``integer`` does not accept float/double columns that happen to hold
 # zero-fraction values (jsonschema's 2.0-is-an-integer nicety needs value
@@ -70,24 +83,18 @@ _TYPE_RE = {
 }
 
 
-def _type_sat(types):
-    """Deferred x -> Column: True iff the value satisfies JSON-Schema
-    ``type`` (string or list form). Null-safe by construction: nullness
-    is decided explicitly (SQL NULL plays JSON null), non-null values
-    match on ``typeof()`` — constant per column, so Catalyst folds the
-    comparison. Callers must pre-validate names against _TYPE_RE."""
-    tl = [types] if isinstance(types, str) else list(types)
-    pats = [_TYPE_RE[t] for t in tl if t != "null"]
-
-    def sat(x):
-        out = F.lit(False)
-        if "null" in tl:
-            out = out | x.isNull()
-        if pats:
-            out = out | (x.isNotNull() & F.typeof(x).rlike("|".join(pats)))
-        return out
-
-    return sat
+def _type_check(tl: list) -> "R.Check":
+    """Branch/entry ``type``: a non-null value's JSON type is decided by
+    ``typeof()`` — constant per column, so Catalyst folds it — and JSON
+    null satisfies iff the list admits "null" (SQL NULL plays JSON null
+    at entries). Callers must pre-validate names against _TYPE_RE."""
+    pats = "|".join(_TYPE_RE[t] for t in tl if t != "null")
+    return R.Check(
+        S.BAD_TYPE,
+        f"is not of JSON type {tl}",
+        (lambda x: ~F.typeof(x).rlike(pats)) if pats else (lambda x: F.lit(True)),
+        null_ok="null" in tl,
+    )
 
 
 def _check_type_names(val, where: str, unsupported: list[str]) -> list | None:
@@ -109,6 +116,14 @@ _ANNOTATIONS = ("description", "title", "default", "examples", "$comment", "$sch
 # if/then/else is the draft-07 spelling of the same conditionals —
 # compiled too, so post-0.4 schema documents also work.
 _COMBINATOR_KEYS = ("allOf", "anyOf", "oneOf", "not", "dependencies", "if", "then", "else")
+# the combinators an array element (and its fields) can carry
+_ELEMENT_COMBINATORS = ("allOf", "anyOf", "oneOf", "not")
+# keywords an object inside an array element compiles
+_ELEMENT_OBJECT_KEYS = (
+    "type", "properties", "required", "additionalProperties",
+    *_ELEMENT_COMBINATORS, *_ANNOTATIONS,
+)
+_BOUND_KEYS = ("minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum")
 
 
 def _subrules(
@@ -389,76 +404,87 @@ def _bounds(spec: dict) -> tuple:
     return lo, lo_inc, hi, hi_inc
 
 
-def _element_satisfies(spec: dict, where: str, unsupported: list[str]):
-    """Deferred per-element satisfaction predicate for a scalar subschema
-    (used by ``contains``): x -> Column. Conjunction of the keyword
-    subset that makes sense per element; unsupported element keywords
-    propagate to the caller's list.
+def _keyword_checks(
+    spec: dict,
+    where: str,
+    unsupported: list[str],
+    typed: bool = False,
+    own: Sequence[str] = (),
+) -> list:
+    """THE keyword table: the ``R.Check`` of every scalar keyword in
+    ``spec``, in spec order, then the bounds (``_bounds``) and
+    ``minItems``/``maxItems`` as one check each. Every position compiles
+    its scalar keywords here and nowhere else.
 
-    NULL-entry semantics follow jsonschema exactly: type-specific
-    keywords (bounds, pattern, length) are VACUOUS on a null entry —
-    draft-06 ``minimum`` only constrains numbers, so null satisfies
-    ``{minimum: 90}`` — while value-equality keywords (enum, const)
-    fail on null unless null is itself an allowed value."""
-    from pyspark.sql import Column
-
-    def vac(cond):  # type-specific keyword: vacuously true on null
-        return lambda x, c=cond: F.coalesce(c(x), F.lit(True))
-
-    def strict(cond):  # value-equality keyword: null fails
-        return lambda x, c=cond: F.coalesce(c(x), F.lit(False))
-
-    makers = []
-    lo, lo_inc, hi, hi_inc = _bounds(spec)
-    if lo is not None:
-        makers.append(vac(lambda x: (x >= lo) if lo_inc else (x > lo)))
-    if hi is not None:
-        makers.append(vac(lambda x: (x <= hi) if hi_inc else (x < hi)))
+    ``type`` is a check only where it discriminates (``typed``: inside
+    combinator branches and at array entries); elsewhere it is
+    structural. ``items`` is a table keyword in its enum form only.
+    Keywords in ``own`` are the position's to compile; any other keyword
+    outside the table is reported as ``<where>.<kw>``."""
+    checks = []
     for kw, val in spec.items():
         if kw == "enum":
-            vals = list(val)
-            if any(v is None for v in vals):
-                non_null = [v for v in vals if v is not None]
-                makers.append(
-                    lambda x, v=non_null: F.coalesce(x.isin(v), F.lit(False))
-                    | x.isNull()
-                )
-            else:
-                makers.append(strict(lambda x, v=vals: x.isin(v)))
+            checks.append(R.enum_check(val))
         elif kw == "const":
-            if val is None:
-                makers.append(lambda x: x.isNull())
-            else:
-                makers.append(strict(lambda x, v=val: x == F.lit(v)))
+            checks.append(R.const_check(val))
         elif kw == "pattern":
-            makers.append(vac(lambda x, v=val: x.rlike(v)))
+            checks.append(R.pattern_check(val))
+        elif kw == "format" and val == "uuid":
+            checks.append(R.pattern_check(S.UUID_RE))
         elif kw == "minLength":
-            makers.append(vac(lambda x, v=int(val): F.length(x) >= v))
+            # faithful draft-06 semantics: raw length, no trimming
+            checks.append(R.min_length_check(int(val)))
         elif kw == "maxLength":
-            makers.append(vac(lambda x, v=int(val): F.length(x) <= v))
-        elif kw in ("minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum"):
-            pass  # _bounds above
+            checks.append(R.max_length_check(int(val)))
+        elif (kw == "multipleOf" and isinstance(val, int)
+              and not isinstance(val, bool) and val > 0):
+            checks.append(R.multiple_of_check(val))
+        elif kw == "uniqueItems":
+            if val:
+                checks.append(R.unique_items_check())
+        elif kw == "items" and isinstance(val, dict) and set(val) <= {"enum", "type"}:
+            if "enum" in val:
+                checks.append(R.elements_in_check(val["enum"]))
+        elif kw == "contains" and isinstance(val, dict):
+            sat, desc = _entry_sat(val, f"{where}.contains", unsupported)
+            checks.append(R.contains_check(sat, desc))
         elif kw == "type":
-            # real check (draft-06: null VIOLATES e.g. {type: number}) —
-            # column-typed via typeof(), see _TYPE_RE
-            tl = _check_type_names(val, where, unsupported)
+            tl = _check_type_names(val, where, unsupported) if typed else None
             if tl is not None:
-                makers.append(_type_sat(tl))
-        elif kw in _ANNOTATIONS:
-            pass
+                checks.append(_type_check(tl))
+        elif kw in ("format", "multipleOf", "contains"):
+            unsupported.append(f"{where}.{kw}:{val!r}")
+        elif kw in ("minItems", "maxItems", *_BOUND_KEYS, *_ANNOTATIONS, *own):
+            pass  # sizes and bounds below; annotations; the position's own
         else:
             unsupported.append(f"{where}.{kw}")
+    lo, lo_inc, hi, hi_inc = _bounds(spec)
+    if lo is not None or hi is not None:
+        checks.append(R.range_check(lo, hi, lo_inc, hi_inc))
+    if "minItems" in spec or "maxItems" in spec:
+        checks.append(R.size_check(spec.get("minItems"), spec.get("maxItems")))
+    return checks
 
-    def pred(x: "Column") -> "Column":
+
+def _entry_sat(spec: dict, where: str, unsupported: list[str]):
+    """Deferred per-ENTRY satisfaction predicate ``x -> Column`` for a
+    scalar subschema, and its description. Entries are ``contains``
+    candidates, tuple positions, ``additionalItems`` tails and property
+    names; NULL is a JSON null there (``R.entry_violation``), exactly as
+    jsonschema treats it: type-specific keywords are vacuous on it,
+    enum/const/type fail on it unless null is allowed."""
+    checks = _keyword_checks(spec, where, unsupported, typed=True)
+
+    def sat(x):
         out = F.lit(True)
-        for m in makers:
-            out = out & m(x)
+        for c in checks:
+            out = out & ~R.entry_violation(x, c)
         return out
 
     desc = ", ".join(
         f"{k}={spec[k]!r}" for k in sorted(spec) if k not in ("type", *_ANNOTATIONS)
     ) or "any element"
-    return pred, desc
+    return sat, desc
 
 
 def _compile_tuple_items(
@@ -480,7 +506,7 @@ def _compile_tuple_items(
             unsupported.append(f"{col}.items[{i}]")
             sats.append(None)
             continue
-        sat, _ = _element_satisfies(s, f"{col}.items[{i}]", unsupported)
+        sat, _ = _entry_sat(s, f"{col}.items[{i}]", unsupported)
         sats.append(sat)
     n = len(specs)
 
@@ -516,9 +542,7 @@ def _compile_tuple_items(
             )
         )
     elif isinstance(additional, dict):
-        sat, desc = _element_satisfies(
-            additional, f"{col}.additionalItems", unsupported
-        )
+        sat, desc = _entry_sat(additional, f"{col}.additionalItems", unsupported)
         rs.add(
             R.Rule(
                 S.rule_id(S.BAD_SHAPE, f"{col}.additionalItems"),
@@ -546,107 +570,37 @@ def _compile_scalar(
     spec: dict,
     in_branch: bool = False,
 ) -> None:
-    """Keyword loop for one non-object property at dotted path ``path``.
+    """Rules for one non-object property at dotted path ``path``: one
+    column rule per table check, plus ``items`` as a list (tuple
+    validation) or an object schema, plus the combinators.
 
     ``in_branch=True`` (combinator branch compilation) additionally
-    compiles ``type`` into a runtime typeof()+nullness predicate — see
-    ``_subrules`` for why branches need it and the main path doesn't."""
-    for kw, val in spec.items():
-        if kw == "enum":
-            rs.add(R.is_in(path, val))
-        elif kw in ("minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum"):
-            pass  # handled together below (_bounds)
-        elif kw == "pattern":
-            rs.add(R.matches(path, val))
-        elif kw == "format":
-            if val == "uuid":
-                rs.add(R.matches(path, S.UUID_RE))
-            else:
-                unsupported.append(f"{path}.format:{val}")
-        elif kw == "minLength":
-            # faithful draft-06 semantics: raw length, no trimming
-            rs.add(R.min_length(path, int(val)))
-        elif kw == "maxLength":
-            rs.add(R.max_length(path, int(val)))
-        elif kw == "const":
-            rs.add(R.const_value(path, val))
-        elif kw == "multipleOf":
-            if isinstance(val, int) and not isinstance(val, bool) and val > 0:
-                rs.add(R.multiple_of(path, val))
-            else:
-                unsupported.append(f"{path}.multipleOf:{val}")
-        elif kw in ("minItems", "maxItems"):
-            pass  # handled together below
-        elif kw == "contains":
-            if isinstance(val, dict):
-                pred, desc = _element_satisfies(
-                    val, f"{path}.contains", unsupported)
-                rs.add(R.contains_match(path, pred, desc))
-            else:
-                unsupported.append(f"{path}.contains:{val!r}")
-        elif kw == "uniqueItems":
-            if val:
-                rs.add(R.unique_items(path))
-        elif kw == "items":
-            if isinstance(val, list):
-                # tuple validation (draft-06 positional items) — compiled
-                # together with additionalItems below
-                _compile_tuple_items(
-                    rs, unsupported, path, val, spec.get("additionalItems")
-                )
-            elif isinstance(val, dict) and set(val) <= {"enum", "type"}:
-                if "enum" in val:
-                    rs.add(R.elements_in(path, val["enum"]))
-            elif (
-                isinstance(val, dict)
-                and val.get("type") == "object"
-                and (
-                    "properties" in val
-                    or "required" in val
-                    or any(k in val for k in ("allOf", "anyOf", "oneOf", "not"))
-                )
-            ):
-                _compile_items(rs, unsupported, path, val)
-            else:
-                unsupported.append(f"{path}.items")
-        elif kw == "additionalItems":
-            # draft-06: only meaningful next to items-as-list (consumed by
-            # _compile_tuple_items above); with single-schema or absent
-            # ``items`` the keyword is DEFINED to be ignored — this pass
-            # is faithful semantics, not a silent drop.
-            pass
-        elif kw == "type":
-            if in_branch:
-                tl = _check_type_names(val, path, unsupported)
-                if tl is not None:
-                    sat = _type_sat(tl)
-                    rs.add(
-                        R.Rule(
-                            S.rule_id(S.BAD_TYPE, path),
-                            path,
-                            f"{path} is not of JSON type {tl}",
-                            lambda sat=sat: ~sat(F.col(path)),
-                        )
-                    )
-            # main path: structural — enforced by the strict read schema
-        elif kw in _COMBINATOR_KEYS:
-            pass  # handled together below (_compile_combinators)
-        elif kw in _ANNOTATIONS:
-            pass  # annotations
-        else:
-            unsupported.append(f"{path}.{kw}")
-
-    lo, lo_inc, hi, hi_inc = _bounds(spec)
-    if lo is not None or hi is not None:
-        rs.add(R.in_range(path, lo=lo, hi=hi, lo_inclusive=lo_inc, hi_inclusive=hi_inc))
-    if "minItems" in spec or "maxItems" in spec:
-        rs.add(
-            R.array_size(
-                path, min_items=spec.get("minItems"), max_items=spec.get("maxItems")
-            )
-        )
+    compiles ``type`` — see ``_subrules`` for why branches need it and
+    the main path doesn't."""
+    items = spec.get("items")
+    # draft-06: additionalItems only means something next to tuple items;
+    # otherwise it is DEFINED to be ignored — not a silent drop
+    own = ("additionalItems", *_COMBINATOR_KEYS)
+    if isinstance(items, list):
+        _compile_tuple_items(rs, unsupported, path, items, spec.get("additionalItems"))
+        own += ("items",)
+    elif _object_items(items):
+        _compile_items(rs, unsupported, path, items)
+        own += ("items",)
+    for c in _keyword_checks(spec, path, unsupported, typed=in_branch, own=own):
+        rs.add(R.column_rule(path, c))
     if any(k in spec for k in _COMBINATOR_KEYS):
         _compile_combinators(rs, unsupported, spec, "", None, scalar_path=path)
+
+
+def _object_items(items) -> bool:
+    """``items`` is an object schema with something to compile per element."""
+    return (
+        isinstance(items, dict)
+        and items.get("type") == "object"
+        and ("properties" in items or "required" in items
+             or any(k in items for k in _ELEMENT_COMBINATORS))
+    )
 
 
 # object-level keywords _compile_object consumes (or legitimately treats
@@ -665,33 +619,6 @@ _OBJECT_KEYS = (
     *_COMBINATOR_KEYS,
     *_ANNOTATIONS,
 )
-
-
-def _name_satisfies(pn: dict, name: str, where: str, unsupported: list[str]) -> bool:
-    """Evaluate a ``propertyNames`` subschema against one property NAME at
-    COMPILE time — names are static under a strict read schema, so no
-    runtime expression is needed; an offending name compiles to a
-    presence-is-violation rule."""
-    ok = True
-    for kw, val in pn.items():
-        if kw == "pattern":
-            ok = ok and re.search(val, name) is not None
-        elif kw == "minLength":
-            ok = ok and len(name) >= int(val)
-        elif kw == "maxLength":
-            ok = ok and len(name) <= int(val)
-        elif kw == "enum":
-            ok = ok and name in list(val)
-        elif kw == "const":
-            ok = ok and name == val
-        elif kw == "type":
-            tl = [val] if isinstance(val, str) else list(val)
-            ok = ok and "string" in tl  # property names are always strings
-        elif kw in _ANNOTATIONS:
-            pass
-        else:
-            unsupported.append(f"{where}.propertyNames.{kw}")
-    return ok
 
 
 def _compile_object(
@@ -716,8 +643,10 @@ def _compile_object(
     ``maxProperties`` compile against the DECLARED property-name universe:
     under the engine's strict read schema the struct fields are exactly
     the declared properties, so name-keyed keywords resolve statically
-    (patterns evaluated with Python ``re`` at compile time) and only the
-    per-row presence (non-null) is decided at runtime."""
+    (``patternProperties`` patterns with Python ``re`` at compile time,
+    ``propertyNames`` as table checks on name literals that Catalyst
+    folds) and only the per-row presence (non-null) is decided at
+    runtime."""
     props: dict = schema.get("properties", {})
     required = schema.get("required", [])
     where = prefix.rstrip(".") or "$"
@@ -764,16 +693,19 @@ def _compile_object(
     if isinstance(pn, dict):
         if not props:
             unsupported.append(f"{where}.propertyNames")
+        # names are static under the strict read schema: each declared
+        # name is a literal entry, so Catalyst folds the check to a
+        # constant and only the property's presence is decided per row
+        name_sat, _ = _entry_sat(pn, f"{where}.propertyNames", unsupported)
         for name in props:
-            if _name_satisfies(pn, name, where, unsupported):
-                continue
             path = f"{prefix}{name}"
             rs.add(
                 R.Rule(
                     S.rule_id(S.BAD_FORMAT, path),
                     path,
                     f"property name {name!r} violates propertyNames schema",
-                    lambda path=path: F.col(path).isNotNull(),
+                    lambda path=path, name=name: F.col(path).isNotNull()
+                    & ~name_sat(F.lit(name)),
                 )
             )
     elif pn is not None and pn is not True:
@@ -842,15 +774,10 @@ def _element_branch_violation(obj_spec: dict, fpath: tuple, where: str,
     only a violation under ``required``. Nested combinators at the
     branch root (allOf/anyOf/oneOf/not) recurse; any other branch-root
     keyword is reported unsupported — never silently dropped."""
-    from mds_provider_spark import rules as RR
-
     makers = []  # list of deferred (x -> Column) violation fragments
 
-    def field(x, fp):
-        return RR._epath(x, fp)
-
     # nested combinators inside the branch recurse on the SAME element
-    for kind in ("allOf", "anyOf", "oneOf", "not"):
+    for kind in _ELEMENT_COMBINATORS:
         if kind not in obj_spec:
             continue
         branches = [obj_spec["not"]] if kind == "not" else obj_spec[kind]
@@ -860,23 +787,19 @@ def _element_branch_violation(obj_spec: dict, fpath: tuple, where: str,
         ]
         makers.append(_combinator_fold(kind, subs))
     # branch-root ``type``: discriminating inside combinators (same fix
-    # as _subrules) — the instance is the element (or its sub-struct)
+    # as _subrules) — the instance is the element (or its sub-struct),
+    # present whenever the branch is evaluated
     if "type" in obj_spec:
         tl = _check_type_names(obj_spec["type"], where, unsupported)
         if tl is not None:
-            root_sat = _type_sat(tl)
-            makers.append(
-                lambda x, sat=root_sat: ~sat(x if not fpath else field(x, fpath))
-            )
+            makers.append(lambda x, c=_type_check(tl):
+                          R.present_violation(R._epath(x, fpath), c))
     for kw in obj_spec:
-        if kw not in (
-            "properties", "required", "type", "additionalProperties",
-            "allOf", "anyOf", "oneOf", "not", *_ANNOTATIONS,
-        ):
+        if kw not in _ELEMENT_OBJECT_KEYS:
             unsupported.append(f"{where}.{kw}")
 
     for f in obj_spec.get("required", []):
-        makers.append(lambda x, fp=fpath + (f,): field(x, fp).isNull())
+        makers.append(lambda x, fp=fpath + (f,): R._epath(x, fp).isNull())
     for f, fs in obj_spec.get("properties", {}).items():
         fp = fpath + (f,)
         if not isinstance(fs, dict):
@@ -885,58 +808,11 @@ def _element_branch_violation(obj_spec: dict, fpath: tuple, where: str,
         if fs.get("type") == "object":
             inner = _element_branch_violation(fs, fp, f"{where}.{f}", unsupported)
             makers.append(lambda x, fp=fp, inner=inner:
-                          field(x, fp).isNotNull() & inner(x))
+                          R._epath(x, fp).isNotNull() & inner(x))
             continue
-        for kw, val in fs.items():
-            if kw == "enum":
-                makers.append(lambda x, fp=fp, v=list(val):
-                              field(x, fp).isNotNull()
-                              & ~F.array_contains(
-                                  F.array(*[F.lit(e) for e in v]), field(x, fp)))
-            elif kw == "const":
-                makers.append(lambda x, fp=fp, v=val:
-                              field(x, fp).isNotNull() & (field(x, fp) != F.lit(v)))
-            elif kw == "pattern":
-                makers.append(lambda x, fp=fp, v=val:
-                              field(x, fp).isNotNull() & ~field(x, fp).rlike(v))
-            elif kw == "minLength":
-                makers.append(lambda x, fp=fp, v=int(val):
-                              field(x, fp).isNotNull()
-                              & (F.length(field(x, fp)) < v))
-            elif kw in ("minimum", "maximum", "exclusiveMinimum",
-                        "exclusiveMaximum"):
-                pass  # together below
-            elif kw in ("minItems", "maxItems"):
-                pass  # together below
-            elif kw == "type":
-                # field-level type inside a branch: evaluated only when
-                # the field is present (matching every other field
-                # keyword here — present-null conflation documented)
-                tl = _check_type_names(val, f"{where}.{f}", unsupported)
-                if tl is not None:
-                    makers.append(
-                        lambda x, fp=fp, sat=_type_sat(tl):
-                        field(x, fp).isNotNull() & ~sat(field(x, fp))
-                    )
-            elif kw in _ANNOTATIONS:
-                pass
-            else:
-                unsupported.append(f"{where}.{f}.{kw}")
-        lo, lo_inc, hi, hi_inc = _bounds(fs)
-        if lo is not None:
-            makers.append(lambda x, fp=fp, v=lo, inc=lo_inc:
-                          field(x, fp).isNotNull()
-                          & ((field(x, fp) < v) if inc else (field(x, fp) <= v)))
-        if hi is not None:
-            makers.append(lambda x, fp=fp, v=hi, inc=hi_inc:
-                          field(x, fp).isNotNull()
-                          & ((field(x, fp) > v) if inc else (field(x, fp) >= v)))
-        if "minItems" in fs:
-            makers.append(lambda x, fp=fp, v=int(fs["minItems"]):
-                          field(x, fp).isNotNull() & (F.size(field(x, fp)) < v))
-        if "maxItems" in fs:
-            makers.append(lambda x, fp=fp, v=int(fs["maxItems"]):
-                          field(x, fp).isNotNull() & (F.size(field(x, fp)) > v))
+        # a field keyword is evaluated only when the field is present
+        for c in _keyword_checks(fs, f"{where}.{f}", unsupported, typed=True):
+            makers.append(lambda x, fp=fp, c=c: R.present_violation(R._epath(x, fp), c))
 
     def viol(x):
         out = F.lit(False)
@@ -1005,91 +881,20 @@ def _compile_items(
             rs.add(R.element_required(col, fpath + (f,), parent_fpath))
         for f, fs in obj_spec.get("properties", {}).items():
             fp = fpath + (f,)
-            dotted = f"{col}[].{'.'.join(fp)}"
+            dotted = R._edotted(col, fp)
             if not isinstance(fs, dict):
                 unsupported.append(dotted)
                 continue
             if fs.get("type") == "object":
-                if (
-                    "properties" in fs
-                    or "required" in fs
-                    or any(k in fs for k in ("allOf", "anyOf", "oneOf", "not"))
-                ):
+                if _object_items(fs):
                     walk(fs, fp, fp)
                 for kw in fs:
-                    if kw not in (
-                        "type", "properties", "required", "additionalProperties",
-                        "allOf", "anyOf", "oneOf", "not",
-                        *_ANNOTATIONS,
-                    ):
+                    if kw not in _ELEMENT_OBJECT_KEYS:
                         unsupported.append(f"{dotted}.{kw}")
                 continue
-            for kw, val in fs.items():
-                if kw == "enum":
-                    rs.add(R.element_in(col, fp, val))
-                elif kw == "pattern":
-                    rs.add(R.element_matches(col, fp, val))
-                elif kw == "format":
-                    if val == "uuid":
-                        rs.add(R.element_matches(col, fp, S.UUID_RE))
-                    else:
-                        unsupported.append(f"{dotted}.format:{val}")
-                elif kw == "const":
-                    rs.add(R.element_const(col, fp, val))
-                elif kw in (
-                    "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
-                    "minItems", "maxItems",
-                ):
-                    pass  # handled together below
-                elif kw in ("allOf", "anyOf", "oneOf", "not"):
-                    pass  # handled together below (field-level combinators)
-                elif kw == "contains":
-                    if isinstance(val, dict):
-                        sat, desc = _element_satisfies(
-                            val, f"{dotted}.contains", unsupported)
-                        rs.add(
-                            R.Rule(
-                                S.rule_id(S.BAD_SHAPE, dotted),
-                                dotted,
-                                f"{dotted} has element array(s) with no entry matching: {desc}",
-                                # exists(outer array, element whose FIELD array
-                                # is present but contains no satisfying entry)
-                                lambda fp=fp, sat=sat: _nn_items(
-                                    F.exists(
-                                        F.col(col),
-                                        lambda x: R._epath(x, fp).isNotNull()
-                                        & ~F.exists(
-                                            R._epath(x, fp),
-                                            # null entries per jsonschema:
-                                            # sat() fragments decide
-                                            lambda e: F.coalesce(
-                                                sat(e), F.lit(False)
-                                            ),
-                                        ),
-                                    )
-                                ),
-                            )
-                        )
-                    else:
-                        unsupported.append(f"{dotted}.contains:{val!r}")
-                elif kw == "type" or kw in _ANNOTATIONS:
-                    pass
-                else:
-                    unsupported.append(f"{dotted}.{kw}")
-            lo, lo_inc, hi, hi_inc = _bounds(fs)
-            if lo is not None or hi is not None:
-                rs.add(
-                    R.element_in_range(
-                        col, fp, lo=lo, hi=hi, lo_inclusive=lo_inc, hi_inclusive=hi_inc
-                    )
-                )
-            if "minItems" in fs or "maxItems" in fs:
-                rs.add(
-                    R.element_array_size(
-                        col, fp, min_items=fs.get("minItems"), max_items=fs.get("maxItems")
-                    )
-                )
-            if any(k in fs for k in ("allOf", "anyOf", "oneOf", "not")):
+            for c in _keyword_checks(fs, dotted, unsupported, own=_ELEMENT_COMBINATORS):
+                rs.add(R.element_rule(col, fp, c))
+            if any(k in fs for k in _ELEMENT_COMBINATORS):
                 add_field_combinators(fs, f, fp, dotted)
 
     def add_field_combinators(fs: dict, fname: str, fp: tuple, dotted: str) -> None:
@@ -1138,6 +943,8 @@ def _compile_items(
 # dict-valued keywords whose VALUES are name->schema maps (keys are data,
 # not schemas — a property literally named "$ref" must not be resolved)
 _SCHEMA_MAPS = ("properties", "patternProperties", "definitions")
+# keywords whose values are instance data, copied verbatim
+_DATA_KEYS = ("enum", "const", "default", "examples")
 
 
 def resolve_refs(schema: dict, max_depth: int = 64) -> dict:
@@ -1205,7 +1012,7 @@ def resolve_refs(schema: dict, max_depth: int = 64) -> dict:
                         )
                         for pk, pv in v.items()
                     }
-                elif is_schema and k in ("enum", "const", "default", "examples"):
+                elif is_schema and k in _DATA_KEYS:
                     out[k] = v  # data, not schema
                 else:
                     out[k] = walk(v, active, depth, is_schema)

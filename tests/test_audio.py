@@ -489,6 +489,43 @@ def test_audio_has_one_decode_site():
     assert not stray, "calls outside their one site: " + ", ".join(stray)
 
 
+def test_schema_compiler_has_one_keyword_table():
+    """No Spark needed: in schema_compiler.py only ``_keyword_checks``
+    compares a scalar keyword name (``kw == "enum"``, ``"minItems" in
+    spec``, ...). Every position — column, nested property, array-element
+    field, element-branch field, array entry — compiles its scalar
+    keywords through that one table, so no position can drift."""
+    import ast
+    import pathlib
+
+    from mds_provider_spark import schema_compiler
+
+    keywords = {"enum", "const", "pattern", "format", "minLength", "maxLength",
+                "multipleOf", "minItems", "maxItems", "uniqueItems", "contains"}
+    path = pathlib.Path(schema_compiler.__file__)
+    sites = []
+
+    def named(node):
+        elts = node.elts if isinstance(node, (ast.Tuple, ast.List, ast.Set)) else [node]
+        return {e.value for e in elts if isinstance(e, ast.Constant) and e.value in keywords}
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, fn or child.name)  # nested defs count as their outer function
+                continue
+            if isinstance(child, ast.Compare):
+                for kw in set().union(*map(named, [child.left, *child.comparators])):
+                    sites.append((kw, child.lineno, fn))
+            walk(child, fn)
+
+    walk(ast.parse(path.read_text(), str(path)), None)
+    assert {kw for kw, _, _ in sites} == keywords
+    stray = [f"{kw!r} at schema_compiler.py:{line} in {fn}" for kw, line, fn in sites
+             if fn != "_keyword_checks"]
+    assert not stray, "keyword dispatch outside the table: " + ", ".join(stray)
+
+
 def test_library_has_one_distinct_sketch():
     """No Spark needed: the library counts distinct values approximately
     only through ``stats.approx_distinct`` (DataSketches HLL); nothing in

@@ -317,6 +317,22 @@ def test_zero_vectors_score_null_never_fail(spark):
     assert not zero & {x for p in pairs for x in p}, pairs
 
 
+def test_inferred_width_is_the_modal_one(spark):
+    """Without ``dim`` the LSH operators infer the width from the data: a
+    2-element vector ahead of 40 8-dim ones must not make every 8-dim
+    vector "wrong-length" (NULL signs, no candidates, no pairs)."""
+    rng = np.random.default_rng(12)
+    base = rng.standard_normal((40, 8))
+    base[1] = base[0] + 0.001 * rng.standard_normal(8)  # one near-dup pair
+    rows = [(99, [1.0, 0.0])] + [(i, [float(x) for x in base[i]]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    assert SIM._vector_width(df, "embedding") == 8
+    pairs = [(r.id_a, r.id_b) for r in SIM.embedding_near_duplicates(df).collect()]
+    assert (0, 1) in pairs, pairs
+    got = SIM.lsh_topk(df, df.where("vec_id = 0"), k=3, n_planes=6, seed=7).collect()
+    assert 1 in {r.neighbor_id for r in got}, got
+
+
 def test_assignment_kernels_agree_on_distance_ties(spark):
     """Duplicate centroids create exact distance ties AT the nprobe cut;
     the kernel must select the lowest centroid ids (stable order), as

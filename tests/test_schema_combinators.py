@@ -611,8 +611,10 @@ def test_element_field_level_combinators(spark):
 
 def test_randomized_array_contains_differential_vs_jsonschema(spark):
     """100 seeded-random schemas over an ARRAY property mixing contains /
-    minItems / uniqueItems / items.enum with property-level combinators:
-    per-record validity must agree with jsonschema exactly."""
+    minItems / uniqueItems / items.enum with property-level combinators,
+    then 40 over an array<struct> whose element fields carry minLength /
+    maxLength / format / multipleOf / uniqueItems: per-record validity
+    must agree with jsonschema exactly."""
     import random
 
     import pyspark.sql.functions as F
@@ -667,6 +669,55 @@ def test_randomized_array_contains_differential_vs_jsonschema(spark):
         v = jsonschema.Draft6Validator(schema)
         for i, rec in enumerate(records):
             if (not v.is_valid(rec)) != (f"r{i}" in bad):
+                mismatches.append((si, schema, rec, f"r{i}" in bad))
+
+    # the same keyword table at array-element fields
+    rng2 = random.Random(778)
+    strings = ["", "a", "abcd", "0000000a-0000-4000-8000-00000000000a", "not-a-uuid"]
+
+    def rand_field_schema():
+        s_spec = rng2.choice([
+            {"minLength": rng2.randint(1, 3)},
+            {"maxLength": rng2.randint(1, 3)},
+            {"minLength": 1, "maxLength": rng2.randint(2, 4)},
+            {"format": "uuid"},
+        ])
+        props = {"s": {"type": "string", **s_spec}}
+        if rng2.random() < 0.7:
+            props["n"] = {"type": "integer", "multipleOf": rng2.randint(2, 3)}
+        if rng2.random() < 0.7:
+            props["t"] = {"type": "array", "uniqueItems": True}
+        return {"type": "object", "properties": {"fs": {
+            "type": "array", "items": {"type": "object", "properties": props}}}}
+
+    def rand_element():
+        e = {"s": rng2.choice(strings), "n": rng2.randint(0, 7),
+             "t": [rng2.randint(0, 2) for _ in range(rng2.randint(0, 3))]}
+        return {k: v for k, v in e.items() if rng2.random() < 0.8}
+
+    for si in range(40):
+        schema = rand_field_schema()
+        records = [
+            {} if rng2.random() < 0.15
+            else {"fs": [rand_element() for _ in range(rng2.randint(0, 3))]}
+            for _ in range(30)
+        ]
+        rows = [
+            (f"r{i}", None if "fs" not in r else
+             [(e.get("s"), e.get("n"), e.get("t")) for e in r["fs"]])
+            for i, r in enumerate(records)
+        ]
+        rs, unsup = from_json_schema(schema, key_col="clip_id")
+        assert unsup == [], (schema, unsup)
+        df = spark.createDataFrame(
+            rows, "clip_id string, fs array<struct<s: string, n: bigint, t: array<bigint>>>"
+        ).withColumn("part_id", F.lit(0))
+        bad = {
+            r.clip_id
+            for r in rs.violations(df).select("clip_id").distinct().collect()
+        }
+        for i, rec in enumerate(records):
+            if (not _ref_valid(schema, rec)) != (f"r{i}" in bad):
                 mismatches.append((si, schema, rec, f"r{i}" in bad))
     assert not mismatches, mismatches[:3]
 

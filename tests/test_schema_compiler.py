@@ -268,3 +268,106 @@ def test_required_only_object_subschema_compiles(spark):
     v = jsonschema.Draft6Validator(schema)
     assert [list(e.absolute_path) for e in v.iter_errors({"loc": {}})] == [["loc"]]
     assert not list(v.iter_errors({}))
+
+
+# ------------------------------------------- one keyword table, every position
+
+# the same subschema at each position the compiler addresses a value
+_POSITIONS = {
+    "column": lambda s: {"properties": {"v": s}},
+    "nested_property": lambda s: {
+        "properties": {"o": {"type": "object", "properties": {"v": s}}}},
+    "property_branch": lambda s: {"properties": {"v": {"anyOf": [s, {"const": "q"}]}}},
+    "items_field": lambda s: {"properties": {"a": {
+        "type": "array", "items": {"type": "object", "properties": {"v": s}}}}},
+    "items_branch_field": lambda s: {"properties": {"a": {
+        "type": "array", "items": {"type": "object", "oneOf": [
+            {"properties": {"v": s}},
+            {"required": ["v"], "properties": {"v": {"const": "q"}}}]}}}},
+    "contains_entry": lambda s: {"properties": {"a": {"type": "array", "contains": s}}},
+    "tuple_entry": lambda s: {"properties": {"a": {"type": "array", "items": [s]}}},
+    "additionalItems_entry": lambda s: {"properties": {"a": {
+        "type": "array", "items": [{}], "additionalItems": s}}},
+}
+
+_TABLE_KEYWORDS = {
+    "enum": {"enum": ["a", "b"]},
+    "const": {"const": "a"},
+    "pattern": {"pattern": "^a"},
+    "format": {"format": "uuid"},
+    "minLength": {"minLength": 1},
+    "maxLength": {"maxLength": 3},
+    "bounds": {"minimum": 0, "exclusiveMaximum": 9},
+    "multipleOf": {"multipleOf": 2},
+    "minItems": {"minItems": 1},
+    "maxItems": {"maxItems": 3},
+    "uniqueItems": {"uniqueItems": True},
+    "items.enum": {"items": {"enum": ["a"]}},
+    "contains": {"contains": {"const": "a"}},
+    "type": {"type": ["string", "null"]},
+}
+
+
+_UNSUPPORTED_KEYWORDS = {
+    "format:date-time": {"format": "date-time"},
+    "multipleOf:0.5": {"multipleOf": 0.5},
+    "contains:true": {"contains": True},
+}
+
+
+@pytest.mark.parametrize("keyword", [*_TABLE_KEYWORDS, *_UNSUPPORTED_KEYWORDS])
+def test_keyword_compiles_at_every_position_or_none(keyword):
+    """No Spark needed: a scalar keyword compiles at every position, or
+    is reported unsupported at every position — never a ragged mix."""
+    spec = {**_TABLE_KEYWORDS, **_UNSUPPORTED_KEYWORDS}[keyword]
+    reported, compiled = {}, {}
+    for position, at in _POSITIONS.items():
+        rs, unsupported = from_json_schema(
+            {"type": "object", **at(spec)}, key_col="k", strict=False)
+        reported[position], compiled[position] = unsupported, len(rs.rules)
+    if keyword in _UNSUPPORTED_KEYWORDS:
+        label = "." + keyword.split(":")[0] + ":"
+        assert all(len(u) == 1 and label in u[0] for u in reported.values()), reported
+    else:
+        assert all(u == [] for u in reported.values()), reported
+        # plain ``type`` outside branches and entries is structural
+        assert all(compiled.values()) or keyword == "type", compiled
+
+
+# value "z" violates {"enum": ["a", null]}; NULL/absent and "a" do not
+_NULLABLE_ENUM = {"enum": ["a", None]}
+_ENUM_CASES = {
+    "column": ("v string", [("z", "z"), ("a", "a"), ("absent", None)],
+               lambda v: {} if v is None else {"v": v}),
+    "nested_property": ("o struct<v: string>",
+                        [("z", ("z",)), ("a", ("a",)), ("absent", (None,))],
+                        lambda o: {"o": {} if o[0] is None else {"v": o[0]}}),
+    "items.enum": ("a array<string>",
+                   [("z", ["a", "z"]), ("a", ["a", None]), ("absent", [])],
+                   lambda a: {"a": a}),
+    "items_field": ("a array<struct<v: string>>",
+                    [("z", [("a",), ("z",)]), ("a", [("a",)]), ("absent", [(None,)])],
+                    lambda a: {"a": [{} if e[0] is None else {"v": e[0]} for e in a]}),
+    "items_branch_field": ("a array<struct<v: string>>",
+                           [("z", [("z",)]), ("a", [("a",)]), ("absent", [(None,)])],
+                           lambda a: {"a": [{} if e[0] is None else {"v": e[0]}
+                                            for e in a]}),
+}
+
+
+@pytest.mark.parametrize("position", sorted(_ENUM_CASES))
+def test_nullable_enum_fires_vs_jsonschema(spark, position):
+    """``x IN ('a', NULL)`` is NULL for a non-member; the enum check
+    must still fire on "z" wherever it is compiled, as jsonschema does."""
+    ddl, rows, record = _ENUM_CASES[position]
+    if position == "items.enum":
+        schema = {"type": "object", "properties": {
+            "a": {"type": "array", "items": _NULLABLE_ENUM}}}
+    else:
+        schema = {"type": "object", **_POSITIONS[position](_NULLABLE_ENUM)}
+    rs, unsupported = from_json_schema(schema, key_col="k")
+    df = spark.createDataFrame(rows, f"k string, {ddl}").withColumn("part_id", F.lit(0))
+    got = {r.clip_id for r in rs.violations(df).collect()}
+    validator = jsonschema.Draft6Validator(schema)
+    expect = {k for k, v in rows if not validator.is_valid(record(v))}
+    assert got == expect == {"z"}
